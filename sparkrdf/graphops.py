@@ -11,6 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+from sparkrdf.localdf import collect_if_small, local_rows_df, nulls_first
 
 
 def comention_edges(
@@ -101,14 +104,9 @@ def triangles(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
 def _ranks_df(spark, pr: dict, id_type, col: str = "pr") -> DataFrame:
     """(n, <col>) DataFrame from a driver score map — UNROUNDED; callers
     apply F.round so the rounding semantics (HALF_UP) stay Spark's own."""
-    from pyspark.sql import types as _T
-
-    schema = _T.StructType(
-        [_T.StructField("n", id_type), _T.StructField(col, _T.DoubleType())]
+    return local_rows_df(
+        spark, sorted(pr.items(), key=nulls_first), [("n", id_type), (col, DoubleType())]
     )
-    from sparkrdf.localdf import local_rows_df
-
-    return local_rows_df(spark, sorted(pr.items()), schema)
 
 
 def pagerank(
@@ -117,7 +115,6 @@ def pagerank(
     n_iter: int = 10,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over an undirected distinct-pair edge list (each edge walks
     both ways). Returns ``(n, pr)`` with pr rounded to 6 d.p. so float
@@ -134,28 +131,32 @@ def pagerank(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
     de = e.unionAll(e.select(F.col("t").alias("s"), F.col("s").alias("t")))
     de = de.persist()
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # a power iteration over a collected edge list runs the IDENTICAL
-    # per-edge arithmetic (pr/deg contributions, same damping algebra);
-    # double-summation order differs, which the 6-d.p. output rounding
-    # absorbs by design — it already absorbs Spark's own nondeterministic
-    # partial-aggregation order run to run. Rounding itself stays in Spark
-    # (F.round below), so HALF_UP semantics are byte-identical. Larger
-    # graphs take the distributed loop automatically.
-    if de.count() <= small_graph_threshold:
-        pairs = [(r["s"], r["t"]) for r in de.collect()]
+    # The driver power iteration runs the IDENTICAL per-edge arithmetic
+    # (pr/deg contributions, same damping algebra); double-summation order
+    # differs, which the 6-d.p. output rounding absorbs by design — it
+    # already absorbs Spark's own nondeterministic partial-aggregation
+    # order run to run. Rounding itself stays in Spark (F.round below), so
+    # HALF_UP semantics are byte-identical.
+    rows = collect_if_small(de)
+    if rows is not None:
         de.unpersist()
         dg: dict = {}
-        for s, _t2 in pairs:
-            dg[s] = dg.get(s, 0) + 1
+        for r in rows:
+            dg[r["s"]] = dg.get(r["s"], 0) + 1
         n_v = len(dg)
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in dg}
-        for _ in range(n_iter):
+        # a NULL source never matches the distributed rank join
+        pairs = [(r["s"], r["t"]) for r in rows if r["s"] is not None]
+        for i in range(n_iter):
             acc: dict = {}
             for s, t2 in pairs:
                 acc[t2] = acc.get(t2, 0.0) + pr[s] / dg[s]
             pr = {t2: base + damping * c for t2, c in acc.items()}
+            if i == 0:
+                # a vertex whose only neighbour is NULL has no rank left
+                # after round one; from then on the rank table is stable
+                pairs = [(s, t2) for s, t2 in pairs if s in pr]
         out_df = _ranks_df(edges.sparkSession, pr, de.schema["s"].dataType)
         return out_df.select("n", F.round("pr", 6).alias("pr"))
     deg = de.groupBy("s").agg(F.count("*").cast("double").alias("dg"))
@@ -255,7 +256,6 @@ def kcore(
     rounds: int = 8,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """k-core membership by iterative peeling: repeatedly drop vertices of
     degree < k (degrees recomputed over the surviving subgraph) for a FIXED
@@ -277,33 +277,28 @@ def kcore(
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     cur = e.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: the fixed peeling rounds are pure
-    # integer degree counting over the edge MULTISET (duplicates and
-    # self-loops count exactly as in the aggregate) — bit-identical to the
-    # distributed loop; larger graphs take the distributed path.
-    if cur.count() <= small_graph_threshold:
-        pairs = [(r["u"], r["v"]) for r in cur.collect()]
+    # The driver peeling rounds are pure integer degree counting over the
+    # edge MULTISET (duplicates and self-loops count exactly as in the
+    # aggregate) — bit-identical to the distributed loop.
+    rows = collect_if_small(cur)
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         for _ in range(rounds):
             dg: dict = {}
             for u, v in pairs:
                 dg[u] = dg.get(u, 0) + 1
                 dg[v] = dg.get(v, 0) + 1
-            keep = {n for n, d in dg.items() if d >= k}
+            # NULL never survives the distributed semi-join peel
+            keep = {n for n, d in dg.items() if d >= k and n is not None}
             pairs = [(u, v) for u, v in pairs if u in keep and v in keep]
         dg = {}
         for u, v in pairs:
             dg[u] = dg.get(u, 0) + 1
             dg[v] = dg.get(v, 0) + 1
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            [
-                _T.StructField("n", cur.schema["u"].dataType),
-                _T.StructField("deg", _T.LongType()),
-            ]
-        )
-        return edges.sparkSession.createDataFrame(
-            sorted((n, d) for n, d in dg.items() if d >= k), schema
+        return local_rows_df(
+            edges.sparkSession,
+            sorted(((n, d) for n, d in dg.items() if d >= k), key=nulls_first),
+            [("n", cur.schema["u"].dataType), ("deg", LongType())],
         )
     for _ in range(rounds):
         deg = (
@@ -327,6 +322,30 @@ def kcore(
     )
     return deg.filter(F.col("deg") >= k)
 
+
+def _weighted_out_edges(rows) -> tuple[dict, set, list]:
+    """Driver side of the weighted PageRank loops: out-weight per source,
+    the node set, and ``(s, t, w/outw(s))`` per edge. NULL endpoints follow
+    the distributed joins: a NULL node is a node, but it sends nothing (its
+    out-edges never join) and receives nothing (the rank table's left join
+    never matches it), so it has no out-weight and its edges carry no
+    mass."""
+    ow: dict = {}
+    nodes: set = set()
+    for r in rows:
+        s, t2 = r["s"], r["t"]
+        nodes.add(s)
+        nodes.add(t2)
+        if s is not None:
+            ow[s] = ow.get(s, 0.0) + r["w"]
+    frac = [
+        (r["s"], r["t"], r["w"] / ow[r["s"]])
+        for r in rows
+        if r["s"] is not None and r["t"] is not None
+    ]
+    return ow, nodes, frac
+
+
 def pagerank_directed(
     edges: DataFrame,
     damping: float = 0.85,
@@ -334,7 +353,6 @@ def pagerank_directed(
     src: str = "src_host",
     dst: str = "dst_host",
     weight: str = "n_links",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over a DIRECTED weighted edge list — the web-graph variant:
     link direction matters and sink nodes (linked-to hosts that link to
@@ -358,18 +376,12 @@ def pagerank_directed(
         F.col(weight).cast("double").alias("w"),
     )
     e = e.persist()
-    # driver fast path — see pagerank() for the exactness argument (same
+    # driver loop — see pagerank() for the exactness argument (same
     # per-edge arithmetic, 6-d.p. rounding stays Spark-side)
-    if e.count() <= small_graph_threshold:
-        rows = [(r["s"], r["t"], r["w"]) for r in e.collect()]
+    rows = collect_if_small(e)
+    if rows is not None:
         e.unpersist()
-        ow: dict = {}
-        nodes: set = set()
-        for s, t2, w in rows:
-            ow[s] = ow.get(s, 0.0) + w
-            nodes.add(s)
-            nodes.add(t2)
-        frac = [(s, t2, w / ow[s]) for s, t2, w in rows]
+        ow, nodes, frac = _weighted_out_edges(rows)
         n_v = len(nodes)
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in nodes}
@@ -810,7 +822,6 @@ def _count_labels(nbrs: list, lab: dict) -> dict:
 
 def label_propagation(
     edges: DataFrame, iters: int = 4, src: str = "u", dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan,
     Albert & Kumara 2007), made deterministic: every node starts labeled
@@ -835,13 +846,13 @@ def label_propagation(
     und0 = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).dropDuplicates().localCheckpoint(eager=True)
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # synchronous LPA with the min-label tie-break is pure integer counting
+    # Synchronous LPA with the min-label tie-break is pure integer counting
     # over strings — the driver loop is bit-identical to the distributed
-    # rounds; larger graphs take the distributed loop automatically.
-    if und0.count() <= small_graph_threshold:
+    # rounds.
+    rows = collect_if_small(und0)
+    if rows is not None:
         adj: dict = {}
-        for r in und0.collect():
+        for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         lab = {n: n for n in adj}
         for _ in range(iters):
@@ -852,13 +863,10 @@ def label_propagation(
                 )[0]
                 for u, nbrs in adj.items()
             }
-        from pyspark.sql import types as _T
-
         idt = und0.schema["u"].dataType
-        schema = _T.StructType(
-            [_T.StructField("n", idt), _T.StructField("label", idt)]
+        return local_rows_df(
+            edges.sparkSession, sorted(lab.items()), [("n", idt), ("label", idt)]
         )
-        return edges.sparkSession.createDataFrame(sorted(lab.items()), schema)
     und = und0.repartition("v").localCheckpoint(eager=True)
     und0.unpersist()
     labels = und.select(F.col("u").alias("n")).dropDuplicates().select(
@@ -1272,7 +1280,7 @@ def reciprocity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
 
 def ktruss(
     edges: DataFrame, k: int, src: str = "u", dst: str = "v",
-    max_rounds: int = 30, small_graph_threshold: int = 2_000_000,
+    max_rounds: int = 30,
 ) -> DataFrame:
     """k-truss decomposition (Cohen 2008): the maximal subgraph in which
     every edge participates in at least ``k - 2`` triangles — the standard
@@ -1303,12 +1311,12 @@ def ktruss(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    n = e.count()
-    # Threshold-gated driver fast path: per-edge triangle support is
-    # |N(u) ∩ N(v)| over the deduped simple graph — pure set arithmetic,
-    # bit-identical to the distributed enumerate-and-count peel.
-    if n <= small_graph_threshold:
-        pairs = [(r["u"], r["v"]) for r in e.collect()]
+    # Per-edge triangle support is |N(u) ∩ N(v)| over the deduped simple
+    # graph — pure set arithmetic, bit-identical to the distributed
+    # enumerate-and-count peel.
+    rows = collect_if_small(e)
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         for _ in range(max_rounds):
             nbr: dict = {}
             for u, v in pairs:
@@ -1318,18 +1326,16 @@ def ktruss(
                 (u, v) for u, v in pairs if len(nbr[u] & nbr[v]) >= k - 2
             ]
             if len(kept) == len(pairs):
-                from pyspark.sql import types as _T
-
                 idt = e.schema["u"].dataType
-                schema = _T.StructType(
-                    [_T.StructField("u", idt), _T.StructField("v", idt)]
+                return local_rows_df(
+                    edges.sparkSession, sorted(kept), [("u", idt), ("v", idt)]
                 )
-                return edges.sparkSession.createDataFrame(sorted(kept), schema)
             pairs = kept
         raise RuntimeError(
             f"ktruss still peeling after {max_rounds} rounds (graph adversarially "
             "deep); raise max_rounds"
         )
+    n = e.count()
     for _ in range(max_rounds):
         tri = triangles(e)
         sup = (
@@ -1412,7 +1418,6 @@ def assortativity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame
 
 def coreness(
     edges: DataFrame, src: str = "u", dst: str = "v", max_rounds: int = 50,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Full k-core decomposition: every node's core NUMBER (the largest k
     such that the node survives k-core peeling) — the standard cohesion
@@ -1446,12 +1451,13 @@ def coreness(
     both = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: the h-index iteration is pure
-    # integer arithmetic (degrees, sorted neighbor values, min/max) —
-    # bit-identical to the distributed rounds, same convergence raise.
-    if both.count() <= small_graph_threshold:
+    # The h-index iteration is pure integer arithmetic (degrees, sorted
+    # neighbor values, min/max) — the driver loop is bit-identical to the
+    # distributed rounds, same convergence raise.
+    rows = collect_if_small(both)
+    if rows is not None:
         adj: dict = {}
-        for r in both.collect():
+        for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         cv = {n: len(nbrs) for n, nbrs in adj.items()}
         for _ in range(max_rounds):
@@ -1468,16 +1474,10 @@ def coreness(
             changed = new != cv
             cv = new
             if not changed:
-                from pyspark.sql import types as _T
-
-                schema = _T.StructType(
-                    [
-                        _T.StructField("n", both.schema["u"].dataType),
-                        _T.StructField("coreness", _T.IntegerType()),
-                    ]
-                )
-                return edges.sparkSession.createDataFrame(
-                    sorted(cv.items()), schema
+                return local_rows_df(
+                    edges.sparkSession,
+                    sorted(cv.items()),
+                    [("n", both.schema["u"].dataType), ("coreness", IntegerType())],
                 )
         raise RuntimeError(
             f"coreness h-index iteration not converged after {max_rounds} rounds"
@@ -1582,7 +1582,6 @@ def scc(
     dst: str = "v",
     max_rounds: int = 40,
     max_prop_iter: int = 40,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Strongly connected components of a directed graph → ``(n, scc)``
     with ``scc`` = MIN member id — the distributed Forward-Backward-Trim
@@ -1628,23 +1627,15 @@ def scc(
         .dropDuplicates()
     )
     live_e = e0.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # the SCC labelling (n -> MIN member id) is algorithm-independent, so a
-    # one-pass iterative Tarjan over a collected edge list is byte-identical
-    # to the distributed loop at a fraction of the job count. The edge count
-    # is already materialized; over-threshold graphs take the distributed
-    # path automatically, so driver memory stays bounded by construction.
-    # small_graph_threshold=0 forces the distributed loop.
-    if live_e.count() <= small_graph_threshold:
-        comp = _scc_local((r["s"], r["t"]) for r in live_e.collect())
-        out_type = live_e.schema["s"].dataType
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            [_T.StructField("n", out_type), _T.StructField("scc", out_type)]
-        )
-        return edges.sparkSession.createDataFrame(
-            sorted(comp.items()), schema
+    # The SCC labelling (n -> MIN member id) is algorithm-independent, so a
+    # one-pass iterative Tarjan over the collected edge list is
+    # byte-identical to the distributed loop at a fraction of the job count.
+    rows = collect_if_small(live_e)
+    if rows is not None:
+        comp = _scc_local((r["s"], r["t"]) for r in rows)
+        idt = live_e.schema["s"].dataType
+        return local_rows_df(
+            edges.sparkSession, sorted(comp.items()), [("n", idt), ("scc", idt)]
         )
     live_n = (
         e0.select(F.col("s").alias("n"))
@@ -1798,7 +1789,6 @@ def neighborhood_function(
     max_t: int = 8,
     exact: bool = False,
     lg_k: int = 12,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Neighborhood function of a directed graph — ``(t, pairs)`` where
     ``pairs`` = number of ordered (a, b) pairs with dist(a → b) ≤ t, for
@@ -1832,13 +1822,14 @@ def neighborhood_function(
     )
     spark = edges.sparkSession
     if exact:
-        # Threshold-gated driver fast path: pair counts per distance are
-        # pure-integer BFS — bit-identical to the frontier join loop,
-        # including which t rows appear (BFS exhaustion = empty round).
-        if e.count() <= small_graph_threshold:
+        # Pair counts per distance are pure-integer BFS — the driver loop is
+        # bit-identical to the frontier join loop, including which t rows
+        # appear (BFS exhaustion = empty round).
+        rows = collect_if_small(e)
+        if rows is not None:
             adj: dict = {}
             node_set: set = set()
-            for r in e.collect():
+            for r in rows:
                 adj.setdefault(r["s"], []).append(r["t"])
                 node_set.add(r["s"])
                 node_set.add(r["t"])
@@ -1846,11 +1837,11 @@ def neighborhood_function(
             for a in node_set:
                 for _b, d in _bfs_dists(adj, a, max_t).items():
                     per_d[d] = per_d.get(d, 0) + 1
-            cum, rows = 0, []
+            cum, out = 0, []
             for t in sorted(per_d):
                 cum += per_d[t]
-                rows.append((t, cum))
-            return spark.createDataFrame(rows, "t int, pairs long")
+                out.append((t, cum))
+            return spark.createDataFrame(out, "t int, pairs long")
         dist = nodes.select(
             F.col("n").alias("a"), F.col("n").alias("b"), F.lit(0).alias("d")
         ).localCheckpoint(eager=True)
@@ -1913,7 +1904,6 @@ def harmonic_centrality(
     max_t: int = 8,
     exact: bool = False,
     lg_k: int = 12,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Harmonic centrality ``H(v) = Σ_{u≠v, d(u→v)<∞} 1/d(u → v)`` over
     incoming distances, depth-bounded at ``max_t`` — Boldi-Vigna's
@@ -1937,15 +1927,15 @@ def harmonic_centrality(
             .dropDuplicates()
             .localCheckpoint(eager=True)
         )
-        # Threshold-gated driver fast path: distances are exact integers;
-        # the Σ 1/d accumulation order differs from the distributed
-        # aggregation's — which the 6-d.p. rounding absorbs by design (it
-        # already absorbs Spark's own nondeterministic partial-agg order).
-        # Rounding stays Spark-side.
-        if e.count() <= small_graph_threshold:
+        # Distances are exact integers; the driver's Σ 1/d accumulation
+        # order differs from the distributed aggregation's — which the
+        # 6-d.p. rounding absorbs by design (it already absorbs Spark's own
+        # nondeterministic partial-agg order). Rounding stays Spark-side.
+        rows = collect_if_small(e)
+        if rows is not None:
             adj: dict = {}
             node_set: set = set()
-            for r in e.collect():
+            for r in rows:
                 adj.setdefault(r["u"], []).append(r["v"])
                 node_set.add(r["u"])
                 node_set.add(r["v"])
@@ -2034,7 +2024,6 @@ def personalized_pagerank(
     src: str = "src_host",
     dst: str = "dst_host",
     weight: str | None = "n_links",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Personalized PageRank: random walks with restart into a SEED set
     instead of the uniform distribution — relevance of every node to a
@@ -2056,26 +2045,21 @@ def personalized_pagerank(
     cols.append((F.col(weight) if weight else F.lit(1)).cast("double").alias("w"))
     e = edges.select(*cols)
     e = e.persist()
-    # driver fast path — see pagerank() for the exactness argument (same
+    # driver loop — see pagerank() for the exactness argument (same
     # per-edge arithmetic, 6-d.p. rounding stays Spark-side)
-    if e.count() <= small_graph_threshold:
-        rows = [(r["s"], r["t"], r["w"]) for r in e.collect()]
+    rows = collect_if_small(e)
+    if rows is not None:
         e.unpersist()
-        ow: dict = {}
-        nodes: set = set()
-        for s, t2, w in rows:
-            ow[s] = ow.get(s, 0.0) + w
-            nodes.add(s)
-            nodes.add(t2)
+        ow, nodes, frac = _weighted_out_edges(rows)
         sd_set = {
             r[0]
             for r in seeds.select(seeds.columns[0]).dropDuplicates().collect()
         } & nodes
+        sd_set.discard(None)  # the seed semi-join never matches NULL
         n_s = len(sd_set)
         if n_s == 0:
             raise ValueError("personalized_pagerank: no seed is a graph node")
         tl = {n: (1.0 / n_s if n in sd_set else 0.0) for n in nodes}
-        frac = [(s, t2, w / ow[s]) for s, t2, w in rows]
         pr = dict(tl)
         for _ in range(n_iter):
             dm = sum(pr[n] for n in nodes if n not in ow)
@@ -2165,7 +2149,6 @@ def node2vec_walks(
     seed: int = 7,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Deterministic node2vec walks (Grover-Leskovec KDD 2016): the
     second-order biased companion to :func:`random_walks`. At ``cur``
@@ -2202,17 +2185,24 @@ def node2vec_walks(
 
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).dropDuplicates()
     e = e.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: every hop is integer md5 arithmetic
-    # over the t-sorted neighbor index — bit-identical to the distributed
-    # cumulative-weight draw (the walk is deterministic by construction).
-    if e.count() <= small_graph_threshold:
+    # Every driver hop is integer md5 arithmetic over the t-sorted neighbor
+    # index — bit-identical to the distributed cumulative-weight draw (the
+    # walk is deterministic by construction).
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         edge_set: set = set()
-        for r0 in e.collect():
-            adj.setdefault(r0["s"], []).append(r0["t"])
-            edge_set.add((r0["s"], r0["t"]))
+        for r0 in rows:
+            s0, t0 = r0["s"], r0["t"]
+            # NULL never matches the neighbor-index or prev-edge joins: it
+            # starts no walk and a walk that reaches it stops there
+            if s0 is None:
+                continue
+            adj.setdefault(s0, []).append(t0)
+            if t0 is not None:
+                edge_set.add((s0, t0))
         for s0 in adj:
-            adj[s0].sort()
+            adj[s0].sort(key=lambda x: (x is not None, x))  # NULLS FIRST
         out_rows = []
         cur = []
         for start in adj:
@@ -2253,18 +2243,13 @@ def node2vec_walks(
                         nxt_cur.append((start, wn, node, cx))
                         break
             cur = nxt_cur
-        from pyspark.sql import types as _T
-
         idt = e.schema["s"].dataType
-        schema = _T.StructType(
-            [
-                _T.StructField("start", idt),
-                _T.StructField("walk_no", _T.IntegerType()),
-                _T.StructField("step", _T.IntegerType()),
-                _T.StructField("node", idt),
-            ]
+        return local_rows_df(
+            edges.sparkSession,
+            sorted(out_rows, key=nulls_first),
+            [("start", idt), ("walk_no", IntegerType()),
+             ("step", IntegerType()), ("node", idt)],
         )
-        return edges.sparkSession.createDataFrame(sorted(out_rows), schema)
     # neighbor index (window-free, same construction as random_walks)
     ranked = global_rank(e, ["s", "t"])
     idx = (
@@ -2354,7 +2339,6 @@ def betweenness(
     max_t: int = 4,
     source_mod: int = 1,
     seed: int = 7,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Betweenness centrality by level-synchronous Brandes (Brandes 2001),
     depth-bounded at ``max_t`` and over a DETERMINISTIC source sample —
@@ -2383,14 +2367,15 @@ def betweenness(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # Threshold-gated driver fast path: level-synchronous Brandes with the
-    # identical source sample (same md5 arithmetic), exact integer-valued σ,
-    # and the same depth bound; the δ accumulation order differs, which the
-    # 6-d.p. output rounding absorbs (rounding stays Spark-side).
-    if e.count() <= small_graph_threshold:
+    # The driver loop is level-synchronous Brandes with the identical source
+    # sample (same md5 arithmetic), exact integer-valued σ, and the same
+    # depth bound; the δ accumulation order differs, which the 6-d.p.
+    # output rounding absorbs (rounding stays Spark-side).
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         node_set: set = set()
-        for r0 in e.collect():
+        for r0 in rows:
             adj.setdefault(r0["es"], []).append(r0["et"])
             node_set.add(r0["es"])
             node_set.add(r0["et"])
@@ -2435,13 +2420,7 @@ def betweenness(
                         if b != a:
                             out[b] = out.get(b, 0.0) + dv
                 delta = new_delta
-        from pyspark.sql import types as _T
-
-        idt = e.schema["es"].dataType
-        schema = _T.StructType(
-            [_T.StructField("n", idt), _T.StructField("bt", _T.DoubleType())]
-        )
-        out_df = edges.sparkSession.createDataFrame(sorted(out.items()), schema)
+        out_df = _ranks_df(edges.sparkSession, out, e.schema["es"].dataType, col="bt")
         return out_df.select("n", F.round("bt", 6).alias("betweenness"))
     nodes = (
         e.select(F.col("es").alias("n"))
@@ -2580,7 +2559,6 @@ def closeness_centrality(
     src: str = "u",
     dst: str = "v",
     max_t: int = 8,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Bounded closeness centrality over OUTGOING distances —
     Wasserman-Faust normalized: ``C(v) = (r−1)/(n−1) · (r−1)/Σd`` with
@@ -2600,14 +2578,15 @@ def closeness_centrality(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # Threshold-gated driver fast path: r and Σd are exact integers, and
-    # the Wasserman-Faust formula is two divisions and a product of them —
-    # fully deterministic floats (no summation-order sensitivity at all);
-    # rounding stays Spark-side.
-    if e.count() <= small_graph_threshold:
+    # r and Σd are exact integers, and the Wasserman-Faust formula is two
+    # divisions and a product of them — the driver loop's floats are fully
+    # deterministic (no summation-order sensitivity at all); rounding stays
+    # Spark-side.
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         node_set: set = set()
-        for r0 in e.collect():
+        for r0 in rows:
             adj.setdefault(r0["u"], []).append(r0["v"])
             node_set.add(r0["u"])
             node_set.add(r0["v"])

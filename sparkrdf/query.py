@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkrdf import localdf
+
 
 def _is_var(term: str) -> bool:
     return term.startswith("?")
@@ -205,10 +207,11 @@ def khop(
 
 def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
     """Exact transitive closure of a small pair list on the driver (per-source
-    DFS over the adjacency map) — the same threshold-gated fast-path pattern
-    as ``sparkrdf.dedupe.connected_components``. Returns None when the closure
-    would exceed ``cap`` rows, signalling the caller to fall back to the
-    distributed doubling loop (driver memory stays bounded by construction)."""
+    DFS over the adjacency map). Returns None when the closure would exceed
+    ``cap`` rows, signalling the caller to fall back to the distributed
+    doubling loop (driver memory stays bounded by construction). A path
+    never passes THROUGH a NULL node — the doubling join never matches NULL
+    — though NULL can start or end one."""
     adj: dict = {}
     for s, o in pairs:
         adj.setdefault(s, set()).add(o)
@@ -221,7 +224,8 @@ def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
             if x in seen:
                 continue
             seen.add(x)
-            stack.extend(adj.get(x, ()))
+            if x is not None:
+                stack.extend(adj.get(x, ()))
         out.extend((src0, o) for o in seen)
         if len(out) > cap:
             return None
@@ -230,7 +234,6 @@ def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
 
 def path_closure(
     edges: DataFrame, src: str = "s", dst: str = "o", max_doubling: int = 6,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Transitive closure of a binary relation — the SPARQL ``p+`` property
     path / AQL unbounded traversal, as a set: every ``(s, o)`` with a
@@ -251,27 +254,18 @@ def path_closure(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    n = r.count()
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # ontology/taxonomy-sized relations — the dominant caller profile, e.g.
+    # Ontology/taxonomy-sized relations — the dominant caller profile, e.g.
     # rdfs_materialize's subclass/subproperty hierarchies — close in one
-    # driver pass instead of O(log depth) join+dedup+count Spark jobs. The
-    # result-size cap bounds driver memory; exceeding either threshold falls
-    # through to the distributed doubling loop, so 100 TB inputs never land
-    # on the driver. SPARKRDF_LOCAL_CLOSURE_MAX=0 disables the fast path.
-    if local_threshold is None:
-        import os
-
-        local_threshold = int(os.environ.get("SPARKRDF_LOCAL_CLOSURE_MAX", "20000"))
-    if n <= local_threshold:
+    # driver pass instead of O(log depth) join+dedup+count Spark jobs; a
+    # closure past the driver output cap takes the doubling loop.
+    rows = localdf.collect_if_small(r)
+    if rows is not None:
         closed = _closure_local(
-            [(row["s"], row["o"]) for row in r.collect()],
-            cap=max(50 * local_threshold, 1_000_000),
+            [(row["s"], row["o"]) for row in rows], cap=localdf.SMALL_MAX
         )
         if closed is not None:
-            from sparkrdf.localdf import local_rows_df
-
-            return local_rows_df(edges.sparkSession, closed, r.schema)
+            return localdf.local_rows_df(edges.sparkSession, closed, r.schema)
+    n = r.count()
     for _ in range(max_doubling):
         a, b = r.alias("a"), r.alias("b")
         stepped = a.join(b, F.col("a.o") == F.col("b.s")).select(
@@ -684,7 +678,6 @@ def describe_cbd(
     o_kind_col: str = "o_kind",
     bnode_kind: str = "BNode",
     max_rounds: int = 10,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """SPARQL ``DESCRIBE`` as a Concise Bounded Description (CBD): for every
     seed resource, its outgoing statements plus — recursively — the
@@ -705,12 +698,9 @@ def describe_cbd(
     chain (data, not corpus, sized); exhausting ``max_rounds`` RAISES
     rather than returning a silently truncated description.
 
-    Threshold-gated driver fast path (the connected_components pattern):
-    when the materialized bnode-edge and seed tables are both under
-    ``small_graph_threshold`` rows, the BFS runs as a driver loop — the
-    identical frontier/visited set algebra, integer-free and
-    order-independent — and only the final semi-join stays distributed.
-    Larger inputs take the per-round join loop automatically.
+    There is no driver fast path: a driver BFS (collect the bnode edges,
+    loop, upload the visited set) measured slower than this loop on 1000
+    crawled pages and at sf0.1.
     """
     seed_col = subjects.columns[0]
     visited = (
@@ -727,36 +717,6 @@ def describe_cbd(
         .select(F.col(s_col).alias("_s"), F.col(o_col).alias("_o"))
         .persist()
     )
-    if (
-        bn_edges.count() <= small_graph_threshold
-        and visited.count() <= small_graph_threshold
-    ):
-        adj: dict = {}
-        for r in bn_edges.collect():
-            adj.setdefault(r["_s"], []).append(r["_o"])
-        bn_edges.unpersist()
-        vis = {r["n"] for r in visited.collect()}
-        frontier_set = vis
-        for _ in range(max_rounds):
-            new = {
-                o
-                for s in frontier_set
-                for o in adj.get(s, ())
-                if o not in vis
-            }
-            if not new:
-                visited_df = stmts.sparkSession.createDataFrame(
-                    [(v,) for v in sorted(vis)], visited.schema
-                )
-                return stmts.join(
-                    visited_df, stmts[s_col] == visited_df["n"], "left_semi"
-                )
-            vis |= new
-            frontier_set = new
-        raise RuntimeError(
-            f"describe_cbd blank-node closure deeper than {max_rounds} rounds; "
-            "raise max_rounds"
-        )
     try:
         frontier = visited
         for _ in range(max_rounds):

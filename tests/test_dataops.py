@@ -162,14 +162,6 @@ def test_connected_components_shapes(spark):
     assert {k: v for k, v in got.items() if 10 <= k <= 12} == {10: 10, 11: 10, 12: 10}
     assert got[20] == 20 and got[21] == 20
 
-    # the distributed loop (forced via threshold=0) must produce labels
-    # byte-identical to the adaptive driver-side fast path above
-    dist = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, small_graph_threshold=0).collect()
-    }
-    assert dist == got
-
 
 def test_dedup_clusters_canonical(spark, docs_with_dups):
     """Exact duplicates land in one cluster with the min id canonical."""

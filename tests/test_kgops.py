@@ -234,40 +234,6 @@ def _pr_directed_ref(edges, damping=0.85, n_iter=10):
     return {n: round(p, 6) for n, p in pr.items()}
 
 
-def test_pagerank_family_fast_path_matches_distributed(spark):
-    """The threshold-gated driver power iteration must reproduce the
-    distributed loop's rounded scores exactly (same per-edge arithmetic;
-    rounding applied Spark-side in both paths)."""
-    from sparkrdf.graphops import pagerank, pagerank_directed, personalized_pagerank
-
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "c")]
-    und = spark.createDataFrame(edges, "u string, v string")
-    fast = {(r.n, r.pr) for r in pagerank(und).collect()}
-    slow = {(r.n, r.pr) for r in pagerank(und, small_graph_threshold=0).collect()}
-    assert fast == slow
-
-    wde = spark.createDataFrame(
-        [(u, v, 1 + i % 3) for i, (u, v) in enumerate(edges)],
-        "src_host string, dst_host string, n_links long",
-    )
-    fast = {(r.n, r.pr) for r in pagerank_directed(wde).collect()}
-    slow = {
-        (r.n, r.pr)
-        for r in pagerank_directed(wde, small_graph_threshold=0).collect()
-    }
-    assert fast == slow
-
-    seeds = spark.createDataFrame([("a",), ("e",)], "n string")
-    fast = {(r.n, r.pr) for r in personalized_pagerank(wde, seeds).collect()}
-    slow = {
-        (r.n, r.pr)
-        for r in personalized_pagerank(
-            wde, seeds, small_graph_threshold=0
-        ).collect()
-    }
-    assert fast == slow
-
-
 def test_pagerank_directed_matches_reference(spark):
     from sparkrdf.graphops import pagerank_directed
 
@@ -478,9 +444,10 @@ def test_cluster_split_keeps_near_dup_families_together(spark):
     assert out[77] == (77, exp)
 
 
-def test_path_closure_chain_and_convergence(spark):
+def test_path_closure_chain_and_convergence(spark, monkeypatch):
     import pytest as _pytest
 
+    from sparkrdf import localdf
     from sparkrdf.query import path_closure
 
     # 5-node chain: closure = all ordered pairs (i < j), needs 3 doublings
@@ -493,33 +460,13 @@ def test_path_closure_chain_and_convergence(spark):
     got = {(r.s, r.o) for r in path_closure(cyc).collect()}
     assert got == {("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")}
     # exhausted doubling bound raises instead of silently truncating
-    # (local_threshold=0 forces the distributed loop the bound guards)
+    # (SMALL_MAX = 0 forces the distributed loop the bound guards)
     deep = spark.createDataFrame(
         [(f"m{i}", f"m{i+1}") for i in range(5)], "s string, o string"
     )
+    monkeypatch.setattr(localdf, "SMALL_MAX", 0)
     with _pytest.raises(RuntimeError):
-        path_closure(deep, max_doubling=1, local_threshold=0)
-
-
-def test_path_closure_local_fast_path_matches_distributed(spark):
-    """The threshold-gated driver fast path must be row-identical to the
-    distributed doubling loop (chain, cycle, self-loop, fan shapes)."""
-    from sparkrdf.query import path_closure
-
-    shapes = [
-        [(f"n{i}", f"n{i+1}") for i in range(6)],          # chain
-        [("a", "b"), ("b", "a"), ("b", "c")],              # cycle + tail
-        [("x", "x"), ("x", "y")],                          # self-loop
-        [("r", "a"), ("r", "b"), ("a", "c"), ("b", "c")],  # diamond
-    ]
-    for pairs in shapes:
-        df = spark.createDataFrame(pairs, "s string, o string")
-        fast = {(r.s, r.o) for r in path_closure(df).collect()}
-        slow = {
-            (r.s, r.o)
-            for r in path_closure(df, local_threshold=0).collect()
-        }
-        assert fast == slow, pairs
+        path_closure(deep, max_doubling=1)
 
 
 def test_walk_skipgrams_and_negatives(spark):
@@ -1212,78 +1159,6 @@ def test_scc_hand_graphs(spark):
     assert shared["d"] == "d"
 
 
-def test_iterative_graph_fast_paths_match_distributed(spark):
-    """Every threshold-gated driver fast path added for the bounded-graph
-    iterative operators must be row-identical to its distributed loop on
-    hand graphs (cycle+bridge, chain, hub, disconnected pair)."""
-    from sparkrdf.graphops import (
-        betweenness,
-        closeness_centrality,
-        coreness,
-        harmonic_centrality,
-        kcore,
-        ktruss,
-        label_propagation,
-        neighborhood_function,
-        node2vec_walks,
-    )
-
-    graphs = [
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
-         ("d", "e"), ("e", "d"), ("e", "f"), ("g", "h")],
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")],
-        [("h", "x1"), ("h", "x2"), ("h", "x3"), ("x1", "x2"), ("x2", "x3")],
-    ]
-    ops = [
-        ("lpa", lambda df, thr: label_propagation(
-            df, iters=4, small_graph_threshold=thr)),
-        ("coreness", lambda df, thr: coreness(df, small_graph_threshold=thr)),
-        ("kcore", lambda df, thr: kcore(df, 2, small_graph_threshold=thr)),
-        ("ktruss", lambda df, thr: ktruss(df, 3, small_graph_threshold=thr)),
-        ("nf", lambda df, thr: neighborhood_function(
-            df, max_t=3, exact=True, small_graph_threshold=thr)),
-        ("harmonic", lambda df, thr: harmonic_centrality(
-            df, max_t=3, exact=True, small_graph_threshold=thr)),
-        ("closeness", lambda df, thr: closeness_centrality(
-            df, max_t=3, small_graph_threshold=thr)),
-        ("betweenness", lambda df, thr: betweenness(
-            df, max_t=3, source_mod=2, small_graph_threshold=thr)),
-        ("node2vec", lambda df, thr: node2vec_walks(
-            df, walk_len=3, walks_per_node=2, small_graph_threshold=thr)),
-    ]
-    for edges in graphs:
-        df = spark.createDataFrame(edges, "u string, v string")
-        for name, run in ops:
-            fast = {tuple(r) for r in run(df, 2_000_000).collect()}
-            slow = {tuple(r) for r in run(df, 0).collect()}
-            assert fast == slow, (name, edges)
-
-
-def test_scc_local_fast_path_matches_distributed(spark):
-    """The threshold-gated Tarjan fast path must be row-identical to the
-    distributed Forward-Backward-Trim loop on every hand graph."""
-    from sparkrdf.graphops import scc
-
-    graphs = [
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
-         ("d", "e"), ("e", "d"), ("e", "f"), ("g", "h")],
-        [("a", "b"), ("b", "c"), ("c", "d")],
-        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
-         ("c", "c"), ("d", "a")],
-        # bow-tie: IN tendril -> core cycle -> OUT tendril
-        [("i1", "c1"), ("c1", "c2"), ("c2", "c3"), ("c3", "c1"),
-         ("c2", "o1"), ("o1", "o2")],
-    ]
-    for edges in graphs:
-        df = spark.createDataFrame(edges, "u string, v string")
-        fast = {(r.n, r.scc) for r in scc(df).collect()}
-        slow = {
-            (r.n, r.scc)
-            for r in scc(df, small_graph_threshold=0).collect()
-        }
-        assert fast == slow, edges
-
-
 def test_scc_directed_vs_wcc(spark):
     """A directed 2-path is ONE weak component but TWO SCCs — the
     direction-sensitivity gate."""
@@ -1511,3 +1386,129 @@ def test_scc_empty_and_self_loop_only_edges(spark):
     assert out.columns == ["n", "scc"] and out.count() == 0
     loops = spark.createDataFrame([("a", "a")], "u string, v string")
     assert scc(loops).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# driver/distributed parity of every operator behind localdf.collect_if_small
+# ---------------------------------------------------------------------------
+
+# hand shapes, each prefixed by its index so their union is disjoint
+_GATE_SHAPES = [
+    # two cycles joined by a bridge, a tail, an isolated pair
+    [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+     ("d", "e"), ("e", "d"), ("e", "f"), ("g", "h")],
+    # 4-cycle with a chord
+    [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")],
+    # hub
+    [("h", "x1"), ("h", "x2"), ("h", "x3"), ("x1", "x2"), ("x2", "x3")],
+    # bow-tie: IN tendril -> core cycle -> OUT tendril
+    [("i1", "c1"), ("c1", "c2"), ("c2", "c3"), ("c3", "c1"),
+     ("c2", "o1"), ("o1", "o2")],
+    # two cycles sharing a node, a self-loop, a feeder
+    [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("c", "c"), ("d", "a")],
+    # chain, diamond
+    [(f"n{i}", f"n{i+1}") for i in range(6)]
+    + [("r", "a"), ("r", "b"), ("a", "c"), ("b", "c")],
+]
+# NULL endpoints: on a cycle, and as the only neighbour of z
+_GATE_NULLS = [("a", "b"), ("b", "c"), ("c", "a"), (None, "a"), ("b", None),
+               ("z", None), (None, None)]
+
+
+def _gate_edges():
+    edges = [(f"{k}{u}", f"{k}{v}") for k, shape in enumerate(_GATE_SHAPES)
+             for u, v in shape]
+    return edges + [(u and f"9{u}", v and f"9{v}") for u, v in _GATE_NULLS]
+
+
+def _gate_op(spark, name):
+    from sparkrdf import terms as T
+    from sparkrdf import graphops as G
+    from sparkrdf.dedupe import connected_components
+    from sparkrdf.query import path_closure
+    from sparkrdf.reason import owl_materialize
+
+    def uv(rows):
+        return spark.createDataFrame(rows, "u string, v string")
+
+    def weighted(rows):
+        return spark.createDataFrame(
+            [(u, v, 1 + i % 3) for i, (u, v) in enumerate(rows)],
+            "src_host string, dst_host string, n_links long")
+
+    def owl(rows):
+        t = spark.createDataFrame(
+            [(u, "p", v) for u, v in rows]
+            + [("a", "q", "b"), ("b", "q", "c"), ("x", "r", "y")],
+            "s string, p string, o string")
+        onto = spark.createDataFrame(
+            [("p", T.RDF_TYPE, T.OWL_TRANSITIVE),
+             ("q", T.RDF_TYPE, T.OWL_TRANSITIVE)],
+            "s string, p string, o string")
+        return owl_materialize(t, onto)
+
+    seeds = spark.createDataFrame([("0a",), ("5r",), (None,)], "n string")
+    return {
+        "pagerank": lambda r: G.pagerank(uv(r)),
+        "pagerank_directed": lambda r: G.pagerank_directed(weighted(r)),
+        "personalized_pagerank": lambda r: G.personalized_pagerank(
+            weighted(r), seeds),
+        "kcore": lambda r: G.kcore(uv(r), 2),
+        "label_propagation": lambda r: G.label_propagation(uv(r), iters=4),
+        "ktruss": lambda r: G.ktruss(uv(r), 3),
+        "coreness": lambda r: G.coreness(uv(r)),
+        "scc": lambda r: G.scc(uv(r)),
+        "neighborhood_function": lambda r: G.neighborhood_function(
+            uv(r), max_t=3, exact=True),
+        "harmonic_centrality": lambda r: G.harmonic_centrality(
+            uv(r), max_t=3, exact=True),
+        "closeness_centrality": lambda r: G.closeness_centrality(uv(r), max_t=3),
+        "betweenness": lambda r: G.betweenness(uv(r), max_t=3, source_mod=2),
+        "node2vec_walks": lambda r: G.node2vec_walks(
+            uv(r), walk_len=3, walks_per_node=2),
+        "connected_components": lambda r: connected_components(
+            uv(r).selectExpr("u as id_a", "v as id_b")),
+        "path_closure": lambda r: path_closure(
+            uv(r).selectExpr("u as s", "v as o")),
+        "owl_materialize": owl,
+    }[name]
+
+
+def _outcome(run, rows):
+    """Sorted result rows, or the exception type when the operator raises
+    (pagerank divides by the vertex count, so both paths raise on an empty
+    graph)."""
+    from sparkrdf.localdf import nulls_first
+
+    try:
+        return sorted((tuple(r) for r in run(rows).collect()), key=nulls_first)
+    except Exception as exc:  # noqa: BLE001 — compared, not swallowed
+        return type(exc).__name__
+
+
+@pytest.mark.parametrize("name", [
+    "pagerank", "pagerank_directed", "personalized_pagerank", "kcore",
+    "label_propagation", "ktruss", "coreness", "scc", "neighborhood_function",
+    "harmonic_centrality", "closeness_centrality", "betweenness",
+    "node2vec_walks", "connected_components", "path_closure",
+    "owl_materialize",
+])
+def test_driver_gate_parity(spark, monkeypatch, name):
+    """Every operator behind ``localdf.collect_if_small`` returns the same
+    row values from its driver loop and from its distributed loop
+    (``SMALL_MAX = 0``): on one graph holding the hand shapes and NULL
+    endpoints, and on an empty edge list."""
+    from sparkrdf import localdf
+
+    run = _gate_op(spark, name)
+    for rows in (_gate_edges(), []):
+        driver = _outcome(run, rows)
+        with monkeypatch.context() as m:
+            m.setattr(localdf, "SMALL_MAX", 0)
+            distributed = _outcome(run, rows)
+        assert driver == distributed, (name, len(rows))
+        assert rows == [] or isinstance(driver, list), driver
+        if name == "owl_materialize" and rows:
+            assert ("0a", "p", "0a") in driver  # a cycle closes reflexively
+            assert ("a", "q", "c") in driver
+            assert ("x", "r", "y") in driver and ("x", "r", "x") not in driver

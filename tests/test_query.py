@@ -488,14 +488,17 @@ def test_describe_cbd_follows_bnode_chain(spark):
         ("other", "p6", "_:b9", "BNode"),  # unrelated subject
     ]
     stmts = spark.createDataFrame(rows, "s string, p string, o string, o_kind string")
-    seeds = spark.createDataFrame([("a",)], "n string")
-    got = {(r.s, r.p, r.o) for r in describe_cbd(stmts, seeds).collect()}
-    assert got == {
+    want = {
         ("a", "p1", "_:b1"),
         ("_:b1", "p2", "_:b2"),
         ("_:b2", "p3", "lit"),
         ("a", "p4", "x"),
     }
+    # a NULL seed describes nothing and must not break the others
+    for seed_rows in ([("a",)], [("a",), (None,)]):
+        seeds = spark.createDataFrame(seed_rows, "n string")
+        got = {(r.s, r.p, r.o) for r in describe_cbd(stmts, seeds).collect()}
+        assert got == want, seed_rows
 
 
 def test_describe_cbd_depth_raise(spark):

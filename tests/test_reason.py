@@ -242,12 +242,13 @@ def test_owl_no_axioms_is_identity(spark):
 
 def test_owl_unconverged_closure_raises(spark, monkeypatch):
     import pytest
+    from sparkrdf import localdf
     from sparkrdf import terms as T
     from sparkrdf.reason import owl_materialize
 
     # force the distributed doubling loop (the bound under test guards it;
     # the driver fast path computes the exact closure without the bound)
-    monkeypatch.setenv("SPARKRDF_LOCAL_CLOSURE_MAX", "0")
+    monkeypatch.setattr(localdf, "SMALL_MAX", 0)
     chain = [(f"n{i}", "p", f"n{i+1}") for i in range(9)]
     t = spark.createDataFrame(chain, "s string, p string, o string")
     o = spark.createDataFrame(
@@ -255,35 +256,6 @@ def test_owl_unconverged_closure_raises(spark, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="still growing"):
         owl_materialize(t, o, max_doubling=2)
-
-
-def test_owl_local_closure_fast_path_matches_distributed(spark, monkeypatch):
-    """The threshold-gated driver closure must be row-identical to the
-    distributed doubling loop, including per-property separation."""
-    from sparkrdf import terms as T
-    from sparkrdf.reason import owl_materialize
-
-    t = spark.createDataFrame(
-        [
-            ("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a"),  # p-cycle
-            ("a", "q", "b"), ("b", "q", "c"),                    # q-chain
-            ("x", "r", "y"),                                     # r not transitive
-        ],
-        "s string, p string, o string",
-    )
-    o = spark.createDataFrame(
-        [
-            ("p", T.RDF_TYPE, T.OWL_TRANSITIVE),
-            ("q", T.RDF_TYPE, T.OWL_TRANSITIVE),
-        ],
-        "s string, p string, o string",
-    )
-    fast = {tuple(r) for r in owl_materialize(t, o).collect()}
-    monkeypatch.setenv("SPARKRDF_LOCAL_CLOSURE_MAX", "0")
-    slow = {tuple(r) for r in owl_materialize(t, o).collect()}
-    assert fast == slow
-    assert ("a", "p", "a") in fast  # cycle closes reflexively
-    assert ("a", "q", "c") in fast and ("a", "r", "y") not in fast
 
 
 def test_rdfs_delta_is_exactly_the_new_entailments(spark):
