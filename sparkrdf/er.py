@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkrdf.localdf import local_rows_df
+
 __all__ = ["bigram_set", "fuzzy_pairs"]
 
 
@@ -124,9 +126,7 @@ def global_rank(df: DataFrame, keys: list[str]) -> DataFrame:
     for row in sorted(counts, key=lambda r: r["_pid"]):
         offsets.append((row["_pid"], acc))
         acc += row["_c"]
-    omap = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _off long"
-    )
+    omap = local_rows_df(df.sparkSession, offsets or [(0, 0)], "_pid int, _off long")
     return (
         d.join(F.broadcast(omap), "_pid")
         .withColumn("_gr", F.col("_off") + F.col("_r") - 1)

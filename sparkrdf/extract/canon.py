@@ -13,12 +13,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkrdf.extract.gazetteer import KG, PREDICATES
+from sparkrdf.localdf import local_rows_df
 
 
 def canonical_predicates_df(spark) -> DataFrame:
-    return spark.createDataFrame(
-        list(PREDICATES.items()), "raw_label string, canon_iri string"
-    )
+    return local_rows_df(spark, PREDICATES.items(), "raw_label string, canon_iri string")
 
 
 def canonicalize(spark, df: DataFrame, label_col: str = "p_label") -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from sparkrdf.extract.gazetteer import entity_rows
 from sparkrdf.hashing import fingerprint64
+from sparkrdf.localdf import local_rows_df
 
 EMB_DIM = 64
 
@@ -56,7 +57,8 @@ def scored_gazetteer():
 def link_mentions(spark, mentions):
     """mentions(url, surface, n, first_off) →
     links(url, surface, n, entity_iri, class_iri, entity_label, score)."""
-    gaz = spark.createDataFrame(
+    gaz = local_rows_df(
+        spark,
         scored_gazetteer(),
         "surface string, entity_iri string, class_iri string, entity_label string, score double",
     )

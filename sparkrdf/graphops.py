@@ -144,6 +144,8 @@ def pagerank(
         for r in rows:
             dg[r["s"]] = dg.get(r["s"], 0) + 1
         n_v = len(dg)
+        if not n_v:  # empty edge list: no vertex to rank
+            return _ranks_df(edges.sparkSession, {}, de.schema["s"].dataType).select("n", "pr")
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in dg}
         # a NULL source never matches the distributed rank join
@@ -163,6 +165,9 @@ def pagerank(
     out = de.join(deg, "s").repartition("s").persist()
     n_v = deg.count()
     de.unpersist()
+    if not n_v:
+        out.unpersist()
+        return _ranks_df(edges.sparkSession, {}, de.schema["s"].dataType).select("n", "pr")
     base = (1.0 - damping) / n_v
     ranks = deg.select(F.col("s").alias("n"), F.lit(1.0 / n_v).alias("pr"))
     for i in range(n_iter):
@@ -383,6 +388,8 @@ def pagerank_directed(
         e.unpersist()
         ow, nodes, frac = _weighted_out_edges(rows)
         n_v = len(nodes)
+        if not n_v:  # empty edge list: no vertex to rank
+            return _ranks_df(edges.sparkSession, {}, e.schema["s"].dataType).select("n", "pr")
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in nodes}
         for _ in range(n_iter):
@@ -416,6 +423,10 @@ def pagerank_directed(
         .localCheckpoint(eager=True)
     )
     n_v = nodes.count()
+    if not n_v:
+        norm.unpersist()
+        e.unpersist()
+        return _ranks_df(edges.sparkSession, {}, e.schema["s"].dataType).select("n", "pr")
     base = (1.0 - damping) / n_v
     ranks = nodes.withColumn("pr", F.lit(1.0 / n_v))
     for _ in range(n_iter):
@@ -1092,7 +1103,7 @@ def sssp_bounded(
         raise ValueError("sssp_bounded requires non-negative edge weights")
     e = e.repartition("s").persist()
     spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0.0)], "n string, dist double").localCheckpoint(
+    dist = local_rows_df(spark, [(source, 0.0)], "n string, dist double").localCheckpoint(
         eager=True
     )
     for _ in range(k):
@@ -1841,7 +1852,7 @@ def neighborhood_function(
             for t in sorted(per_d):
                 cum += per_d[t]
                 out.append((t, cum))
-            return spark.createDataFrame(out, "t int, pairs long")
+            return local_rows_df(spark, out, "t int, pairs long")
         dist = nodes.select(
             F.col("n").alias("a"), F.col("n").alias("b"), F.lit(0).alias("d")
         ).localCheckpoint(eager=True)
@@ -1892,9 +1903,7 @@ def neighborhood_function(
         if p == est[-1]:
             break
         est.append(p)
-    return spark.createDataFrame(
-        list(enumerate(est)), "t int, pairs long"
-    )
+    return local_rows_df(spark, enumerate(est), "t int, pairs long")
 
 
 def harmonic_centrality(

@@ -30,6 +30,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkrdf.localdf import local_rows_df
+
 
 def write_table(df: DataFrame, path: str, partition_by: str | None = "collection"):
     w = df.write.mode("overwrite")
@@ -38,14 +40,26 @@ def write_table(df: DataFrame, path: str, partition_by: str | None = "collection
     w.parquet(path)
 
 
-def write_lineage(spark, base: str, run_id: str, stage: str, rows: list[tuple]):
-    """rows: (partition_id, input_rows, output_rows, status)"""
-    df = spark.createDataFrame(
-        [(run_id, stage, int(p), int(i), int(o), s) for p, i, o, s in rows],
-        "run_id string, stage string, partition_id int, input_rows long, "
-        "output_rows long, status string",
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, partition_id int, input_rows long, "
+    "output_rows long, status string"
+)
+
+
+def write_lineage(spark, base: str, run_id: str, stage: str | None, rows: list[tuple]):
+    """Append one batch of lineage rows to ``{base}/lineage``; the batch
+    shares one ``written_at``. ``rows`` are ``(partition_id, input_rows,
+    output_rows, status)`` of ``stage``, or, with ``stage=None``, ``(stage,
+    partition_id, input_rows, output_rows, status)`` — several stages in
+    one append."""
+    if stage is not None:
+        rows = [(stage, *r) for r in rows]
+    df = local_rows_df(
+        spark,
+        [(run_id, st, int(p), int(i), int(o), s) for st, p, i, o, s in rows],
+        LINEAGE_SCHEMA,
     ).withColumn("written_at", F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())))
-    df.write.mode("append").parquet(posixpath.join(base, "lineage"))
+    df.coalesce(1).write.mode("append").parquet(posixpath.join(base, "lineage"))
 
 
 def partition_counts(df: DataFrame) -> list[tuple]:
@@ -86,7 +100,20 @@ def write_graph(
     # Hadoop FS, not os.makedirs: ``base`` may be HDFS/S3A on a cluster
     fs_mkdirs(spark, base)
 
-    v_counts = partition_counts(graph["vertices"])
+    # per-partition vertex counts and the vertex collection set from one
+    # aggregation: vertex-ONLY collections (Property, Class, orphan
+    # resources) never appear as edge endpoints, and the manifest must
+    # record them or a manifest-driven export loses their documents
+    by_pid_col = (
+        graph["vertices"]
+        .groupBy(F.spark_partition_id().alias("pid"), "collection")
+        .count()
+        .collect()
+    )
+    v_rows: dict[int, int] = {}
+    for r in by_pid_col:
+        v_rows[r["pid"]] = v_rows.get(r["pid"], 0) + r["count"]
+    v_counts = sorted(v_rows.items())
     write_table(graph["vertices"], posixpath.join(base, "vertices"))
     e_counts = partition_counts(graph["edges"])
     write_table(graph["edges"], posixpath.join(base, "edges"))
@@ -97,16 +124,8 @@ def write_graph(
         prior = json.loads(fs_read_text(spark, manifest_path))
     existing = prior.get("edge_definitions", {})
     edefs = merge_edge_definitions(existing, [r.asDict() for r in graph["edge_definitions"].collect()])
-    # vertex collections include vertex-ONLY ones (Property, Class, orphan
-    # resources) that never appear as edge endpoints — the manifest must
-    # record them or a manifest-driven export loses their documents
-    prior_vcols = set(prior.get("vertex_collections", []))
     v_cols = sorted(
-        prior_vcols
-        | {
-            r["collection"]
-            for r in graph["vertices"].select("collection").distinct().collect()
-        }
+        set(prior.get("vertex_collections", [])) | {r["collection"] for r in by_pid_col}
     )
     manifest = {
         "graph": name,

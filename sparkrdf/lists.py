@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkrdf import terms as T
+from sparkrdf.localdf import local_rows_df
 
 _XSD = T.XSD
 _INT_DTS = {
@@ -211,8 +212,8 @@ def assemble_lists(list_data: DataFrame, heads: DataFrame) -> tuple[DataFrame, D
     # full-parallel emptiness probe (see pointer-jumping note above): the
     # common web corpus has zero RDF lists and must not pay a serial scan
     if list_data.count() == 0:
-        empty_frag = spark.createDataFrame([], "root string, fragment string")
-        empty_mem = spark.createDataFrame([], "root string, member string, member_kind string")
+        empty_frag = local_rows_df(spark, [], "root string, fragment string")
+        empty_mem = local_rows_df(spark, [], "root string, member string, member_kind string")
         return empty_frag, empty_mem
 
     coll_nodes = (

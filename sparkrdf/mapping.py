@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparkrdf import terms as T
+from sparkrdf.localdf import local_rows_df
 
 
 def extract_adb_col_statements(stmts: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -341,7 +342,7 @@ def best_class(
 
     if depths:
         # driver-built local table: exact size stats, AQE broadcasts it
-        depth_df = spark.createDataFrame(list(depths.items()), "cls string, depth int")
+        depth_df = local_rows_df(spark, depths.items(), "cls string, depth int")
         cand = candidates.join(depth_df, "cls", "left").withColumn(
             "depth", F.coalesce("depth", F.lit(-1))
         )

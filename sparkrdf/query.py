@@ -184,7 +184,7 @@ def khop(
     e = e.repartition("s").persist()
 
     spark = edges.sparkSession
-    frontier = spark.createDataFrame([(source,)], "n string").localCheckpoint(
+    frontier = localdf.local_rows_df(spark, [(source,)], "n string").localCheckpoint(
         eager=True
     )
     visited = frontier.select("n", F.lit(0).alias("dist"))
@@ -607,8 +607,8 @@ def bgp_values(
         raise ValueError(f"VALUES variables {missing} not bound by the pattern group")
     spark = stmts.sparkSession
     rows = [tuple(row.get(v) for v in vars_) for row in values]
-    inline = spark.createDataFrame(
-        rows, ", ".join(f"`__v_{v}` string" for v in vars_)
+    inline = localdf.local_rows_df(
+        spark, rows, ", ".join(f"`__v_{v}` string" for v in vars_)
     )
     has_undef = any(v is None for r in rows for v in r)
     if not has_undef:

@@ -106,16 +106,16 @@ def rdfs_materialize(
     # The ontology is human-authored — thousands of rows at most (module
     # docstring) — so collect it ONCE and derive the four rule tables and
     # both strict transitive closures in-process instead of running
-    # checkpoint+count Spark jobs per closure over a handful of rows; each
-    # table re-enters the plan as a broadcast local relation. (The closure
-    # itself is query.path_closure's driver fast path, shared here.)
+    # checkpoint+count Spark jobs per closure over a handful of rows. Each
+    # table re-enters the plan through localdf.local_rows_df: a JVM
+    # LocalTableScan under a broadcast hint, so no rule join starts a
+    # Python worker. (The closure itself is query.path_closure's driver
+    # fast path, shared here.)
     spark = triples.sparkSession
     onto_rows = [(r["s"], r["p"], r["o"]) for r in onto.collect()]
 
     def _pairs_df(rows, c1, c2):
-        return F.broadcast(
-            spark.createDataFrame(list(rows) or [], f"{c1} string, {c2} string")
-        )
+        return F.broadcast(localdf.local_rows_df(spark, rows, f"{c1} string, {c2} string"))
 
     dom_rows = [(s, o) for s, p, o in onto_rows if p == RDFS_DOMAIN]
     rng_rows = [(s, o) for s, p, o in onto_rows if p == RDFS_RANGE]
@@ -436,9 +436,7 @@ def owl_materialize(
         {(s, o) for s, p, o in onto_rows if p == T.OWL_INVERSE_OF}
         | {(o, s) for s, p, o in onto_rows if p == T.OWL_INVERSE_OF}
     )
-    inv = F.broadcast(
-        spark.createDataFrame(inv_rows or [], "p string, _q string")
-    )
+    inv = F.broadcast(localdf.local_rows_df(spark, inv_rows, "p string, _q string"))
 
     def _is_in(col, values):
         return col.isin(*values) if values else F.lit(False)

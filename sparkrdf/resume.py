@@ -19,6 +19,15 @@ everywhere); this module is the explicit orchestrator on top of them:
   stage records row counts at compute time so resumed runs report metrics
   without rescanning data.
 
+The bookkeeping runs once per unit of work. A freshly written checkpoint is
+read back ONCE, with the schema of the frame just written (no footer
+inference job); that one DataFrame is counted per partition and returned.
+Each committed stage makes ONE lineage append: a multi-table stage writes
+its tables' rows together, so they share a ``written_at``. Lineage rows
+are uploaded with :func:`sparkrdf.localdf.local_rows_df`, a JVM local
+relation, so the append starts no Python worker. A resumed stage reads its
+checkpoint with the schema inferred from the files.
+
 Scale note: the checkpoint write is a full materialization per stage — at
 100 TB that is exactly what you want between the expensive phases (NER,
 linking, RPT) anyway, because it is simultaneously the shuffle barrier that
@@ -74,13 +83,14 @@ class ResumableJob:
         """
         out = posixpath.join(self.ckpt_dir, "stages", name)
         if self._success(out):
-            self._record(name, out, status="resumed")
-            return self.spark.read.parquet(out)
+            df = self.spark.read.parquet(out)
+            self._commit([self._counts(name, out, df, "resumed")])
+            return df
         # crash artifact: directory exists but the write never committed
         fs_delete(self.spark, out)
-        fn().write.mode("overwrite").parquet(out)
-        self._record(name, out, status="computed", fresh=True)
-        return self.spark.read.parquet(out)
+        df = self._checkpoint(fn(), out)
+        self._commit([self._counts(name, out, df, "computed")])
+        return df
 
     def multi_stage(
         self, name: str, fn: Callable[[], dict]
@@ -94,55 +104,70 @@ class ResumableJob:
         if fs_exists(self.spark, keys_path):
             keys = json.loads(fs_read_text(self.spark, keys_path))
             if all(self._success(posixpath.join(base, k)) for k in keys):
-                out = {}
+                out, done = {}, []
                 for k in keys:
                     p = posixpath.join(base, k)
-                    self._record(f"{name}/{k}", p, status="resumed")
                     out[k] = self.spark.read.parquet(p)
+                    done.append(self._counts(f"{name}/{k}", p, out[k], "resumed"))
+                self._commit(done)
                 return out
         fs_delete(self.spark, base)
         tables = fn()
         fs_mkdirs(self.spark, base)
-        out = {}
+        out, done = {}, []
         for k, df in tables.items():
             p = posixpath.join(base, k)
-            df.write.mode("overwrite").parquet(p)
-            self._record(f"{name}/{k}", p, status="computed", fresh=True)
-            out[k] = self.spark.read.parquet(p)
+            out[k] = self._checkpoint(df, p)
+            done.append(self._counts(f"{name}/{k}", p, out[k], "computed"))
         # commit marker for the stage as a whole: written LAST, so a crash
         # between table writes leaves no .outputs.json and the stage reruns
         fs_write_text(self.spark, keys_path, json.dumps(sorted(tables.keys())))
+        self._commit(done)
         release = getattr(tables, "release", None)
         if callable(release):
             release()
         return out
 
+    def _checkpoint(self, df: DataFrame, path: str) -> DataFrame:
+        """Write ``df`` to ``path``; read it back ONCE with the schema just
+        written, so no job re-infers it from the Parquet footers."""
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
+
     # -- metrics ----------------------------------------------------------
-    def _record(self, stage: str, path: str, status: str, fresh: bool = False):
+    def _counts(self, stage: str, path: str, df: DataFrame, status: str) -> tuple:
+        """(stage, status, [(partition_id, rows)]) of a checkpoint. A
+        computed checkpoint is counted from ``df`` (its one read-back) and
+        gets a ``.metrics.json`` sidecar; a resumed one reads the sidecar."""
         sidecar = posixpath.join(path, ".metrics.json")
-        if fresh or not fs_exists(self.spark, sidecar):
-            counts = partition_counts(self.spark.read.parquet(path))
+        if status == "computed" or not fs_exists(self.spark, sidecar):
+            counts = partition_counts(df)
             fs_write_text(self.spark, sidecar, json.dumps({"partition_rows": counts}))
         else:
             counts = [
                 tuple(t)
                 for t in json.loads(fs_read_text(self.spark, sidecar))["partition_rows"]
             ]
+        return stage, status, counts
+
+    def _commit(self, done: list[tuple]):
+        """One lineage append for a committed stage's tables, then metrics."""
         write_lineage(
             self.spark,
             self.ckpt_dir,
             self.run_id,
-            stage,
-            [(p, c, c, status) for p, c in counts],
+            None,
+            [(stage, p, c, c, status) for stage, status, counts in done for p, c in counts],
         )
-        self._metrics.append(
-            {
-                "stage": stage,
-                "status": status,
-                "rows": sum(c for _, c in counts),
-                "partitions": len(counts),
-            }
-        )
+        for stage, status, counts in done:
+            self._metrics.append(
+                {
+                    "stage": stage,
+                    "status": status,
+                    "rows": sum(c for _, c in counts),
+                    "partitions": len(counts),
+                }
+            )
 
     def metrics(self) -> list[dict]:
         """Per-stage summary of THIS run (triple-count metrics: the

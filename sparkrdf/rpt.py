@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from sparkrdf import terms as T
 from sparkrdf.hashing import farmhash_key, register_udfs
+from sparkrdf.localdf import local_rows_df
 
 VERTEX_COLUMNS = [
     "collection",
@@ -396,9 +397,9 @@ def rpt_transform(
         # predicates become URIRef term docs (__rpt_process_term(p),
         # main.py:2412), plus the rdf:Property endpoint doc
         spark = keyed.sparkSession
-        prop_row = spark.createDataFrame(
-            [(T.RDF_PROPERTY,)], "p string"
-        ).withColumn("p_key", F.lit(farmhash_key(T.RDF_PROPERTY)))
+        prop_row = local_rows_df(
+            spark, [(T.RDF_PROPERTY, farmhash_key(T.RDF_PROPERTY))], "p string, p_key string"
+        )
         pred_docs = (
             keyed.select("p", "p_key").dropDuplicates(["p"]).unionByName(prop_row)
             .select(
@@ -414,7 +415,8 @@ def rpt_transform(
         )
         vertices = vertices.unionByName(pred_docs).dropDuplicates(["collection", "_key"])
     # static edge definition (main.py:2429-2444)
-    edge_defs = edges.sparkSession.createDataFrame(
+    edge_defs = local_rows_df(
+        edges.sparkSession,
         [
             (
                 f"{name}_Statement",

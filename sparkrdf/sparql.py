@@ -78,6 +78,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkrdf.localdf import local_rows_df
 from sparkrdf.query import (
     META_SUFFIXES,
     bgp_extend,
@@ -989,8 +990,8 @@ def _compile_describe(
             part = sol.select(F.col(v).alias("n"))
             seeds = part if seeds is None else seeds.unionAll(part)
     if q["seeds_const"]:
-        const = stmts.sparkSession.createDataFrame(
-            [(c,) for c in q["seeds_const"]], "n string"
+        const = local_rows_df(
+            stmts.sparkSession, [(c,) for c in q["seeds_const"]], "n string"
         )
         seeds = const if seeds is None else seeds.unionAll(const)
     added_kind = "o_kind" not in stmts.columns
@@ -1202,7 +1203,8 @@ def _compile_group(
         if missing:
             raise ValueError(f"VALUES variables {missing} not bound by the group")
         spark = stmts.sparkSession
-        inline = spark.createDataFrame(
+        inline = local_rows_df(
+            spark,
             [tuple(row.get(v) for v in vars_) for row in rows],
             ", ".join(f"`__v_{v}` string" for v in vars_),
         )
@@ -1400,8 +1402,8 @@ def _const_rows(spark, triples: list[tuple]) -> DataFrame:
          "URIRef" if o[1] == "iri" else "Literal")
         for s, p, o in triples
     ]
-    return spark.createDataFrame(
-        rows, "_s string, _p string, _o string, _sk string, _ok string"
+    return local_rows_df(
+        spark, rows, "_s string, _p string, _o string, _sk string, _ok string"
     )
 
 

@@ -402,9 +402,10 @@ def namespaces_df(spark, prefixes: dict[str, str]):
     """(prefix, uri, _key=farmhash(uri)) rows — the reference's namespaces
     collection (main.py:1178-1193)."""
     from sparkrdf.hashing import farmhash_key
+    from sparkrdf.localdf import local_rows_df
 
     rows = [(p, u, farmhash_key(u)) for p, u in sorted(prefixes.items())]
-    return spark.createDataFrame(rows, "prefix string, uri string, _key string")
+    return local_rows_df(spark, rows, "prefix string, uri string, _key string")
 
 
 def parse_ttl_file(path: str, bnode_prefix: str | None = None) -> list[tuple]:

@@ -27,6 +27,13 @@ def ref_case(name: str) -> str:
     return path
 
 
+def _driver_memory() -> str:
+    """24g, capped at half the box's RAM: a fixed 24g heap gets the JVM
+    OOM-killed on a 16 GB box."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
@@ -38,7 +45,10 @@ def spark():
         # one long-lived JVM serves the whole suite; transforms cache
         # intermediates, so size the heap for accumulation and clear the SQL
         # cache in the memoized fixtures (see pgt_case/rpt_case)
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", _driver_memory())
+        # as sparkrdf.session.get_spark: pandas uploads and toPandas take
+        # the Arrow path production runs, not the row-pickling fallback
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -64,6 +64,59 @@ def test_fresh_run_writes_commits_and_metrics(spark, pages, tmp_path):
     assert stmt_rows == by_stage["statements"]["rows"]
 
 
+TABLES = {
+    "statements": "statements",
+    "rpt/vertices": "vertices",
+    "rpt/edges": "edges",
+    "rpt/edge_definitions": "edge_definitions",
+}
+
+
+def _lineage_rows(spark, ckpt, run_id, status):
+    """stage -> summed output_rows of one run's lineage rows of ``status``."""
+    lineage = spark.read.parquet(os.path.join(ckpt, "lineage"))
+    return {
+        r["stage"]: r["n"]
+        for r in lineage.filter(f"run_id = '{run_id}' and status = '{status}'")
+        .groupBy("stage")
+        .agg({"output_rows": "sum"})
+        .withColumnRenamed("sum(output_rows)", "n")
+        .collect()
+    }
+
+
+def _lineage_files(ckpt):
+    d = os.path.join(ckpt, "lineage")
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_lineage_contract_every_table(spark, pages, tmp_path):
+    """Every stage table's summed lineage output_rows equals its row count
+    and its metrics rows, computed and resumed; each committed stage is one
+    lineage append (one file), its tables' rows together."""
+    ckpt = str(tmp_path / "ckpt")
+    tables, metrics = run_extract_job(spark, pages, ckpt, run_id="r1")
+    rows = {m["stage"]: m["rows"] for m in metrics}
+    counts = {stage: tables[t].count() for stage, t in TABLES.items()}
+    assert counts["rpt/edge_definitions"] == 1
+    assert rows == counts
+    assert _lineage_rows(spark, ckpt, "r1", "computed") == counts
+    assert len(_lineage_files(ckpt)) == 2  # statements, rpt
+
+    _, metrics2 = run_extract_job(spark, pages, ckpt, run_id="r2")
+    assert {m["stage"]: m["rows"] for m in metrics2} == counts
+    assert all(m["status"] == "resumed" for m in metrics2)
+    assert _lineage_rows(spark, ckpt, "r2", "resumed") == counts
+    assert len(_lineage_files(ckpt)) == 4
+    lineage = spark.read.parquet(os.path.join(ckpt, "lineage"))
+    for run_id in ("r1", "r2"):
+        n_stamps = (
+            lineage.filter(f"run_id = '{run_id}' and stage like 'rpt/%'")
+            .select("written_at").distinct().count()
+        )
+        assert n_stamps == 1
+
+
 def test_resume_skips_completed_stages(spark, pages, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     tables1, _ = run_extract_job(spark, pages, ckpt, run_id="r1")
