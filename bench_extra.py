@@ -9,7 +9,10 @@ Usage:
 
 With no queries listed, runs the same OP_QUERIES list as bench.py plus the
 flagship stages. --explain DIR writes DIR/<query>.txt with the formatted
-plan of each query (before execution). Prints one JSON line per query:
+plan of each query (before execution). First prints which JVM UDFs the
+session runs (a missing one means its operators took the fallback):
+  {"jvm_udfs": [sql names]}
+then one JSON line per query:
   {"query": name, "secs": [..], "jobs": [..], "rows": N}
 """
 
@@ -45,10 +48,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-    from sparkrdf.session import get_spark
+    from sparkrdf.session import get_spark, jvm_udfs
 
     spark = get_spark("sparkrdf-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+    print(json.dumps({"jvm_udfs": sorted(jvm_udfs(spark))}), flush=True)
 
     import bench
     import __spark_entry__ as entrymod

@@ -3,8 +3,8 @@
 The reference derives every ArangoDB ``_key`` from
 ``str(farmhash.Fingerprint64(rdf_id))`` (reference: arango_rdf/main.py:1680-1707)
 and every edge key from ``Fingerprint64(f"{s_key}-{p_key}-{o_key}")``
-(main.py:2376, main.py:3015).  The ``farmhash`` wheel is not available in this
-environment, so we vendor the algorithm itself.
+(main.py:2376, main.py:3015).  The engine does not depend on the ``farmhash``
+C wheel; it vendors the algorithm itself.
 
 This is an independent re-implementation of the *published* FarmHash
 ``farmhashna::Hash64`` algorithm (Google FarmHash, Apache-2.0,
@@ -12,15 +12,15 @@ https://github.com/google/farmhash — ``Fingerprint64`` is defined as a
 platform-independent alias of ``farmhashna::Hash64``).  All arithmetic is
 modulo 2**64; multi-byte loads are little-endian.
 
-Validation strategy (no farmhash wheel available to cross-check):
+Validation strategy:
 - the algorithm is transcribed from the public specification;
 - structural invariants are pytest-pinned (empty input == K2, branch-boundary
   lengths 0/1/3/4/7/8/15/16/17/32/33/64/65/129 all distinct + stable);
 - golden digests for a fixed corpus are checked in (tests/golden) so any
   future refactor is regression-checked;
-- if the real ``farmhash`` wheel is importable (production clusters), it is
-  preferred automatically and the vendored version is cross-checked at
-  import time on a probe corpus.
+- both the scalar and the numpy batch implementation are pinned bit-for-bit
+  against Guava's ``farmHashFingerprint64`` (bundled with Spark) over every
+  length branch (tests/test_hashing.py).
 """
 
 from __future__ import annotations
@@ -194,10 +194,10 @@ def _fingerprint64_py(s: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# numpy-vectorized batch implementation (the hot path: ~25x the scalar
-# throughput — measured 27.6s -> ~1s for 9M IRIs at 2 cores). Same algorithm,
-# computed lane-parallel per length class; verified element-for-element
-# against the scalar implementation in tests (including a hypothesis sweep).
+# numpy-vectorized batch implementation (the pandas UDFs' hash: ~25x the
+# scalar throughput — measured 27.6s -> ~1s for 9M IRIs at 2 cores). Same
+# algorithm, computed lane-parallel per length class; pinned against Guava on
+# a random corpus covering every length class (tests/test_hashing.py).
 # ---------------------------------------------------------------------------
 
 import numpy as np
@@ -408,43 +408,11 @@ def fingerprint64_many(strings) -> np.ndarray:
     return out
 
 
-# Prefer the real C wheel when present (production clusters); cross-check the
-# vendored implementation against it on import so drift is caught immediately.
-# The import may fail (wheel absent in this sandbox) — that falls back quietly.
-# A cross-check MISMATCH, however, means our vendored algorithm is wrong and
-# every key the engine emits would diverge from the reference: fail loudly.
-try:  # pragma: no cover - wheel absent in this sandbox
-    import farmhash as _farmhash_c
-except ImportError:
-    _farmhash_c = None
-
-if _farmhash_c is not None:  # pragma: no cover - wheel absent in this sandbox
-    _PROBES = [b"", b"a", b"abc", b"http://example.com/Person#Bob", b"x" * 200]
-    for _p in _PROBES:
-        _want = _farmhash_c.Fingerprint64(_p.decode())
-        _got = _fingerprint64_py(_p)
-        if _want != _got:
-            raise AssertionError(
-                f"vendored Fingerprint64 diverges from farmhash wheel on "
-                f"{_p!r}: wheel={_want} vendored={_got}"
-            )
-
-    def fingerprint64(s: str | bytes) -> int:
-        """FarmHash Fingerprint64 (C wheel)."""
-        if isinstance(s, bytes):
-            s = s.decode("utf-8", "surrogatepass")
-        return _farmhash_c.Fingerprint64(s)
-
-    BACKEND = "farmhash-c"
-else:
-
-    def fingerprint64(s: str | bytes) -> int:
-        """FarmHash Fingerprint64 (vendored pure Python)."""
-        if isinstance(s, str):
-            s = s.encode("utf-8")
-        return _fingerprint64_py(s)
-
-    BACKEND = "pure-python"
+def fingerprint64(s: str | bytes) -> int:
+    """FarmHash Fingerprint64 of ``s`` (UTF-8 bytes of a str)."""
+    if isinstance(s, str):
+        s = s.encode("utf-8")
+    return _fingerprint64_py(s)
 
 
 @lru_cache(maxsize=1 << 16)
@@ -463,59 +431,26 @@ def edge_key(s_key: str, p_key: str, o_key: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Spark-side wrappers.  The hash is inherently per-string Python work, so the
-# strategy at scale is: (1) Arrow-batched pandas UDFs (no per-row serialization
-# overhead), (2) hash only *distinct* terms then broadcast/join the keys back,
-# (3) an LRU memo inside the batch for the Zipf-heavy terms (rdf:type et al.).
+# Spark-side wrappers. The production path is the JVM FarmHashKey UDF
+# (Guava, compiled by sparkrdf.session): the statement stream never leaves
+# the JVM. Without it (no javac, a cluster without the jar) the same call
+# shapes run as Arrow-batched pandas UDFs that hash each distinct string of
+# a batch once — and those are the reference the JVM path is tested against.
 # ---------------------------------------------------------------------------
 
 
-_JVM_UDF_SESSIONS: dict[str, bool] = {}
-
-
 def ensure_jvm_hash(session) -> bool:
-    """Register+verify the JVM farmhash UDF on ``session`` specifically.
+    """True when the JVM farmhash UDF is registered and verified on
+    ``session`` specifically (see :func:`sparkrdf.session.jvm_udfs`).
 
     Callers that analyze plans against a session OTHER than the active one
     (Structured Streaming's foreachBatch hands the callback a cloned session)
     must call this on the plan's session, or expressions built while the
     active session reports the UDF available fail analysis with
     UNRESOLVED_ROUTINE on the clone."""
-    return _jvm_hash_available(session)
+    from sparkrdf.session import jvm_udfs
 
-
-def _jvm_hash_available(active) -> bool:
-    """True when the JVM farmhash UDF (sparkrdf.FarmHashKey, built by
-    sparkrdf.session.ensure_farmhash_jar and shipped via spark.jars) is
-    registered AND verified against the vendored Python implementation.
-    Checked once per SESSION — not per application: UDF registration is
-    session-scoped and Structured Streaming's foreachBatch runs in a cloned
-    session where `sparkrdf_fh` is not yet registered (caching per-app made
-    every streaming micro-batch fail with UNRESOLVED_ROUTINE). Any failure
-    degrades to the Python UDFs."""
-    import os
-
-    if os.environ.get("SPARKRDF_NO_JVM_HASH"):
-        return False
-    # the JVM SparkSession object identifies the clone; the Python wrapper
-    # object is recreated per getActiveSession() call and can't be the key
-    app = (active.sparkContext.applicationId, active._jsparkSession.hashCode())
-    if app in _JVM_UDF_SESSIONS:
-        return _JVM_UDF_SESSIONS[app]
-    ok = False
-    try:
-        active.udf.registerJavaFunction(
-            "sparkrdf_fh", "sparkrdf.FarmHashKey", "string"
-        )
-        probe = "sparkrdf check é中"
-        got = active.sql(
-            "SELECT sparkrdf_fh(%s)" % ("'" + probe + "'")
-        ).first()[0]
-        ok = got == str(fingerprint64(probe))
-    except Exception:
-        ok = False
-    _JVM_UDF_SESSIONS[app] = ok
-    return ok
+    return "sparkrdf_fh" in jvm_udfs(session)
 
 
 def _jvm_udfs():
@@ -555,7 +490,7 @@ def _make_udfs():
         from sparkrdf.session import ensure_pyfiles
 
         ensure_pyfiles(active)
-        if _jvm_hash_available(active):
+        if ensure_jvm_hash(active):
             return _jvm_udfs()
     return _make_pandas_udfs()
 
@@ -616,10 +551,11 @@ def _make_pandas_udfs():
 
 
 def register_udfs():
-    """Return (farmhash_udf, edge_key_udf) pandas UDFs (lazy Spark import).
+    """Return (farmhash_udf, edge_key_udf) for the active session: the JVM
+    UDF wrappers when the session has them, else the pandas UDFs.
 
     Ships the package to executors first (see sparkrdf.session.ensure_pyfiles)
-    so the UDFs resolve when the driver wasn't launched with --py-files.
+    so the pandas UDFs resolve when the driver wasn't launched with --py-files.
     """
     return _make_udfs()[:2]
 

@@ -110,8 +110,10 @@ def with_term_keys(
     dangling, a quirk this engine does not reproduce). Duplicate (s,p,o)
     statements still collapse: they derive the same occurrence key.
 
-    The farmhash UDF is Arrow-batched and memoized per executor, so the
-    Zipf-heavy terms (rdf:type, hot predicates) cost one hash per batch.
+    The terms are hashed by the JVM FarmHashKey UDF when the session has
+    it; otherwise one Arrow-batched pandas UDF takes all three columns and
+    hashes each distinct string of a batch once, so the Zipf-heavy terms
+    (rdf:type, hot predicates) cost one hash per batch.
     """
     from sparkrdf.hashing import register_term_keys_udf
 

@@ -5,36 +5,74 @@ reference* — executors must be able to ``import sparkrdf``. Under
 ``spark-submit --py-files sparkrdf.zip`` that's automatic; for interactive /
 driver-embedded use, :func:`ensure_pyfiles` ships the package to executors via
 ``sc.addPyFile`` (idempotent per application).
+
+This module also owns the compiled JVM UDFs: the Java sources, the jar they
+build into (:func:`ensure_farmhash_jar`) and the per-session registry that
+says which of them run (:func:`jvm_udfs`).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
+import warnings
 import zipfile
 
 _SHIPPED: set[str] = set()
 
 
+def _write_atomic(path: str, write) -> None:
+    """``write(tmp)`` into a temp file of this writer's own next to ``path``,
+    then rename it over ``path``: concurrent writers never share a partial
+    file, and readers see the old file or the new one."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".", suffix=".tmp")
+    os.close(fd)
+    try:
+        write(tmp)
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide a shared cache
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+def _digest(parts) -> str:
+    """Short content key over (name, bytes) pairs."""
+    h = hashlib.sha256()
+    for name, data in parts:
+        h.update(f"{name}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()[:16]
+
+
 def package_zip(path: str | None = None) -> str:
-    """Zip the sparkrdf package (sources only) for --py-files / addPyFile."""
+    """Zip the sparkrdf package (sources only) for --py-files / addPyFile.
+
+    Without ``path`` the zip is cached in tmp under a name keyed on the
+    sources' content, so a cached zip always holds these sources; a given
+    ``path`` is always rewritten."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    if path is None:
-        path = os.path.join(tempfile.gettempdir(), "sparkrdf-pyfiles.zip")
     srcs = []
     for root, _dirs, files in os.walk(pkg_dir):
         for f in sorted(files):
             if f.endswith(".py"):
                 full = os.path.join(root, f)
                 rel = os.path.join("sparkrdf", os.path.relpath(full, pkg_dir))
-                srcs.append((full, rel))
-    newest = max(os.path.getmtime(s) for s, _ in srcs)
-    if not os.path.exists(path) or os.path.getmtime(path) < newest:
-        tmp = path + ".tmp"
+                with open(full, "rb") as fh:
+                    srcs.append((rel, fh.read()))
+    srcs.sort()  # os.walk's directory order is the filesystem's
+    if path is None:
+        path = os.path.join(tempfile.gettempdir(), f"sparkrdf-pyfiles-{_digest(srcs)}.zip")
+        if os.path.exists(path):
+            return path
+
+    def write(tmp):
         with zipfile.ZipFile(tmp, "w") as z:
-            for full, rel in srcs:
-                z.write(full, rel)
-        os.replace(tmp, path)
+            for rel, data in srcs:
+                z.writestr(rel, data)
+
+    _write_atomic(path, write)
     return path
 
 
@@ -154,34 +192,48 @@ public class VecSqDist implements UDF2<Seq<Object>, Seq<Object>, Double> {
 """
 
 
+_JAVA_SOURCES = {
+    "FarmHashKey": _FARMHASH_JAVA,
+    "VecDot": _VECOPS_JAVA,
+    "VecSqDist": _VECSQD_JAVA,
+}
+
+
+def _jar_complete(path: str) -> bool:
+    try:
+        with zipfile.ZipFile(path) as z:
+            names = set(z.namelist())
+    except (OSError, zipfile.BadZipFile):
+        return False
+    return all(f"sparkrdf/{cls}.class" in names for cls in _JAVA_SOURCES)
+
+
 def ensure_farmhash_jar() -> str | None:
-    """Compile the JVM farmhash UDF into a jar (cached in tmp; rebuilt when
-    this module is newer). Returns None when no javac is available — callers
-    fall back to the Arrow-batched Python UDFs."""
+    """Compile the JVM UDFs (FarmHashKey, VecDot, VecSqDist) into a jar,
+    cached in tmp under a name keyed on the three Java sources; a cached jar
+    is reused only when it holds all three classes. Returns None when no
+    javac is available or the compile fails — :func:`jvm_udfs` then reports
+    the Python/Catalyst fallbacks."""
     import shutil
     import subprocess
 
     javac = shutil.which("javac")
     if javac is None:
         return None
-    jar_path = os.path.join(tempfile.gettempdir(), "sparkrdf-farmhash.jar")
-    src_mtime = os.path.getmtime(os.path.abspath(__file__))
-    if os.path.exists(jar_path) and os.path.getmtime(jar_path) >= src_mtime:
+    key = _digest((cls, src.encode()) for cls, src in _JAVA_SOURCES.items())
+    jar_path = os.path.join(tempfile.gettempdir(), f"sparkrdf-farmhash-{key}.jar")
+    if _jar_complete(jar_path):
         return jar_path
-    try:
-        import pyspark
+    import pyspark
 
-        spark_jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    spark_jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    try:
         with tempfile.TemporaryDirectory() as tmp:
             src_dir = os.path.join(tmp, "sparkrdf")
             os.makedirs(src_dir)
             srcs = []
-            for name, code in (
-                ("FarmHashKey.java", _FARMHASH_JAVA),
-                ("VecDot.java", _VECOPS_JAVA),
-                ("VecSqDist.java", _VECSQD_JAVA),
-            ):
-                src = os.path.join(src_dir, name)
+            for cls, code in _JAVA_SOURCES.items():
+                src = os.path.join(src_dir, f"{cls}.java")
                 with open(src, "w", encoding="utf-8") as f:
                     f.write(code)
                 srcs.append(src)
@@ -193,16 +245,86 @@ def ensure_farmhash_jar() -> str | None:
                 capture_output=True,
                 timeout=120,
             )
-            tmp_jar = jar_path + ".tmp"
-            with zipfile.ZipFile(tmp_jar, "w") as z:
-                for root, _dirs, files in os.walk(out):
-                    for fn in sorted(files):
-                        full = os.path.join(root, fn)
-                        z.write(full, os.path.relpath(full, out))
-            os.replace(tmp_jar, jar_path)
-        return jar_path
-    except Exception:
+
+            def write(tmp_jar):
+                with zipfile.ZipFile(tmp_jar, "w") as z:
+                    for root, _dirs, files in os.walk(out):
+                        for fn in sorted(files):
+                            full = os.path.join(root, fn)
+                            z.write(full, os.path.relpath(full, out))
+
+            _write_atomic(jar_path, write)
+    except (OSError, subprocess.SubprocessError):
         return None
+    return jar_path
+
+
+_REGISTRY: dict[tuple, frozenset[str]] = {}
+
+
+def jvm_udfs(spark) -> frozenset[str]:
+    """SQL names of the JVM UDFs registered and probe-verified on ``spark``.
+
+    Registration is session-scoped (Structured Streaming's foreachBatch hands
+    its callback a cloned session), so the answer is cached per
+    (application, JVM session): the Python wrapper object is recreated per
+    getActiveSession() call and cannot be the key. All UDFs are checked in
+    one probe query; every UDF that is missing or fails its probe is named
+    in one warning, and its callers take their Python/Catalyst fallback."""
+    key = (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
+    if key in _REGISTRY:
+        return _REGISTRY[key]
+    from sparkrdf.hashing import fingerprint64
+
+    # SQL name -> (Java class, return type, probe that must be true). The
+    # probes pin what the callers rely on: FarmHashKey equals the vendored
+    # Fingerprint64 on non-ASCII UTF-8; VecDot widens float to double before
+    # multiplying and goes NULL on a length mismatch.
+    fh_probe = "sparkrdf check é中"
+    f32 = "CAST(CAST({} AS FLOAT) AS DOUBLE)".format
+    specs = {
+        "sparkrdf_fh": (
+            "sparkrdf.FarmHashKey", "string",
+            f"sparkrdf_fh('{fh_probe}') = '{fingerprint64(fh_probe)}'",
+        ),
+        "sparkrdf_vdot": (
+            "sparkrdf.VecDot", "double",
+            "sparkrdf_vdot(array(1.5D, 2.5D), array(2.0D, 4.0D)) = 13.0D"
+            " AND sparkrdf_vdot(array(1.0D), array(1.0D, 2.0D)) IS NULL"
+            " AND sparkrdf_vdot(array(CAST(0.1 AS FLOAT)), array(CAST(0.3 AS FLOAT)))"
+            f" = {f32(0.1)} * {f32(0.3)}",
+        ),
+        "sparkrdf_vsqd": (
+            "sparkrdf.VecSqDist", "double",
+            "sparkrdf_vsqd(array(1.0D, 3.0D), array(2.0D, 1.0D)) = 5.0D",
+        ),
+    }
+    errors: dict[str, str] = {}
+    for name, (cls, rtype, _probe) in specs.items():
+        try:
+            spark.udf.registerJavaFunction(name, cls, rtype)
+        except Exception as e:  # class not on the classpath: fall back
+            errors[name] = type(e).__name__
+    live = [n for n in specs if n not in errors]
+    if live:
+        try:
+            row = spark.sql(
+                "SELECT " + ", ".join(f"{specs[n][2]} AS {n}" for n in live)
+            ).first()
+        except Exception as e:  # a UDF that throws: fall back
+            errors.update(dict.fromkeys(live, type(e).__name__))
+        else:
+            errors.update({n: "wrong probe value" for n in live if row[n] is not True})
+    if errors:
+        warnings.warn(
+            "sparkrdf: JVM UDFs unavailable, using the Python/Catalyst fallback for "
+            + ", ".join(f"{n} ({specs[n][0]}: {why})" for n, why in sorted(errors.items())),
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    ok = frozenset(n for n in specs if n not in errors)
+    _REGISTRY[key] = ok
+    return ok
 
 
 def _shm_has_headroom(min_free_bytes: int = 8 << 30) -> bool:
@@ -256,19 +378,18 @@ def get_spark(app_name: str = "sparkrdf", master: str | None = None, **extra_con
         shm = "/dev/shm/sparkrdf-local"
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
-    # JVM farmhash UDF jar: spark.jars ships it to executors; the driver
-    # needs it on its own classpath BEFORE JVM launch for
-    # registerJavaFunction to resolve the class (on a real cluster, pass
-    # --jars at submit; everything degrades to the Python UDFs otherwise)
-    if not os.environ.get("SPARKRDF_NO_JVM_HASH"):
-        fh_jar = ensure_farmhash_jar()
-        if fh_jar:
-            prior = extra_conf.get("spark.jars", "")
-            extra_conf["spark.jars"] = f"{prior},{fh_jar}" if prior else fh_jar
-            prior_cp = extra_conf.get("spark.driver.extraClassPath", "")
-            extra_conf["spark.driver.extraClassPath"] = (
-                f"{prior_cp}:{fh_jar}" if prior_cp else fh_jar
-            )
+    # JVM UDF jar: spark.jars ships it to executors; the driver needs it on
+    # its own classpath BEFORE JVM launch for jvm_udfs to resolve the
+    # classes (on a real cluster, pass --jars at submit; jvm_udfs reports
+    # the fallbacks otherwise)
+    fh_jar = ensure_farmhash_jar()
+    if fh_jar:
+        prior = extra_conf.get("spark.jars", "")
+        extra_conf["spark.jars"] = f"{prior},{fh_jar}" if prior else fh_jar
+        prior_cp = extra_conf.get("spark.driver.extraClassPath", "")
+        extra_conf["spark.driver.extraClassPath"] = (
+            f"{prior_cp}:{fh_jar}" if prior_cp else fh_jar
+        )
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):

@@ -2,7 +2,7 @@
 
 - brute_force_topk: exact cosine top-k against a query vector taken from the
   table itself (so the DuckDB oracle can reference the same vector without
-  literals). Dot products run in codegen via zip_with/aggregate.
+  literals).
 - blocked_near_dup: cosine near-duplicate pairs within label blocks — the
   pre-partitioned (coarse-quantized) variant: at 100 TB the label plays the
   role of an IVF cell id, so the pair join is block-local instead of a full
@@ -11,105 +11,63 @@
   quantizer"), probe the closest n_probe cells, exact search inside. The
   shuffle is bounded by cell size, not table size.
 
-Cosines are rounded (6 d.p.) so float noise cannot flip the oracle's
+Every vector operator scores through two folds, :func:`_dot` and
+:func:`_sqdist`. Each runs as a compiled JVM UDF (sparkrdf.VecDot /
+VecSqDist) when the session has it, else as the Catalyst
+``aggregate(zip_with)`` fold; both widen every element to double before the
+arithmetic and accumulate left to right from +0.0, so the two give the same
+bits. Cosines are rounded (6 d.p.) so float noise cannot flip the oracle's
 value-hash comparison.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-_VEC_UDF_SESSIONS: dict = {}
+from sparkrdf.session import jvm_udfs
 
 
-def _vec_udfs_available() -> bool:
-    """True when the compiled JVM vector-fold UDFs (sparkrdf.VecDot /
-    VecSqDist, built into the farmhash jar by sparkrdf.session) are
-    registered AND probe-verified on the active session. The JVM loop has
-    floating-point semantics IDENTICAL to the Catalyst aggregate(zip_with)
-    fold (left-to-right accumulation, exact float->double widening, the
-    zip_with null/length contract), but runs as a JIT-compiled loop where
-    the HOF path is interpreted per element — the dominant cost of the
-    pair-scoring operators. Checked once per session (the streaming-clone
-    caveat of sparkrdf.hashing applies); any failure degrades to the HOF
-    path. SPARKRDF_NO_JVM_VECOPS=1 opts out."""
-    import os
-
-    from pyspark.sql import SparkSession
-
-    if os.environ.get("SPARKRDF_NO_JVM_VECOPS"):
-        return False
+def _fold(udf: str, a: Column, b: Column, term) -> Column:
+    """Left-to-right sum from +0.0 of ``term(x, y)`` over the element pairs,
+    each element widened to double first: the JVM UDF ``udf`` when the
+    active session has it (a JIT-compiled loop), else the Catalyst
+    ``aggregate(zip_with)`` form (interpreted per element). Same bits either
+    way, and the zip_with contract on both: a NULL array, a NULL element or
+    a length mismatch gives NULL. A fixed-dim unrolled chain was measured
+    and regressed 2-5× (a 64-term expression tree per product inflates
+    Catalyst and generated-code size past the JIT sweet spot: sim_lsh_topk
+    1.4 s → 8.0 s), so the fold stays a single expression."""
     active = SparkSession.getActiveSession()
-    if active is None:
-        return False
-    key = (active.sparkContext.applicationId, active._jsparkSession.hashCode())
-    if key in _VEC_UDF_SESSIONS:
-        return _VEC_UDF_SESSIONS[key]
-    ok = False
-    try:
-        active.udf.registerJavaFunction("sparkrdf_vdot", "sparkrdf.VecDot", "double")
-        active.udf.registerJavaFunction("sparkrdf_vsqd", "sparkrdf.VecSqDist", "double")
-        row = active.sql(
-            "SELECT sparkrdf_vdot(array(1.5D, 2.5D), array(2.0D, 4.0D)), "
-            "sparkrdf_vdot(array(1.0D), array(1.0D, 2.0D)), "
-            "sparkrdf_vdot(array(CAST(0.1 AS FLOAT)), array(CAST(0.3 AS FLOAT))), "
-            "sparkrdf_vsqd(array(1.0D, 3.0D), array(2.0D, 1.0D))"
-        ).first()
-        import math
-
-        ok = (
-            row[0] == 13.0
-            and row[1] is None
-            and row[3] == 5.0
-            and math.isclose(row[2], 0.1 * 0.3, rel_tol=1e-6)
-        )
-    except Exception:
-        ok = False
-    _VEC_UDF_SESSIONS[key] = ok
-    return ok
-
-
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential left-to-right dot-product fold.
-
-    ``dim`` is accepted (and ignored) for call-site stability: a fixed-dim
-    UNROLLED chain was measured this round and REGRESSED 2-5× — a 64-term
-    expression tree per product multiplies Catalyst optimization time and
-    generated-code size past the JIT sweet spot (sim_lsh_topk 1.4 s → 8.0 s
-    with 640 unrolled terms), far outweighing the interpreted-HOF overhead
-    it removed. The fold stays the single-expression form."""
-    if _vec_udfs_available():
-        return F.call_udf("sparkrdf_vdot", a, b)
+    if active is not None and udf in jvm_udfs(active):
+        return F.call_udf(udf, a, b)
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: term(x.cast("double"), y.cast("double"))),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
-    # self-dot == the HOF fold acc + v.cast(double)*v, element for element
-    if _vec_udfs_available():
-        return F.sqrt(F.call_udf("sparkrdf_vdot", a, a))
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v.cast("double") * v)
-    )
+def _dot(a: Column, b: Column) -> Column:
+    return _fold("sparkrdf_vdot", a, b, lambda x, y: x * y)
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    if _vec_udfs_available():
-        # VecDot widens each element float->double exactly as the explicit
-        # transform casts do
-        return F.call_udf("sparkrdf_vdot", a, b) / (_norm(a) * _norm(b))
-    return _dot(
-        F.transform(a, lambda v: v.cast("double")), F.transform(b, lambda v: v.cast("double"))
-    ) / (_norm(a) * _norm(b))
+def _sqdist(a: Column, b: Column) -> Column:
+    """Squared euclidean distance — the identical accumulation order the
+    DuckDB oracle's list_sum uses."""
+    return _fold("sparkrdf_vsqd", a, b, lambda x, y: (x - y) * (x - y))
+
+
+def _norm(a: Column) -> Column:
+    return F.sqrt(_dot(a, a))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_force_topk(
     emb: DataFrame, query_id: int = 0, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine vs the row with id == query_id.
 
@@ -121,7 +79,7 @@ def brute_force_topk(
         .filter(F.col(id_col) != query_id)
         .select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score"),
+            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
         )
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
@@ -134,7 +92,6 @@ def blocked_near_dup(
     vec_col: str = "embedding",
     block_col: str = "label",
     max_block_rows: int = 10_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Cosine near-dup pairs within blocks: (id_a, id_b, score ≥ threshold).
 
@@ -160,13 +117,13 @@ def blocked_near_dup(
     )
     a = emb.select(
         F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"),
-        dv.alias("va"), _norm(F.col(vec_col), dim).alias("na"),
+        dv.alias("va"), _norm(F.col(vec_col)).alias("na"),
     ).join(sizes, "blk").withColumn(
         "salt", F.pmod(F.xxhash64(F.col("id_a")), F.col("n_salt")).cast("int")
     ).drop("n_salt")
     b = emb.select(
         F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-        dv.alias("vb"), _norm(F.col(vec_col), dim).alias("nb"),
+        dv.alias("vb"), _norm(F.col(vec_col)).alias("nb"),
     ).join(sizes, "blk").withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1))
     ).drop("n_salt")
@@ -177,7 +134,7 @@ def blocked_near_dup(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 6
+                _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("score"),
         )
         .filter(F.col("score") >= threshold)
@@ -192,7 +149,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "label",
-    dim: int | None = None,
 ) -> DataFrame:
     """Two-stage approximate search: probe the n_probe closest cells (by
     centroid cosine), exact cosine inside. Returns (vec_id, score)."""
@@ -214,7 +170,7 @@ def ivf_topk(
     )
     probed = (
         cells.crossJoin(F.broadcast(q))
-        .select("cell", cosine(F.col("centroid"), F.col("qvec"), dim).alias("cscore"))
+        .select("cell", cosine(F.col("centroid"), F.col("qvec")).alias("cscore"))
         .orderBy(F.col("cscore").desc(), F.col("cell").asc())
         .limit(n_probe)
     )
@@ -222,7 +178,7 @@ def ivf_topk(
         F.broadcast(probed.select(F.col("cell").alias(cell_col))), cell_col, "inner"
     ).filter(F.col(id_col) != query_id)
     scored = cand.crossJoin(F.broadcast(q.select("qvec"))).select(
-        F.col(id_col), F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score")
+        F.col(id_col), F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score")
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
@@ -244,19 +200,10 @@ def lsh_hyperplanes(dim: int = 64, n_planes: int = LSH_PLANES) -> list[list[floa
 
 def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit LSH signature: bit p = (w_p · v) > 0, packed into a long.
-    Pure codegen — one zip_with fold per plane, no UDF."""
-    use_jvm = _vec_udfs_available()
+    One :func:`_dot` fold per plane."""
     sig = F.lit(0).cast("long")
     for p, w in enumerate(planes):
-        warr = F.array(*[F.lit(x) for x in w])
-        if use_jvm:
-            dot = F.call_udf("sparkrdf_vdot", vec, warr)
-        else:
-            dot = F.aggregate(
-                F.zip_with(vec, warr, lambda a, b: a.cast("double") * b),
-                F.lit(0.0).cast("double"),
-                lambda acc, v: acc + v,
-            )
+        dot = _dot(vec, F.array(*[F.lit(x) for x in w]))
         sig = sig + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
     return sig
 
@@ -299,22 +246,9 @@ def lsh_cosine_topk(
     cand = sigs.join(F.broadcast(probed), "sig").filter(F.col(id_col) != query_id)
     scored = cand.crossJoin(F.broadcast(q.select("qvec"))).select(
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score"),
+        F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-
-
-def _sqdist(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Squared euclidean distance — sequential fold over dimensions, the
-    identical accumulation order the DuckDB oracle's list_sum uses.
-    (``dim`` ignored — see :func:`_dot` for why unrolling regressed.)"""
-    if _vec_udfs_available():
-        return F.call_udf("sparkrdf_vsqd", a, b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
 
 
 def _mean_centroids(df: DataFrame, key_col: str, vec_col: str) -> DataFrame:
@@ -344,7 +278,6 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     init_col: str = "label",
-    dim: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding column with deterministic
     initialization: the starting centroids are the per-``init_col`` means
@@ -380,7 +313,7 @@ def kmeans_assign(
     ).localCheckpoint(eager=True)
 
     def assign(cents: DataFrame) -> DataFrame:
-        d = F.round(_sqdist(F.col("dv"), F.col("centroid"), dim), 9)
+        d = F.round(_sqdist(F.col("dv"), F.col("centroid")), 9)
         return (
             vecs.crossJoin(F.broadcast(cents))
             .select(F.col(id_col), F.col("cluster"), d.alias("dist"))
@@ -408,7 +341,6 @@ def knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Distributed kNN self-join: for EVERY row, its top-k cosine
     neighbors — the all-rows generalization of :func:`brute_force_topk`
@@ -436,7 +368,7 @@ def knn_join(
         cell.alias("_cell"),
         F.col(id_col).alias("_id"),
         dv.alias("_v"),
-        _norm(F.col(vec_col), dim).alias("_n"),
+        _norm(F.col(vec_col)).alias("_n"),
         # a zero vector has no direction: its cosine is NaN, and NaN sorts
         # ABOVE all doubles in a descending window — it would rank as the
         # #1 neighbor of every row in its cell. Exclude it on both sides.
@@ -456,7 +388,7 @@ def knn_join(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 6
+                _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("score"),
         )
     )

@@ -653,18 +653,18 @@ def test_knn_join_exact_small(spark):
 def test_jvm_vector_folds_bit_equal_hof(spark, monkeypatch):
     """The compiled JVM vector folds (sparkrdf.VecDot / VecSqDist) must be
     BIT-equal to the Catalyst aggregate(zip_with) folds they replace —
-    same left-to-right accumulation, exact float->double widening, the
-    zip_with null/length contract — across dots, norms, cosines, squared
-    distances and the LSH signature."""
+    same left-to-right accumulation, float->double widening before the
+    arithmetic, the zip_with null/length contract — across dots, norms,
+    cosines, squared distances and the LSH signature, on array<float>
+    columns as stored. Hard-gated: conftest builds the jar, so missing JVM
+    folds are a build regression, not a skip."""
     import struct
 
     import sparkrdf.similarity as S
     from pyspark.sql import functions as F
+    from sparkrdf.session import jvm_udfs
 
-    if not S._vec_udfs_available():  # no javac in this environment
-        import pytest
-
-        pytest.skip("JVM vector UDFs unavailable")
+    assert {"sparkrdf_vdot", "sparkrdf_vsqd"} <= jvm_udfs(spark), "JVM vector UDFs missing"
 
     rows = [
         (1, [1.0, 0.5, -0.25, 3.0]),
@@ -673,43 +673,48 @@ def test_jvm_vector_folds_bit_equal_hof(spark, monkeypatch):
         # no all-zero row: cosine's division is ANSI-strict on BOTH paths
         # (knn_join itself filters zero norms before scoring)
         (4, [1e-30, 0.0, 0.0, 0.0]),
+        # float products that round differently in float than in double
+        (5, [0.1, 0.3, 1.7, -2.2]),
     ]
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    other = F.array(*[F.lit(x).cast("float") for x in (0.3, 0.7, 0.11, 5.5)])
 
     def proj():
-        dv = F.col("embedding").cast("array<double>")
+        e = F.col("embedding")
         return emb.select(
             "vec_id",
-            S._dot(dv, F.reverse(dv)).alias("d"),
-            S._norm(F.col("embedding")).alias("n"),
-            S.cosine(F.col("embedding"), F.reverse(F.col("embedding"))).alias("c"),
-            S._sqdist(dv, F.reverse(dv)).alias("q"),
-            S.lsh_signature(
-                F.col("embedding"), S.lsh_hyperplanes(dim=4, n_planes=6)
-            ).alias("sig"),
+            S._dot(e, F.reverse(e)).alias("d"),
+            S._dot(e, other).alias("d2"),
+            S._norm(e).alias("n"),
+            S.cosine(e, F.reverse(e)).alias("c"),
+            S._sqdist(e, other).alias("q"),
+            S.lsh_signature(e, S.lsh_hyperplanes(dim=4, n_planes=6)).alias("sig"),
         )
 
-    jvm = sorted(proj().collect())
-    monkeypatch.setenv("SPARKRDF_NO_JVM_VECOPS", "1")
-    hof = sorted(proj().collect())
+    def run():
+        df = proj()
+        return "sparkrdf_vdot" in df._jdf.queryExecution().analyzed().toString(), sorted(df.collect())
+
+    used_jvm, jvm = run()
+    monkeypatch.setattr(S, "jvm_udfs", lambda session: frozenset())
+    hof_used_jvm, hof = run()
+    assert used_jvm and not hof_used_jvm
 
     def bits(x):
         return None if x is None else struct.pack("<d", x)
 
     for a, b in zip(jvm, hof):
         assert a["vec_id"] == b["vec_id"]
-        for f in ("d", "n", "q"):
-            assert bits(a[f]) == bits(b[f]), (a["vec_id"], f)
-        assert bits(a["c"]) == bits(b["c"]), a["vec_id"]
+        for f in ("d", "d2", "n", "c", "q"):
+            assert bits(a[f]) == bits(b[f]), (a["vec_id"], f, a[f], b[f])
         assert a["sig"] == b["sig"]
 
     # zip_with length contract: mismatched lengths go NULL on both paths
     two = spark.createDataFrame(
         [([1.0, 2.0], [1.0, 2.0, 3.0])], "a array<double>, b array<double>"
     )
-    monkeypatch.delenv("SPARKRDF_NO_JVM_VECOPS")
     assert two.select(S._dot(F.col("a"), F.col("b"))).first()[0] is None
-    monkeypatch.setenv("SPARKRDF_NO_JVM_VECOPS", "1")
+    monkeypatch.undo()
     assert two.select(S._dot(F.col("a"), F.col("b"))).first()[0] is None
 
 

@@ -8,7 +8,7 @@ branch (test_cross_check_guava_farmhash below). The GOLDENS table is a
 fast regression net; all its values have been confirmed against Guava.
 """
 
-from sparkrdf.hashing import K2, edge_key, farmhash_key, fingerprint64
+from sparkrdf.hashing import K2, edge_key, farmhash_key, fingerprint64, fingerprint64_many
 
 # regression goldens (generated once from this implementation; any change to
 # the algorithm must reproduce them bit-for-bit)
@@ -76,13 +76,19 @@ def test_cross_check_guava_farmhash(spark):
     lens = [0, 1, 2, 3, 4, 7, 8, 9, 15, 16, 17, 24, 31, 32, 33, 47, 48, 49,
             63, 64, 65, 80, 96, 127, 128, 129, 192, 255, 256, 257, 1000, 4096]
     rng = random.Random(0xFA12)
-    for n in lens:
-        for sample in range(3):
-            b = bytes(rng.randrange(256) for _ in range(n))
-            assert fingerprint64(b) == guava(b), (n, sample, b[:16].hex())
+    corpus = [bytes(rng.randrange(256) for _ in range(n)) for n in lens for _ in range(3)]
+    want = [guava(b) for b in corpus]
+    for b, w in zip(corpus, want):
+        assert fingerprint64(b) == w, (len(b), b[:16].hex())
+    # the numpy batch hash (the pandas UDFs' path) over the same corpus in
+    # one call: every length class in one batch, at unaligned offsets
+    got = [int(v) for v in fingerprint64_many(corpus)]
+    for b, g, w in zip(corpus, got, want):
+        assert g == w, (len(b), b[:16].hex())
     # unicode path: utf-8 bytes
     s = "schön–ユニコード✓" * 20  # > 64 utf-8 bytes
     assert fingerprint64(s) == guava(s.encode("utf-8"))
+    assert int(fingerprint64_many([s])[0]) == guava(s.encode("utf-8"))
 
 
 def test_jvm_and_python_udf_paths_agree(spark):
@@ -93,13 +99,13 @@ def test_jvm_and_python_udf_paths_agree(spark):
     from pyspark.sql import functions as F
 
     from sparkrdf.hashing import (
-        _jvm_hash_available,
         _jvm_udfs,
         _make_pandas_udfs,
+        ensure_jvm_hash,
         fingerprint64,
     )
 
-    assert _jvm_hash_available(spark), "JVM farmhash UDF missing from test session"
+    assert ensure_jvm_hash(spark), "JVM farmhash UDF missing from test session"
     jfh, jek, jtk = _jvm_udfs()
     pfh, pek, ptk = _make_pandas_udfs()
 
