@@ -2758,22 +2758,15 @@ def q_kg_rdfs_delta(spark, sf_dir):
     # the two materializations are independent: build them on concurrent
     # driver threads so the second's jobs back-fill the first's stragglers
     # (guide §2.6); the delta-sized anti-join then runs as before
-    from concurrent.futures import ThreadPoolExecutor
+    from sparkrdf.session import run_concurrently
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_old = pool.submit(
-            rdfs_materialize,
-            iri_triples(docs.filter(F.col("doc_id") % 10 != 0)), onto,
-            materialize=True,
-        )
-        f_new = pool.submit(
-            rdfs_materialize,
-            iri_triples(docs.filter(F.col("doc_id") % 10 == 0)), onto,
-            materialize=True,
-        )
-        closure, new = f_old.result(), f_new.result()
-    delta = iri_triples(docs.filter(F.col("doc_id") % 10 == 0))
-    return rdfs_materialize_delta(closure, delta, onto, delta_closure=new)
+    old_triples = iri_triples(docs.filter(F.col("doc_id") % 10 != 0))
+    new_triples = iri_triples(docs.filter(F.col("doc_id") % 10 == 0))
+    closure, new = run_concurrently(
+        lambda: rdfs_materialize(old_triples, onto, materialize=True),
+        lambda: rdfs_materialize(new_triples, onto, materialize=True),
+    )
+    return rdfs_materialize_delta(closure, new_triples, onto, delta_closure=new)
 
 
 def q_kg_char_sets(spark, sf_dir):

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkrdf.localdf import local_rows_df
+from sparkrdf.session import run_concurrently
 
 
 def write_table(df: DataFrame, path: str, partition_by: str | None = "collection"):
@@ -92,7 +93,9 @@ def write_graph(
     """Materialize {vertices, edges, edge_definitions} under ``base``.
 
     Returns the written manifest. Idempotent per run_id: writes are
-    overwrite-mode per table, the manifest unions with prior imports.
+    overwrite-mode per table, the manifest unions with prior imports. The
+    five Spark actions run concurrently, under the contract in
+    :mod:`sparkrdf.resume`'s docstring; the manifest and lineage follow.
     """
     from sparkrdf.fsutil import fs_exists, fs_mkdirs, fs_read_text, fs_write_text
 
@@ -104,26 +107,27 @@ def write_graph(
     # aggregation: vertex-ONLY collections (Property, Class, orphan
     # resources) never appear as edge endpoints, and the manifest must
     # record them or a manifest-driven export loses their documents
-    by_pid_col = (
-        graph["vertices"]
+    by_pid_col, _, e_counts, _, edef_rows = run_concurrently(
+        lambda: graph["vertices"]
         .groupBy(F.spark_partition_id().alias("pid"), "collection")
         .count()
-        .collect()
+        .collect(),
+        lambda: write_table(graph["vertices"], posixpath.join(base, "vertices")),
+        lambda: partition_counts(graph["edges"]),
+        lambda: write_table(graph["edges"], posixpath.join(base, "edges")),
+        lambda: graph["edge_definitions"].collect(),
     )
     v_rows: dict[int, int] = {}
     for r in by_pid_col:
         v_rows[r["pid"]] = v_rows.get(r["pid"], 0) + r["count"]
     v_counts = sorted(v_rows.items())
-    write_table(graph["vertices"], posixpath.join(base, "vertices"))
-    e_counts = partition_counts(graph["edges"])
-    write_table(graph["edges"], posixpath.join(base, "edges"))
 
     manifest_path = posixpath.join(base, f"{name}.manifest.json")
     prior = {}
     if fs_exists(spark, manifest_path):
         prior = json.loads(fs_read_text(spark, manifest_path))
     existing = prior.get("edge_definitions", {})
-    edefs = merge_edge_definitions(existing, [r.asDict() for r in graph["edge_definitions"].collect()])
+    edefs = merge_edge_definitions(existing, [r.asDict() for r in edef_rows])
     v_cols = sorted(
         set(prior.get("vertex_collections", [])) | {r["collection"] for r in by_pid_col}
     )

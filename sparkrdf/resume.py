@@ -28,6 +28,20 @@ are uploaded with :func:`sparkrdf.localdf.local_rows_df`, a JVM local
 relation, so the append starts no Python worker. A resumed stage reads its
 checkpoint with the schema inferred from the files.
 
+Concurrency contract (shared by :func:`sparkrdf.io.write_graph`):
+
+- the tables of one stage share no data dependency, so they are written
+  concurrently, one driver thread per table
+  (:func:`sparkrdf.session.run_concurrently`); each thread runs its table's
+  whole chain: write, read-back, per-partition count, ``.metrics.json``;
+- the commit marker comes last: ``.outputs.json`` is written only after
+  every table committed, and if any table fails the error is raised after
+  the sibling threads finish, with no marker, so the stage reruns whole;
+- the one lineage append follows the commit marker and covers all tables;
+- the threads inherit the caller's job group, job description and local
+  properties, so every job is attributed to the caller as before. Their
+  jobs overlap, so their summed job time exceeds the caller's wall time.
+
 Scale note: the checkpoint write is a full materialization per stage — at
 100 TB that is exactly what you want between the expensive phases (NER,
 linking, RPT) anyway, because it is simultaneously the shuffle barrier that
@@ -43,12 +57,14 @@ from __future__ import annotations
 
 import json
 import posixpath
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from sparkrdf.fsutil import fs_delete, fs_exists, fs_mkdirs, fs_read_text, fs_write_text
 from sparkrdf.io import partition_counts, write_lineage
+from sparkrdf.session import run_concurrently
 
 
 class ResumableJob:
@@ -114,19 +130,23 @@ class ResumableJob:
         fs_delete(self.spark, base)
         tables = fn()
         fs_mkdirs(self.spark, base)
-        out, done = {}, []
-        for k, df in tables.items():
+
+        def write(k: str, df: DataFrame):
             p = posixpath.join(base, k)
-            out[k] = self._checkpoint(df, p)
-            done.append(self._counts(f"{name}/{k}", p, out[k], "computed"))
-        # commit marker for the stage as a whole: written LAST, so a crash
-        # between table writes leaves no .outputs.json and the stage reruns
-        fs_write_text(self.spark, keys_path, json.dumps(sorted(tables.keys())))
-        self._commit(done)
+            back = self._checkpoint(df, p)
+            return back, self._counts(f"{name}/{k}", p, back, "computed")
+
         release = getattr(tables, "release", None)
-        if callable(release):
-            release()
-        return out
+        try:
+            written = run_concurrently(*(partial(write, k, df) for k, df in tables.items()))
+            # commit marker for the stage as a whole: written LAST, so a failed
+            # or crashed table write leaves no .outputs.json and the stage reruns
+            fs_write_text(self.spark, keys_path, json.dumps(sorted(tables.keys())))
+            self._commit([counts for _, counts in written])
+        finally:
+            if callable(release):
+                release()
+        return {k: back for k, (back, _) in zip(tables, written)}
 
     def _checkpoint(self, df: DataFrame, path: str) -> DataFrame:
         """Write ``df`` to ``path``; read it back ONCE with the schema just

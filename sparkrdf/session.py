@@ -8,7 +8,8 @@ driver-embedded use, :func:`ensure_pyfiles` ships the package to executors via
 
 This module also owns the compiled JVM UDFs: the Java sources, the jar they
 build into (:func:`ensure_farmhash_jar`) and the per-session registry that
-says which of them run (:func:`jvm_udfs`).
+says which of them run (:func:`jvm_udfs`), and the one way the package runs
+independent Spark jobs at the same time (:func:`run_concurrently`).
 """
 
 from __future__ import annotations
@@ -325,6 +326,39 @@ def jvm_udfs(spark) -> frozenset[str]:
     ok = frozenset(n for n in specs if n not in errors)
     _REGISTRY[key] = ok
     return ok
+
+
+def run_concurrently(*fns) -> list:
+    """Call each of ``fns`` on its own driver thread; return their results
+    in argument order.
+
+    The threads are ``pyspark.InheritableThread``\\ s: each starts with the
+    caller's local properties (job group, job description, scheduler pool),
+    so a job started from a thread is attributed exactly as if the caller
+    had started it. Every thread is joined before anything is raised; then
+    the first failure in argument order is re-raised. Spark's scheduler runs
+    the threads' jobs side by side, so jobs that are each too small to fill
+    the cluster overlap instead of queueing behind each other."""
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(fns)
+    errors: list = [None] * len(fns)
+
+    def call(i):
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [InheritableThread(target=call, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 def _shm_has_headroom(min_free_bytes: int = 8 << 30) -> bool:

@@ -418,11 +418,14 @@ def parse_ttl_file(path: str, bnode_prefix: str | None = None) -> list[tuple]:
 
 
 def statements_df(spark, rows: list[tuple]):
-    """Statement rows → Spark DataFrame with the canonical schema."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    """Statement rows → Spark DataFrame with the canonical schema, uploaded
+    through :func:`sparkrdf.localdf.local_rows_df`: a JVM local relation,
+    so its consumers start no Python worker (BENCH.md has the A/B)."""
+    from pyspark.sql.types import StringType
 
-    schema = StructType([StructField(c, StringType(), True) for c in STATEMENT_COLUMNS])
-    return spark.createDataFrame(rows, schema)
+    from sparkrdf.localdf import local_rows_df
+
+    return local_rows_df(spark, rows, [(c, StringType()) for c in STATEMENT_COLUMNS])
 
 
 # ---------------------------------------------------------------------------

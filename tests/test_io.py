@@ -1,4 +1,5 @@
-"""Writer / manifest / merge-by-key / lineage tests."""
+"""Writer / manifest / merge-by-key / lineage tests, and the job group of
+the build's concurrent jobs."""
 
 import json
 import os
@@ -174,3 +175,31 @@ def test_write_graph_file_uri_roundtrip(spark, tmp_path):
     g = read_graph(spark, base)
     assert g["vertices"].count() == 1 and g["edges"].count() == 1
     assert g["manifest"]["edge_definitions"]["knows"]["from"] == ["Person"]
+
+
+def test_build_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """run_extract_job and write_graph start jobs from driver threads; every
+    one of them is in the caller's job group, none is left without one."""
+    from sparkrdf.pages import synthesize_pages
+    from sparkrdf.resume import run_extract_job
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    pages = synthesize_pages(spark, 40)
+    drain(60_000)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("build-in-threads", "run_extract_job + write_graph")
+    try:
+        tables, _ = run_extract_job(spark, pages, str(tmp_path / "ckpt"))
+        write_graph(
+            {k: tables[k] for k in ("vertices", "edges", "edge_definitions")},
+            str(tmp_path / "out"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain(60_000)
+    # statements + 3 rpt tables (write + counts each) + 5 write_graph actions
+    assert len(tracker.getJobIdsForGroup("build-in-threads")) >= 13
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

@@ -2,9 +2,11 @@
 "checkpoint-resumable with per-partition lineage and triple-count metrics".
 
 Covers: fresh run, exact resume (transforms NOT re-invoked), crash-artifact
-recovery (uncommitted checkpoint recomputed), and lineage/metrics contents.
+recovery (uncommitted checkpoint recomputed), a table failing while its
+siblings are written concurrently, and lineage/metrics contents.
 """
 
+import json
 import os
 import shutil
 
@@ -208,3 +210,43 @@ def test_checkpoint_root_as_file_uri(spark, pages, tmp_path):
     tables2, metrics2 = run_extract_job(spark, pages, ckpt, run_id="r2")
     assert all(m["status"] == "resumed" for m in metrics2)
     assert _table_fingerprint(tables2["statements"]) == fp1
+
+
+def test_failed_table_leaves_stage_uncommitted(spark, tmp_path):
+    """One table of a multi-table stage fails at execution: the error is
+    raised after the sibling tables finished, the stage gets no commit
+    marker and no lineage row, and a rerun recomputes every table."""
+    from pyspark.sql import functions as F
+
+    ckpt = str(tmp_path / "ckpt")
+    base = os.path.join(ckpt, "stages", "multi")
+
+    def tables(fail):
+        bad = F.raise_error(F.lit("injected table failure")).cast("long") if fail else F.col("id")
+        return {
+            "a": spark.range(0, 2000, numPartitions=4),
+            "b": spark.range(0, 10).select(bad.alias("id")),
+            "c": spark.range(0, 300, numPartitions=2),
+        }
+
+    job = ResumableJob(spark, ckpt, run_id="r1")
+    with pytest.raises(Exception, match="injected table failure"):
+        job.multi_stage("multi", lambda: tables(True))
+    # the siblings ran to the end: committed and counted
+    for k in ("a", "c"):
+        assert os.path.exists(os.path.join(base, k, "_SUCCESS"))
+        assert os.path.exists(os.path.join(base, k, ".metrics.json"))
+    assert not os.path.exists(os.path.join(base, ".outputs.json"))
+    assert not os.path.exists(os.path.join(ckpt, "lineage"))
+    assert job.metrics() == []
+
+    job2 = ResumableJob(spark, ckpt, run_id="r2")
+    out = job2.multi_stage("multi", lambda: tables(False))
+    assert {m["stage"]: (m["status"], m["rows"]) for m in job2.metrics()} == {
+        "multi/a": ("computed", 2000),
+        "multi/b": ("computed", 10),
+        "multi/c": ("computed", 300),
+    }
+    assert out["b"].count() == 10
+    assert _lineage_rows(spark, ckpt, "r2", "computed") == {"multi/a": 2000, "multi/b": 10, "multi/c": 300}
+    assert json.loads(open(os.path.join(base, ".outputs.json")).read()) == ["a", "b", "c"]

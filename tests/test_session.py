@@ -1,12 +1,16 @@
-"""Content-keyed artifact caches in sparkrdf.session: a cached jar or zip is
-reused only when it holds what the current sources would build."""
+"""sparkrdf.session: content-keyed artifact caches (a cached jar or zip is
+reused only when it holds what the current sources would build) and the
+concurrent-jobs helper."""
 
 import os
 import shutil
 import tempfile
+import time
 import zipfile
 
-from sparkrdf.session import ensure_farmhash_jar, package_zip
+import pytest
+
+from sparkrdf.session import ensure_farmhash_jar, package_zip, run_concurrently
 
 CLASSES = {f"sparkrdf/{c}.class" for c in ("FarmHashKey", "VecDot", "VecSqDist")}
 
@@ -46,3 +50,42 @@ def test_stale_artifacts_are_rebuilt(tmp_path, monkeypatch):
     assert package_zip() == package_zip()
     assert os.path.dirname(package_zip()) == str(tmp_path)
     assert not [f for f in os.listdir(tmp_path) if f.endswith(".tmp")]
+
+
+def test_run_concurrently_orders_results_and_joins_before_raising(spark):
+    sc = spark.sparkContext
+    finished = []
+
+    def slow(v, delay):
+        time.sleep(delay)
+        finished.append(v)
+        return v
+
+    # later arguments finish first; results still come back in argument order
+    fns = [lambda: slow("a", 0.3), lambda: slow("b", 0.1), lambda: slow("c", 0)]
+    assert run_concurrently(*fns) == ["a", "b", "c"]
+    assert finished == ["c", "b", "a"]
+
+    def fail(exc, delay):
+        time.sleep(delay)
+        raise exc
+
+    finished.clear()
+    # the first failure in argument order is raised, and only once the
+    # slowest sibling has finished
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(
+            lambda: fail(ValueError("first"), 0.1),
+            lambda: slow("late", 0.5),
+            lambda: fail(KeyError("second"), 0),
+        )
+    assert finished == ["late"]
+
+    # each thread starts with the caller's local properties (job group)
+    sc.setJobGroup("run-concurrently", "inherited")
+    try:
+        groups = run_concurrently(*[lambda: sc.getLocalProperty("spark.jobGroup.id")] * 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert groups == ["run-concurrently"] * 3
