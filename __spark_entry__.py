@@ -2719,9 +2719,9 @@ def q_kg_owl_entailed(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     men = inst.filter(F.col("p") == dockg.P_MENTIONS)
-    # NOTE: input_barrier=False with an undeduped co was measured SLOWER
-    # here (3.7 -> 4.0 s): the first sym_inv pass then runs the self-join
-    # three times, which costs more than the one barrier it saves.
+    # owl_materialize checkpoints its input: without that barrier the
+    # first sym_inv pass runs this self-join three times (measured 3.7 ->
+    # 4.0 s), which costs more than the one barrier.
     co = (
         men.alias("a")
         .join(men.alias("b"), F.col("a.s") == F.col("b.s"))
@@ -2763,8 +2763,8 @@ def q_kg_rdfs_delta(spark, sf_dir):
     old_triples = iri_triples(docs.filter(F.col("doc_id") % 10 != 0))
     new_triples = iri_triples(docs.filter(F.col("doc_id") % 10 == 0))
     closure, new = run_concurrently(
-        lambda: rdfs_materialize(old_triples, onto, materialize=True),
-        lambda: rdfs_materialize(new_triples, onto, materialize=True),
+        lambda: rdfs_materialize(old_triples, onto).localCheckpoint(eager=True),
+        lambda: rdfs_materialize(new_triples, onto).localCheckpoint(eager=True),
     )
     return rdfs_materialize_delta(closure, new_triples, onto, delta_closure=new)
 

@@ -853,6 +853,28 @@ def group_solutions(
 # --- SPARQL FILTER expressions + solution modifiers (§17.2, §15) ---
 
 
+#: SPARQL 1.1 §19.7 ECHAR: the escapes a quoted literal may carry
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"', "'": "'", "\\": "\\"}
+
+
+def _scan_string(text: str, i: int) -> tuple[str, int]:
+    """Decode the quoted literal whose opening quote is ``text[i]``: returns
+    its value (ECHAR escapes decoded; any other escaped character stands
+    for itself) and the offset just past the closing quote."""
+    quote, j, n = text[i], i + 1, len(text)
+    out = []
+    while j < n and text[j] != quote:
+        if text[j] == "\\" and j + 1 < n:
+            out.append(_ECHAR.get(text[j + 1], text[j + 1]))
+            j += 2
+        else:
+            out.append(text[j])
+            j += 1
+    if j >= n:
+        raise ValueError(f"unterminated string at offset {i} in {text!r}")
+    return "".join(out), j + 1
+
+
 def _tokenize_expr(expr: str) -> list[tuple[str, object]]:
     """Tokenize a SPARQL FILTER expression: variables, numeric and string
     literals, booleans, function names, comparison/logical operators,
@@ -873,19 +895,8 @@ def _tokenize_expr(expr: str) -> list[tuple[str, object]]:
             toks.append(("var", m.group(1)))
             i += m.end()
         elif c in "\"'":
-            j = i + 1
-            out = []
-            while j < n and expr[j] != c:
-                if expr[j] == "\\" and j + 1 < n:
-                    out.append(expr[j + 1])
-                    j += 2
-                else:
-                    out.append(expr[j])
-                    j += 1
-            if j >= n:
-                raise ValueError(f"unterminated string at offset {i} in {expr!r}")
-            toks.append(("str", "".join(out)))
-            i = j + 1
+            val, i = _scan_string(expr, i)
+            toks.append(("str", val))
         elif c.isdigit() or (
             c in "+-"
             and i + 1 < n

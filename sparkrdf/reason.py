@@ -19,21 +19,24 @@ transforms over the ``(s, p, o)`` stream itself:
   gate a construction pipeline runs before publishing a snapshot.
 
 Scale shape (shared): ontology and shape tables are human-authored —
-thousands of rows at most — so every rule application is a *broadcast*
-join against the triple stream; the only all-data shuffles are the final
-``dropDuplicates`` (entailment) and the ``(s, p)`` hash aggregates
-(characteristic sets, validation), both map-side-combinable. Nothing in
-this module shuffles the triple stream more than once per output.
+thousands of rows at most — so they are collected once and compiled on the
+driver (rule maps, property sets), or broadcast; no rule table is ever
+shuffled. The all-data shuffles are the final ``dropDuplicates``
+(entailment) and the ``(s, p)`` hash aggregates (characteristic sets,
+validation), both map-side-combinable; only ``owl_materialize``'s
+distributed transitive closure adds self-joins over the closed edges.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkrdf import localdf
 from sparkrdf import terms as T
-from sparkrdf.query import _closure_local, path_closure
+from sparkrdf.query import _closure_local
 
 RDFS_SUBCLASS = T.RDFS_NS + "subClassOf"
 RDFS_SUBPROP = T.RDFS_NS + "subPropertyOf"
@@ -45,15 +48,121 @@ def _spo(df: DataFrame, s: str, p: str, o: str) -> DataFrame:
     return df.select(F.col(s).alias("s"), F.col(p).alias("p"), F.col(o).alias("o"))
 
 
+#: Largest compiled ontology (entries summed over the four rule maps of
+#: :func:`_compile_rdfs`) that :func:`rdfs_materialize` plans as map
+#: literals; a larger one takes the broadcast rule tree. It is the largest
+#: size at which the literal form still won in ``tools/gate_ab.py --only
+#: rdfs`` (BENCH.md): a tie at 2,230 entries, the tree 1.2× faster at 4,776.
+LITERAL_MAX = 2_230
+
+#: Most pairs a ⊑ closure may hold on the driver.
+CLOSURE_CAP = 5_000_000
+
+
+def _compile_rdfs(onto_rows: list[tuple]) -> tuple[tuple[dict, dict, dict, dict], dict]:
+    """The ρDF rules of an ontology, compiled on the driver.
+
+    Returns ``((sup, st, ot, csup), type_rules)``. The four maps go
+    ``key -> sorted list``:
+
+    - ``sup[p]``: the strict ⊑p supers of ``p``; ``gen(p) = {p} ∪ sup[p]``.
+    - ``st[p]`` / ``ot[p]``: the domain / range classes declared on any
+      predicate of ``gen(p)``, with all their ⊑c supers.
+    - ``csup[c]``: the strict ⊑c supers of class ``c``.
+
+    ``type_rules`` holds what rdf:type's OWN entries derive from every type
+    row ``(x rdf:type D)`` — its supers ``U``, domain classes ``A`` and range
+    classes ``B`` (empty lists for an ontology that says nothing about
+    rdf:type): ``(x q c)`` for ``q ∈ gt = {rdf:type} ∪ U``, ``c ∈ A``;
+    ``(x q D)`` for ``q ∈ U``; and, when ``B`` is non-empty, ``D`` and every
+    class of ``M = A ∪ B`` get every class of ``M`` through every ``q ∈ gt``.
+
+    An ontology row with a NULL subject or object declares nothing. Raises
+    ValueError when a ⊑ closure holds more than ``CLOSURE_CAP`` pairs.
+    """
+    rows = [(s, p, o) for s, p, o in onto_rows if s is not None and o is not None]
+
+    def pairs_by_key(pairs) -> dict:
+        m: dict = {}
+        for a, b in pairs:
+            m.setdefault(a, set()).add(b)
+        return m
+
+    def closure(rel: str) -> dict:
+        closed = _closure_local([(s, o) for s, p, o in rows if p == rel], cap=CLOSURE_CAP)
+        if closed is None:
+            raise ValueError(
+                f"rdfs_materialize: the {rel} closure holds more than "
+                f"{CLOSURE_CAP:,} pairs (CLOSURE_CAP)"
+            )
+        return pairs_by_key(closed)
+
+    sup, csup = closure(RDFS_SUBPROP), closure(RDFS_SUBCLASS)
+
+    def typed(rel: str) -> dict:
+        decl = pairs_by_key((s, o) for s, p, o in rows if p == rel)
+        out = {}
+        for p in decl.keys() | sup.keys():
+            cs = {c for q in {p} | sup.get(p, set()) for c in decl.get(q, ())}
+            cs |= {d for c in cs for d in csup.get(c, ())}
+            if cs:
+                out[p] = cs
+        return out
+
+    maps = tuple(
+        {k: sorted(v) for k, v in m.items()}
+        for m in (sup, typed(RDFS_DOMAIN), typed(RDFS_RANGE), csup)
+    )
+    u, a, b = (m.get(T.RDF_TYPE, []) for m in maps[:3])
+    gt = [T.RDF_TYPE, *u]
+    m = sorted({*a, *b}) if b else []
+    type_rules = {
+        "x_c": [[q, c] for q in gt for c in a],
+        "x_D": [[q] for q in u],
+        "D_c": [[q, c] for q in gt for c in m],
+        "c_c": [[c, q, d] for c in m for q in gt for d in m],
+    }
+    return maps, type_rules
+
+
+def _triple(s: Column, p: Column, o: Column) -> Column:
+    return F.struct(s.alias("s"), p.alias("p"), o.alias("o"))
+
+
+def _json_lit(value, schema: str) -> Column:
+    """``value`` as ONE plan literal: a JSON string the optimizer folds into
+    a typed literal, so the plan costs the same few py4j calls whatever its
+    size (one ``F.lit`` per element would be one round trip each)."""
+    return F.from_json(F.lit(json.dumps(value, sort_keys=True)), schema)
+
+
+def _close_type_rows(df: DataFrame, type_rules: dict) -> DataFrame:
+    """``df`` plus what ``type_rules`` derive from its ``rdf:type`` rows (see
+    :func:`_compile_rdfs`); ``df`` itself when rdf:type has no entries."""
+    if not any(type_rules.values()):
+        return df
+    s, p, o = F.col("s"), F.col("p"), F.col("o")
+
+    def rules(key: str) -> Column:
+        return _json_lit(type_rules[key], "array<array<string>>")
+
+    derived = F.concat(
+        F.transform(rules("x_c"), lambda e: _triple(s, e[0], e[1])),
+        F.transform(rules("x_D"), lambda e: _triple(s, e[0], o)),
+        F.transform(rules("D_c"), lambda e: _triple(o, e[0], e[1])),
+        F.transform(rules("c_c"), lambda e: _triple(e[0], e[1], e[2])),
+    )
+    none = F.array().cast("array<struct<s:string,p:string,o:string>>")
+    rows = F.concat(F.array(_triple(s, p, o)), F.when(p == T.RDF_TYPE, derived).otherwise(none))
+    return df.select(F.explode(rows).alias("x")).select("x.s", "x.p", "x.o")
+
+
 def rdfs_materialize(
     triples: DataFrame,
     ontology: DataFrame,
-    max_doubling: int = 6,
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
-    materialize: bool = False,
-    literal_map_max: int = 2000,
 ) -> DataFrame:
     """Materialize the ρDF entailment of ``triples`` under ``ontology``.
 
@@ -68,216 +177,83 @@ def rdfs_materialize(
     3. ``(s p o), p rng C     ⊢ (o rdf:type C)``  (rdfs3)
     4. ``(x rdf:type C), C ⊑c* D ⊢ (x rdf:type D)``  (rdfs9)
 
-    Rule order makes one pass complete: sub-property closure first (so
-    domain/range declared on a *super*-property fire for sub-property
-    assertions), then domain/range (minting new ``rdf:type`` triples), then
-    sub-class closure over ALL type triples, asserted and derived. The two
-    ``⊑*`` relations are pre-closed transitively (iterative doubling via
-    :func:`sparkrdf.query.path_closure` — ontology-sized, converges in
-    ``log₂(depth)`` rounds) so each rule is a single join, not a fixpoint.
+    The ontology is collected once and compiled on the driver
+    (:func:`_compile_rdfs`): both ⊑ closures, and per predicate the
+    ⊑c-closed classes its domain and range declarations (through every
+    super-property) give to the subject and the object. With those maps every
+    rule is a function of one input row, and one pass is complete: a row
+    ``(s p o)`` yields itself, ``(s q o)`` for ``q ∈ sup[p]``, ``(s type C)``
+    for ``C ∈ st[p]``, ``(o type C)`` for ``C ∈ ot[p]``, and, when ``rdf:type
+    ∈ gen(p)``, ``(s type D)`` for ``D ∈ csup[o]``. Only an ontology that
+    gives rdf:type itself a super-property, domain or range adds a second
+    per-row pass over the type rows (:func:`_close_type_rows`). Output stays
+    bounded by ``|T| · (1 + depth(⊑p) + depth(⊑c) + |dom| + |rng|)``.
 
-    Scale shape: with the two closures driver-local (they are
-    ontology-sized), ALL FOUR rules become pure per-row functions of one
-    input triple — the other antecedents are fixed schema lookups. The
-    default plan is therefore a SINGLE PASS: the closures and domain/range
-    tables compile into Catalyst map literals, each input row emits its
-    full derivation set as one constructed array (itself + ⊑p
-    generalizations + dom/rng typings over the generalized predicates + ⊑c
-    inheritance over every asserted-or-derived type triple), one explode,
-    one final dropDuplicates — one scan of the instance stream, one
-    shuffle, no joins, no input materialization (a dedup of the input is
-    subsumed by the output dedup; per-row expansion is ontology-bounded).
-    Entailment output stays bounded by ``|T| · (1 + depth(⊑p) + depth(⊑c)
-    + |dom| + |rng|)`` — linear in the instance data, never quadratic.
-    Ontologies too large for literal maps (> ``literal_map_max`` derived
-    entries — map literals in the thousands would bloat the plan the same
-    way unrolled vector folds did) or too dense for the local closure fall
-    back to the broadcast-join rule tree over a checkpointed input.
+    Two plan forms consume the same compiled maps, chosen by their summed
+    entry count:
 
-    ``materialize=True`` eagerly checkpoints the RESULT before returning —
-    for callers that build several closures on concurrent driver threads
-    (guide §2.6 job overlap, e.g. the incremental-delta path): a lazy
-    result would defer all the work to the single final action and lose
-    the overlap. Same rows either way.
+    - up to ``LITERAL_MAX`` entries, the literal form: each map enters the
+      plan as ONE literal (:func:`_json_lit`), so building the plan costs
+      the same few py4j calls whatever the ontology holds. One scan of the
+      input, one ``concat`` of the asserted row and four ``transform``
+      lookups, one explode, one ``dropDuplicates``: one shuffle, no join.
+    - above it, the broadcast rule tree: the maps as pair tables, four
+      broadcast hash joins against the deduped, checkpointed input. A map
+      lookup scans the map's keys per row, so past the bound the hash
+      probe wins; ``tools/gate_ab.py --only rdfs`` measures the crossover
+      (BENCH.md).
+
+    A ⊑ closure over ``CLOSURE_CAP`` pairs raises ValueError naming the cap:
+    the closure would have to land on the driver in either form.
     """
     t = _spo(triples, s_col, p_col, o_col)
-    onto = _spo(ontology, "s", "p", "o")
-
-    # The ontology is human-authored — thousands of rows at most (module
-    # docstring) — so collect it ONCE and derive the four rule tables and
-    # both strict transitive closures in-process instead of running
-    # checkpoint+count Spark jobs per closure over a handful of rows. Each
-    # table re-enters the plan through localdf.local_rows_df: a JVM
-    # LocalTableScan under a broadcast hint, so no rule join starts a
-    # Python worker. (The closure itself is query.path_closure's driver
-    # fast path, shared here.)
     spark = triples.sparkSession
-    onto_rows = [(r["s"], r["p"], r["o"]) for r in onto.collect()]
+    onto_rows = [tuple(r) for r in _spo(ontology, "s", "p", "o").collect()]
+    maps, type_rules = _compile_rdfs(onto_rows)
+    sup, st, ot, csup = maps
+    type_ = F.lit(T.RDF_TYPE)
 
-    def _pairs_df(rows, c1, c2):
-        return F.broadcast(localdf.local_rows_df(spark, rows, f"{c1} string, {c2} string"))
+    if sum(len(v) for m in maps for v in m.values()) <= LITERAL_MAX:
+        empty = F.array().cast("array<string>")
 
-    dom_rows = [(s, o) for s, p, o in onto_rows if p == RDFS_DOMAIN]
-    rng_rows = [(s, o) for s, p, o in onto_rows if p == RDFS_RANGE]
-    _cap = 5_000_000
-    spc_pairs = _closure_local(
-        [(s, o) for s, p, o in onto_rows if p == RDFS_SUBPROP], cap=_cap
-    )
-    scc_pairs = _closure_local(
-        [(s, o) for s, p, o in onto_rows if p == RDFS_SUBCLASS], cap=_cap
-    )
-
-    n_entries = (
-        len(spc_pairs) + len(scc_pairs) + len(dom_rows) + len(rng_rows)
-        if spc_pairs is not None and scc_pairs is not None
-        else literal_map_max + 1
-    )
-    if n_entries <= literal_map_max:
-        # SINGLE-PASS literal-map path (docstring "Scale shape"): every rule
-        # is a per-row lookup; one constructed array per input triple, one
-        # explode, one dedup. No joins, no input barrier.
-        from collections import defaultdict
-
-        def _to_map(pairs):
-            m: dict = defaultdict(set)
-            for a, b in pairs:
-                m[a].add(b)
-            return {k: sorted(v) for k, v in m.items()}
-
-        spc_m, scc_m = _to_map(spc_pairs), _to_map(scc_pairs)
-        dom_m, rng_m = _to_map(dom_rows), _to_map(rng_rows)
-
-        EMPTY_S = F.array().cast("array<string>")
-
-        def _amap(d):
-            if not d:
-                return None
-            entries = []
-            for k in sorted(d):
-                entries.append(F.lit(k))
-                entries.append(F.array(*[F.lit(x) for x in d[k]]))
-            return F.create_map(*entries)
-
-        spc_lm, scc_lm = _amap(spc_m), _amap(scc_m)
-        dom_lm, rng_lm = _amap(dom_m), _amap(rng_m)
-
-        def _lk(m, key):
-            if m is None:
-                return EMPTY_S
-            return F.coalesce(F.element_at(m, key), EMPTY_S)
-
-        def _st(s, p, o):
-            return F.struct(s.alias("s"), p.alias("p"), o.alias("o"))
-
-        TYPE = F.lit(T.RDF_TYPE)
-        EMPTY_T = F.array().cast("array<struct<s:string,p:string,o:string>>")
-        # rdfs7: the asserted predicate + its strict super-property closure
-        gen = F.concat(F.array(F.col("p")), _lk(spc_lm, F.col("p")))
-        asserted = F.transform(gen, lambda q: _st(F.col("s"), q, F.col("o")))
-        # rdfs2/rdfs3 through every generalized predicate
-        dom_t = F.flatten(
-            F.transform(
-                gen,
-                lambda q: F.transform(
-                    _lk(dom_lm, q), lambda c: _st(F.col("s"), TYPE, c)
-                ),
+        def lookup(m: dict, key: Column) -> Column:
+            return F.coalesce(
+                F.element_at(_json_lit(m, "map<string,array<string>>"), key), empty
             )
-        )
-        rng_t = F.flatten(
-            F.transform(
-                gen,
-                lambda q: F.transform(
-                    _lk(rng_lm, q), lambda c: _st(F.col("o"), TYPE, c)
-                ),
-            )
-        )
-        # rdfs9 over every type triple this row contributes: the asserted/
-        # generalized (s rdf:type o) if any generalized predicate IS
-        # rdf:type, plus every dom/rng-derived typing
-        t9a = F.when(
-            F.array_contains(gen, T.RDF_TYPE),
-            F.transform(_lk(scc_lm, F.col("o")), lambda d: _st(F.col("s"), TYPE, d)),
-        ).otherwise(EMPTY_T)
-        t9b = F.flatten(
-            F.transform(
-                gen,
-                lambda q: F.flatten(
-                    F.transform(
-                        _lk(dom_lm, q),
-                        lambda c: F.transform(
-                            _lk(scc_lm, c), lambda d: _st(F.col("s"), TYPE, d)
-                        ),
-                    )
-                ),
-            )
-        )
-        t9c = F.flatten(
-            F.transform(
-                gen,
-                lambda q: F.flatten(
-                    F.transform(
-                        _lk(rng_lm, q),
-                        lambda c: F.transform(
-                            _lk(scc_lm, c), lambda d: _st(F.col("o"), TYPE, d)
-                        ),
-                    )
-                ),
-            )
-        )
-        derived = F.concat(asserted, dom_t, rng_t, t9a, t9b, t9c)
-        out = (
-            t.select(F.explode(derived).alias("x"))
-            .select("x.s", "x.p", "x.o")
-            .dropDuplicates()
-        )
-        return out.localCheckpoint(eager=True) if materialize else out
 
-    # Broadcast-join rule tree (large ontologies): input deduped and
-    # materialized once — the tree references it ~12×.
+        s, p, o = F.col("s"), F.col("p"), F.col("o")
+        sup_p = lookup(sup, p)
+        # a NULL key looks up nothing: csup applies only to type rows
+        is_type = (p == type_) | F.array_contains(sup_p, T.RDF_TYPE)
+        derived = F.concat(
+            F.array(_triple(s, p, o)),
+            F.transform(sup_p, lambda q: _triple(s, q, o)),
+            F.transform(lookup(st, p), lambda c: _triple(s, type_, c)),
+            F.transform(lookup(ot, p), lambda c: _triple(o, type_, c)),
+            F.transform(lookup(csup, F.when(is_type, o)), lambda d: _triple(s, type_, d)),
+        )
+        out = t.select(F.explode(derived).alias("x")).select("x.s", "x.p", "x.o")
+        return _close_type_rows(out, type_rules).dropDuplicates()
+
+    def pairs(m: dict, key: str) -> DataFrame:
+        rows = [(k, v) for k, vs in m.items() for v in vs]
+        return F.broadcast(localdf.local_rows_df(spark, rows, f"{key} string, _v string"))
+
+    # the input is referenced by all four joins: dedup and materialize once
     t = t.dropDuplicates().localCheckpoint(eager=True)
-    if spc_pairs is None or scc_pairs is None:  # pragma: no cover — an
-        # adversarially dense "ontology"; fall back to the distributed loop
-        sub_prop = onto.filter(F.col("p") == RDFS_SUBPROP)
-        sub_cls = onto.filter(F.col("p") == RDFS_SUBCLASS)
-        spc = F.broadcast(
-            path_closure(sub_prop, src="s", dst="o", max_doubling=max_doubling)
-            .select(F.col("s").alias("p"), F.col("o").alias("_sup"))
-        )
-        scc = F.broadcast(
-            path_closure(sub_cls, src="s", dst="o", max_doubling=max_doubling)
-            .select(F.col("s").alias("_cls"), F.col("o").alias("_sup"))
-        )
-    else:
-        spc = _pairs_df(spc_pairs, "p", "_sup")
-        scc = _pairs_df(scc_pairs, "_cls", "_sup")
-    dom = _pairs_df(dom_rows, "p", "_cls")
-    rng = _pairs_df(rng_rows, "p", "_cls")
-
-    # rdfs7: property generalization (strict closure join + the asserted p).
-    # t1/t2 stay LAZY: every consumer below is a broadcast join or filter
-    # over the checkpointed t, so re-referencing them re-runs only map-side
-    # codegen pipelines over cached blocks (module-note above).
-    t1 = t.unionByName(
-        t.join(spc, "p").select("s", F.col("_sup").alias("p"), "o")
-    )
-    # rdfs2/rdfs3 over the generalized stream
+    t1 = t.unionByName(t.join(pairs(sup, "p"), "p").select("s", F.col("_v").alias("p"), "o"))
     typed = (
-        t1.join(dom, "p").select("s", F.lit(T.RDF_TYPE).alias("p"), F.col("_cls").alias("o"))
+        t.join(pairs(st, "p"), "p").select("s", type_.alias("p"), F.col("_v").alias("o"))
     ).unionByName(
-        t1.join(rng, "p").select(
-            F.col("o").alias("s"), F.lit(T.RDF_TYPE).alias("p"), F.col("_cls").alias("o")
-        )
+        t.join(pairs(ot, "p"), "p").select(F.col("o").alias("s"), type_.alias("p"), F.col("_v").alias("o"))
     )
-    t2 = t1.unionByName(typed)
-    # rdfs9: class generalization over every type triple, asserted + derived
     inherited = (
-        t2.filter(F.col("p") == T.RDF_TYPE)
-        .withColumnRenamed("o", "_cls")
-        .join(scc, "_cls")
-        .select("s", F.lit(T.RDF_TYPE).alias("p"), F.col("_sup").alias("o"))
+        t1.filter(F.col("p") == T.RDF_TYPE)
+        .join(pairs(csup, "o"), "o")
+        .select("s", type_.alias("p"), F.col("_v").alias("o"))
     )
-    out = t2.unionByName(inherited).dropDuplicates()
-    return out.localCheckpoint(eager=True) if materialize else out
+    out = t1.unionByName(typed).unionByName(inherited)
+    return _close_type_rows(out, type_rules).dropDuplicates()
 
 
 def characteristic_sets(
@@ -375,7 +351,6 @@ def owl_materialize(
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
-    input_barrier: bool = True,
 ) -> DataFrame:
     """Materialize the OWL-lite property-axiom entailment of ``triples``:
     ``owl:SymmetricProperty`` (``(s p o) ⊢ (o p s)``), ``owl:inverseOf``
@@ -408,15 +383,10 @@ def owl_materialize(
     sym/inv-expanded stream once more: every sym_inv pass references its
     input three times (identity + flip + inverse), so an uncached stream
     would recompute its whole upstream ~6× — measured 3× wall on the
-    doc-KG bench. ``input_barrier=False`` skips that materialization for
-    callers whose input is already cheap to re-reference (cached upstream
-    tables + map-only derivations): the first sym_inv pass then references
-    the lazy input three times, trading one full write for three cached
-    map-side re-reads.
+    doc-KG bench.
     """
-    t = _spo(triples, s_col, p_col, o_col)
-    if input_barrier:
-        t = t.localCheckpoint(eager=True)
+    # barrier kept: skipping it measured slower on kg_owl_entailed (3.7 -> 4.0 s)
+    t = _spo(triples, s_col, p_col, o_col).localCheckpoint(eager=True)
     onto = _spo(ontology, "s", "p", "o")
 
     # Axiom tables are human-authored (module docstring): collect ONCE and
@@ -460,7 +430,10 @@ def owl_materialize(
     # Declared-transitive edge sets are usually dimension-sized next to the
     # triple stream: close them per property in one driver pass instead of
     # O(log depth) join+dedup+count jobs. A closure past the driver output
-    # cap takes the distributed doubling loop.
+    # cap takes the distributed doubling loop. Routing this through
+    # query.path_closure keyed per p measured slower (kg_query owl step
+    # 1.74 -> 2.01 s, median of 12): its entry dedup and checkpoint redo
+    # what the distinct, checkpointed t1 already did.
     closed = None
     rows = localdf.collect_if_small(r)
     if rows is not None:
@@ -510,7 +483,6 @@ def rdfs_materialize_delta(
     closure: DataFrame,
     delta: DataFrame,
     ontology: DataFrame,
-    max_doubling: int = 6,
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
@@ -536,18 +508,17 @@ def rdfs_materialize_delta(
     — the closure side never moves if it is bucketed/partitioned on that
     key; the anti probe is delta-sized.
 
-    ``delta_closure``: an already-materialized ``rdfs_materialize(delta)``
-    result — callers that build the old closure and the delta closure
-    anyway can run the two (independent) materializations on concurrent
-    driver threads and pass both in (guide-standard job overlap); when
-    given, ``delta`` is ignored.
+    ``delta_closure``: an already-built ``rdfs_materialize(delta)`` result;
+    when given, ``delta`` is ignored. ``rdfs_materialize`` is lazy, so a
+    caller that overlaps the old and the delta closure on concurrent driver
+    threads checkpoints each one inside its own thread (e.g.
+    ``run_concurrently(lambda: rdfs_materialize(old, onto)
+    .localCheckpoint(eager=True), ...)``); otherwise all the work lands on
+    the single final action and the overlap is lost.
     """
     if delta_closure is not None:
         new = _spo(delta_closure, "s", "p", "o")
     else:
-        new = rdfs_materialize(
-            delta, ontology, max_doubling=max_doubling,
-            s_col=s_col, p_col=p_col, o_col=o_col,
-        )
+        new = rdfs_materialize(delta, ontology, s_col=s_col, p_col=p_col, o_col=o_col)
     old = _spo(closure, s_col, p_col, o_col)
     return new.join(old, ["s", "p", "o"], "left_anti")

@@ -89,6 +89,7 @@ from sparkrdf.query import (
     parse_filter,
     path_expr,
     _compile_filter,
+    _scan_string,
 )
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -150,19 +151,8 @@ def _tokenize(q: str) -> list[_Tok]:
             toks.append(_Tok("var", m.group(1)))
             i += m.end()
         elif c in "\"'":
-            j = i + 1
-            out = []
-            while j < n and q[j] != c:
-                if q[j] == "\\" and j + 1 < n:
-                    out.append({"n": "\n", "t": "\t", "r": "\r"}.get(q[j + 1], q[j + 1]))
-                    j += 2
-                else:
-                    out.append(q[j])
-                    j += 1
-            if j >= n:
-                raise ValueError(f"unterminated string at offset {i}")
-            toks.append(_Tok("str", "".join(out)))
-            i = j + 1
+            val, i = _scan_string(q, i)
+            toks.append(_Tok("str", val))
             if i < n and q[i] == "@":
                 raise ValueError("@lang literal patterns are not supported; "
                                  "filter on the o_lang column instead")

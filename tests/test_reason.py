@@ -56,39 +56,125 @@ def test_rdfs_materialize_hand_computed(spark):
     assert got == expect
 
 
-def test_rdfs_literal_map_path_matches_join_tree(spark):
-    """The single-pass literal-map plan (default) and the broadcast-join
-    rule tree (forced via literal_map_max=0) must produce identical
-    entailments — including duplicate inputs, rdf:type-in-closure edges
-    and deep class chains."""
+def _forward_chain(inst, onto):
+    """Naive ρDF reference: apply rdfs7/2/3/9 over the direct (unclosed)
+    ontology edges until nothing new appears. Ontology rows with a NULL
+    subject or object declare nothing."""
+    rule: dict = {}
+    for a, r, b in onto:
+        if a is not None and b is not None:
+            rule.setdefault((r, a), []).append(b)
+    out = set(inst)
+    while True:
+        new = set()
+        for s, p, o in out:
+            new.update((s, q, o) for q in rule.get((RDFS_SUBPROP, p), ()))  # rdfs7
+            new.update((s, TY, c) for c in rule.get((RDFS_DOMAIN, p), ()))  # rdfs2
+            new.update((o, TY, c) for c in rule.get((RDFS_RANGE, p), ()))  # rdfs3
+            if p == TY:
+                new.update((s, TY, d) for d in rule.get((RDFS_SUBCLASS, o), ()))  # rdfs9
+        if new <= out:
+            return out
+        out |= new
+
+
+def _random_case(seed, n_classes, n_props, n_rows):
+    """A random class forest, property forest and domain/range table, and
+    instance rows over them (type rows included)."""
+    import random
+
+    rnd = random.Random(seed)
+    cls = [f"C{i}" for i in range(n_classes)]
+    props = [f"p{i}" for i in range(n_props)]
+    onto = [(cls[i], RDFS_SUBCLASS, cls[rnd.randrange(i)]) for i in range(1, n_classes)]
+    onto += [(props[i], RDFS_SUBPROP, props[rnd.randrange(i)]) for i in range(1, n_props, 2)]
+    for p in rnd.sample(props, n_props // 2):
+        onto.append((p, rnd.choice([RDFS_DOMAIN, RDFS_RANGE]), rnd.choice(cls)))
+    inst = [
+        (f"x{rnd.randrange(50)}", TY, rnd.choice(cls))
+        if rnd.random() < 0.3
+        else (f"x{rnd.randrange(50)}", rnd.choice(props + ["free"]), f"x{rnd.randrange(50)}")
+        for _ in range(n_rows)
+    ]
+    return inst, onto
+
+
+def test_rdfs_literal_and_tree_forms_match_forward_chaining(spark, monkeypatch):
+    """Both plan forms — the literal maps (LITERAL_MAX forced high) and the
+    broadcast rule tree (forced to 0) — return exactly the naive
+    forward-chaining closure."""
+    from sparkrdf import reason
+    from sparkrdf.reason import _compile_rdfs
+
+    hand_onto = [
+        ("mentions", RDFS_SUBPROP, "references"),
+        ("references", RDFS_SUBPROP, "relatedTo"),
+        ("references", RDFS_DOMAIN, "Doc"),
+        ("references", RDFS_RANGE, "Ent"),
+        ("Doc", RDFS_SUBCLASS, "Thing"),
+        ("Ent", RDFS_SUBCLASS, "Thing"),
+        ("sameType", RDFS_SUBPROP, TY),
+        (TY, RDFS_DOMAIN, "Res"),
+        (None, RDFS_SUBCLASS, "Thing"),
+        ("Ent", RDFS_SUBCLASS, None),
+    ]
+    # a deep class chain: C0 ⊑ C1 ⊑ ... ⊑ C39
+    hand_onto += [(f"C{i}", RDFS_SUBCLASS, f"C{i + 1}") for i in range(39)]
+    hand_inst = [
+        ("a", "mentions", "b"),
+        ("a", "mentions", "b"),  # duplicate assertion
+        ("b", "sameType", "C0"),
+        ("c", TY, "C20"),
+        ("x", "unrelated", "y"),  # no ontology entry
+        (None, "mentions", "b"),
+        ("a", "references", None),
+        (None, None, None),
+    ]
+    rand_inst, rand_onto = _random_case(7, 350, 80, 800)
+    n_rand = sum(len(v) for m in _compile_rdfs(rand_onto)[0] for v in m.values())
+    assert 1500 <= n_rand <= 3000  # a ~2k-entry ontology
+    # rdf:type itself with a super-property, a domain and a range (the
+    # RDFS meta-vocabulary shape): derived type rows derive again
+    meta_onto = hand_onto + [
+        (TY, RDFS_SUBPROP, "isA"),
+        (TY, RDFS_RANGE, "Cls"),
+        ("Cls", RDFS_SUBCLASS, "Meta"),
+        ("isA", RDFS_DOMAIN, "Thing"),
+    ]
+    cases = [(hand_inst, hand_onto), (hand_inst, meta_onto), (rand_inst, rand_onto)]
+    for inst, onto in cases:
+        expect = _forward_chain(inst, onto)
+        for bound in (10**9, 0):
+            monkeypatch.setattr(reason, "LITERAL_MAX", bound)
+            got = rdfs_materialize(_df(spark, inst), _df(spark, onto)).collect()
+            assert len(got) == len(expect) and {tuple(r) for r in got} == expect, bound
+    assert ("b", TY, "C39") in _forward_chain(hand_inst, hand_onto)
+
+
+def test_rdfs_closure_over_cap_raises(spark, monkeypatch):
+    import pytest
+
+    from sparkrdf import reason
+
+    monkeypatch.setattr(reason, "CLOSURE_CAP", 2)
+    onto = _df(spark, [("A", RDFS_SUBCLASS, "B"), ("B", RDFS_SUBCLASS, "C")])
+    with pytest.raises(ValueError, match="CLOSURE_CAP"):
+        rdfs_materialize(_df(spark, [("x", TY, "A")]), onto)
+
+
+def test_rdfs_literal_plan_holds_map_literals_not_json(spark):
+    """Each rule map enters the plan as one JSON literal that the optimizer
+    folds into a map literal: no row parses JSON, and no rule joins."""
     onto = _df(
         spark,
-        [
-            ("mentions", RDFS_SUBPROP, "references"),
-            ("references", RDFS_SUBPROP, "relatedTo"),
-            ("Op", RDFS_SUBCLASS, "Tech"),
-            ("Tech", RDFS_SUBCLASS, "Thing"),
-            ("references", RDFS_DOMAIN, "Doc"),
-            ("references", RDFS_RANGE, "Ent"),
-            ("Doc", RDFS_SUBCLASS, "Thing"),
-            ("Ent", RDFS_SUBCLASS, "Thing"),
-        ],
+        [("mentions", RDFS_SUBPROP, "references"), ("references", RDFS_DOMAIN, "Doc"),
+         ("Doc", RDFS_SUBCLASS, "Thing")],
     )
-    inst = _df(
-        spark,
-        [
-            ("a", "mentions", "b"),
-            ("a", "mentions", "b"),  # duplicate assertion
-            ("b", TY, "Op"),
-            ("x", "unrelated", "y"),
-        ],
-    )
-    fast = {tuple(r) for r in rdfs_materialize(inst, onto).collect()}
-    slow = {
-        tuple(r)
-        for r in rdfs_materialize(inst, onto, literal_map_max=0).collect()
-    }
-    assert fast == slow and ("b", TY, "Thing") in fast
+    out = rdfs_materialize(_df(spark, [("a", "mentions", "b")]), onto)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "map(keys: [" in plan
+    assert "from_json" not in plan.lower() and "jsontostructs" not in plan.lower()
+    assert "Join" not in plan
 
 
 def test_rdfs_materialize_no_ontology_is_identity(spark):

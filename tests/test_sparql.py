@@ -879,3 +879,25 @@ def test_sparql_hash_and_encode_functions(spark):
     assert row.s1 == hashlib.sha1(v).hexdigest()
     assert row.s2 == hashlib.sha256(v).hexdigest()
     assert row.e == "a%20b~c%2Ad%2Fe"
+
+
+def test_string_escapes_decode_alike_in_both_lexers(spark):
+    """SPARQL ECHAR escapes (§19.7) decode the same way in the FILTER lexer
+    (bgp_filter / parse_filter) and in the query lexer (sparql_query)."""
+    from sparkrdf.query import _tokenize_expr, bgp_filter, bgp_match
+    from sparkrdf.sparql import _tokenize
+
+    src = r'"\t\b\n\r\f\"\'\\\q"'
+    want = "\t\b\n\r\f\"'\\q"
+    assert _tokenize_expr(src) == [("str", want)]
+    assert [(t.kind, t.val) for t in _tokenize(src)] == [("str", want)]
+
+    st = spark.createDataFrame(
+        [("hit", "note", "a\tb\nc"), ("plain", "note", "atbnc"), ("raw", "note", r"a\tb\nc")],
+        "s string, p string, o string",
+    )
+    by_filter = bgp_filter(bgp_match(st, [("?d", "note", "?v")]), r'?v = "a\tb\nc"')
+    by_query = sparql_query(st, r'SELECT ?d WHERE { ?d <note> ?v . FILTER(?v = "a\tb\nc") }')
+    by_pattern = sparql_query(st, r'SELECT ?d WHERE { ?d <note> "a\tb\nc" . }')
+    assert [r.d for r in by_filter.collect()] == ["hit"]
+    assert rows(by_query) == rows(by_pattern) == [("hit",)]

@@ -15,13 +15,21 @@ operators run on its page→entity ``mentions`` edges. The closures also run
 on synthetic chains, since the crawl's one transitive property derives
 nothing new.
 
+The ``rdfs`` leg A/Bs ``reason.rdfs_materialize``'s two plan forms the same
+way, with ``reason.LITERAL_MAX`` forced high (map literals) and to 0
+(broadcast rule tree), on synthetic ontologies of growing size
+(:func:`rdfs_case`). ``reason.LITERAL_MAX`` is the largest measured size at
+which the literal form still wins.
+
 Usage: python tools/gate_ab.py [--pages 1000] [--reps 4] [--cpus 4]
+       [--only name,...|rdfs]
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import random
 import shutil
 import statistics
 import sys
@@ -46,6 +54,82 @@ def chains(spark, n_edges: int, depth: int, p: str | None):
     else:
         df = spark.createDataFrame([(s, p, o) for s, o in rows], "s string, p string, o string")
     return df.localCheckpoint(eager=True)
+
+
+# (classes, properties) of the synthetic rdfs ontologies: ~2k to ~180k
+# compiled entries
+RDFS_SIZES = [
+    (200, 30), (400, 60), (800, 120), (1_500, 200), (2_000, 300), (5_000, 600), (8_000, 800),
+]
+
+
+def rdfs_case(spark, n_classes: int, n_props: int, n_triples: int = 250_000, seed: int = 5):
+    """A random class tree and property tree with a domain and a range on
+    every property, and ``n_triples`` instance rows over them (30% of them
+    rdf:type rows), materialized once. Returns (instances, ontology,
+    compiled entry count)."""
+    from pyspark.sql import functions as F
+
+    from sparkrdf import localdf
+    from sparkrdf import terms as T
+    from sparkrdf.reason import RDFS_DOMAIN, RDFS_RANGE, RDFS_SUBCLASS, RDFS_SUBPROP, _compile_rdfs
+
+    rnd = random.Random(seed)
+    rows = [(f"C{i}", RDFS_SUBCLASS, f"C{rnd.randrange(i)}") for i in range(1, n_classes)]
+    rows += [(f"p{i}", RDFS_SUBPROP, f"p{rnd.randrange(i)}") for i in range(1, n_props)]
+    rows += [
+        (f"p{i}", rel, f"C{rnd.randrange(n_classes)}")
+        for i in range(n_props)
+        for rel in (RDFS_DOMAIN, RDFS_RANGE)
+    ]
+    entries = sum(len(v) for m in _compile_rdfs(rows)[0] for v in m.values())
+    onto = localdf.local_rows_df(spark, rows, "s string, p string, o string")
+
+    def pick(prefix: str, salt: int, n: int):
+        return F.concat(F.lit(prefix), F.pmod(F.hash("id", F.lit(salt)), F.lit(n)).cast("string"))
+
+    is_type = F.pmod(F.hash("id", F.lit(0)), F.lit(10)) < 3
+    inst = spark.range(n_triples).select(
+        pick("x", 1, 50_000).alias("s"),
+        F.when(is_type, F.lit(T.RDF_TYPE)).otherwise(pick("p", 2, n_props)).alias("p"),
+        F.when(is_type, pick("C", 3, n_classes)).otherwise(pick("x", 4, 50_000)).alias("o"),
+    )
+    return inst.localCheckpoint(eager=True), onto, entries
+
+
+def rdfs_ab(spark, reps: int):
+    """Literal form vs rule tree on every ``RDFS_SIZES`` ontology; prints
+    the table and returns the largest entry count the literal form won."""
+    from sparkrdf import reason
+
+    bound, won = reason.LITERAL_MAX, 0
+    forms = {"literal": 10**9, "tree": 0}
+    print("| ontology | entries | literal | tree | tree ÷ literal | rows equal |")
+    print("|---|---|---|---|---|---|")
+    for n_classes, n_props in RDFS_SIZES:
+        inst, onto, entries = rdfs_case(spark, n_classes, n_props)
+        legs: dict = {f: [] for f in forms}
+        counts: dict = {f: set() for f in forms}
+        for rep in range(-1, reps):
+            for form in (forms if rep % 2 == 0 else reversed(list(forms))):
+                reason.LITERAL_MAX = forms[form]
+                try:
+                    wall, n = timed(spark, lambda: reason.rdfs_materialize(inst, onto))
+                finally:
+                    reason.LITERAL_MAX = bound
+                if rep >= 0:
+                    legs[form].append(wall)
+                counts[form].add(n)
+        lit, tree = statistics.median(legs["literal"]), statistics.median(legs["tree"])
+        if lit < tree:
+            won = max(won, entries)
+        same = counts["literal"] == counts["tree"] and len(counts["tree"]) == 1
+        print(
+            f"| {n_classes:,} classes, {n_props:,} properties | {entries:,} | {lit:.2f} s | "
+            f"{tree:.2f} s | {tree / lit:.2f}× | {'yes' if same else 'NO'} |",
+            flush=True,
+        )
+    return won
 
 
 def operators(spark, stmts, edges):
@@ -109,7 +193,7 @@ def main():
     ap.add_argument("--pages", type=int, default=1000)
     ap.add_argument("--reps", type=int, default=4)
     ap.add_argument("--cpus", type=int, default=4)
-    ap.add_argument("--only", default="", help="comma-separated operator names")
+    ap.add_argument("--only", default="", help="comma-separated operator names, or rdfs")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -126,6 +210,11 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     try:
+        if args.only == "rdfs":
+            print(f"# rdfs_materialize; local[{args.cpus}], median of {args.reps} interleaved repetitions")
+            won = rdfs_ab(spark, args.reps)
+            print(f"largest size the literal form won: {won:,} entries (set reason.LITERAL_MAX)")
+            return
         path = os.path.join(work, "statements")
         extract_triples(spark, synthesize_pages(spark, args.pages)).write.parquet(path)
 
