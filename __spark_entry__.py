@@ -1368,8 +1368,9 @@ def q_kg_sparql_path(spark, sf_dir):
     (sparkrdf/sparql.py path_term → sparkrdf/query.py path_expr): the
     same §9.1 algebra kg_path_expr exercises programmatically —
     ``^mentions/mentions/(a|lang)?`` — written as a query string; the
-    parser renders the path for parse_path and the endpoint relation
-    joins like any BGP pattern. Oracle: identical to kg_path_expr."""
+    parser's path grammar (the one parse_path uses) builds the path AST
+    and the endpoint relation joins like any BGP pattern. Oracle:
+    identical to kg_path_expr."""
     from sparkrdf.sparql import sparql_query
 
     stmts = dockg.doc_triples(spark, _docs(spark, sf_dir))

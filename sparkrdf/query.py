@@ -282,113 +282,20 @@ def path_closure(
     )
 
 
-def _tokenize_path(expr: str) -> list[str]:
-    toks: list[str] = []
-    i, n = 0, len(expr)
-    while i < n:
-        c = expr[i]
-        if c.isspace():
-            i += 1
-        elif c in "/|^()*+?!":
-            toks.append(c)
-            i += 1
-        elif c == "<":
-            j = expr.find(">", i)
-            if j < 0:
-                raise ValueError(f"unterminated <iri> at offset {i} in path {expr!r}")
-            toks.append(expr[i + 1 : j])
-            i = j + 1
-        else:
-            j = i
-            while j < n and not expr[j].isspace() and expr[j] not in "/|^()*+?!<>":
-                j += 1
-            toks.append(expr[i:j])
-            i = j
-    return toks
-
-
 def parse_path(expr: str):
     """Parse a SPARQL 1.1 property-path expression (§9.1 grammar subset)
     into an AST of tuples. Supported: IRIs (bare or ``<...>``), inverse
     ``^p``, sequence ``a/b``, alternative ``a|b``, closures ``p* p+ p?``,
     forward negated property sets ``!p`` / ``!(p1|p2)``, and grouping.
     Precedence mirrors the spec: ``|`` < ``/`` < ``^`` < postfix mods.
+    The string is read by the SPARQL lexer and the path grammar that
+    :func:`sparkrdf.sparql.sparql_query` uses for path predicates; here a
+    bare word or prefixed name is the IRI exactly as written.
     """
-    toks = _tokenize_path(expr)
-    pos = 0
+    from sparkrdf.sparql import _Parser
 
-    def peek():
-        return toks[pos] if pos < len(toks) else None
-
-    def take():
-        nonlocal pos
-        t = peek()
-        pos += 1
-        return t
-
-    def alternative():
-        node = sequence()
-        while peek() == "|":
-            take()
-            node = ("alt", node, sequence())
-        return node
-
-    def sequence():
-        node = elt_or_inverse()
-        while peek() == "/":
-            take()
-            node = ("seq", node, elt_or_inverse())
-        return node
-
-    def elt_or_inverse():
-        if peek() == "^":
-            take()
-            return ("inv", elt())
-        return elt()
-
-    def elt():
-        node = primary()
-        while peek() in ("*", "+", "?"):
-            node = ({"*": "star", "+": "plus", "?": "opt"}[take()], node)
-        return node
-
-    def primary():
-        t = take()
-        if t is None:
-            raise ValueError(f"unexpected end of path expression {expr!r}")
-        if t == "(":
-            node = alternative()
-            if take() != ")":
-                raise ValueError(f"missing ')' in path {expr!r}")
-            return node
-        if t == "!":
-            return ("neg", negated_set())
-        if t in "/|^)*+?":
-            raise ValueError(f"unexpected {t!r} in path {expr!r}")
-        return ("pred", t)
-
-    def negated_set():
-        t = take()
-        if t == "(":
-            iris = []
-            while True:
-                it = take()
-                if it is None or it in "/|^()!*+?":
-                    raise ValueError(f"bad negated property set in {expr!r}")
-                iris.append(it)
-                sep = take()
-                if sep == ")":
-                    return iris
-                if sep != "|":
-                    raise ValueError(f"bad negated property set in {expr!r}")
-        if t is None or t in "/|^()!*+?":
-            raise ValueError(f"bad negated property set in {expr!r}")
-        return [t]
-
-    node = alternative()
-    if pos != len(toks):
-        raise ValueError(f"trailing tokens {toks[pos:]} in path {expr!r}")
-    return node
+    p = _Parser(expr, verbatim=True)
+    return p.whole(p.path)
 
 
 def path_expr(
@@ -488,6 +395,152 @@ def path_expr(
     return ev(tree)
 
 
+# --- solution-level algebra operators -----------------------------------
+# One body per operator, shared by the programmatic bgp_* / construct_triples
+# / group_solutions wrappers below and by sparkrdf.sparql's compiler, which
+# feeds them full group-pattern solutions.
+
+
+def _shared(left: DataFrame, right: DataFrame) -> list[str]:
+    return sorted(set(left.columns) & set(right.columns))
+
+
+def _left_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """OPTIONAL: a left outer equi-join on the shared variables, restricted
+    to the well-designed case (at least one shared variable)."""
+    shared = _shared(left, right)
+    if not shared:
+        raise ValueError(
+            "OPTIONAL group shares no variable with the required group "
+            "(not well-designed; the result would be a cartesian pad)"
+        )
+    return left.join(right, shared, "left")
+
+
+def _exists(left: DataFrame, right: DataFrame, negate: bool = False) -> DataFrame:
+    """FILTER [NOT] EXISTS: keep the left solutions with (``negate``:
+    without) a compatible right solution — a left-semi (anti) join against
+    the right side's deduped shared-variable key, so multiplicities never
+    inflate. With no shared variable the right side is uncorrelated: a
+    broadcast 1-row non-emptiness probe keeps all or nothing."""
+    shared = _shared(left, right)
+    if shared:
+        key = right.select(*shared).dropDuplicates(shared)
+        return left.join(key, shared, "left_anti" if negate else "left_semi")
+    flag = "_ne" if negate else "_pe"
+    probe = right.limit(1).select(F.lit(1).alias(flag))
+    hit = F.col(flag).isNull() if negate else F.col(flag).isNotNull()
+    return left.join(F.broadcast(probe), how="left").filter(hit).drop(flag)
+
+
+def _minus(left: DataFrame, right: DataFrame) -> DataFrame:
+    """MINUS: NOT EXISTS on the shared variables, except that disjoint
+    domains are never compatible, so with no shared variable nothing is
+    removed (§18.5)."""
+    return _exists(left, right, negate=True) if _shared(left, right) else left
+
+
+def _values_join(sol: DataFrame, values: list[dict]) -> DataFrame:
+    """VALUES: join the solutions with an inline table of ``var -> constant``
+    rows (``None`` is UNDEF, compatible with any binding). Without UNDEF
+    the condition is a plain equality per variable (a broadcast hash
+    join); only an UNDEF turns it into ``value IS NULL OR value = var`` (a
+    broadcast nested loop over the query's own rows)."""
+    vars_ = sorted({k for row in values for k in row})
+    missing = [v for v in vars_ if v not in sol.columns]
+    if missing:
+        raise ValueError(f"VALUES variables {missing} not bound by the pattern group")
+    rows = [tuple(row.get(v) for v in vars_) for row in values]
+    inline = localdf.local_rows_df(
+        sol.sparkSession, rows, ", ".join(f"`__v_{v}` string" for v in vars_)
+    )
+    undef = any(x is None for r in rows for x in r)
+    pred = None
+    for v in vars_:
+        c = F.col(f"__v_{v}") == F.col(v)
+        if undef:
+            c = F.col(f"__v_{v}").isNull() | c
+        pred = c if pred is None else pred & c
+    return sol.join(F.broadcast(inline), pred).drop(*[f"__v_{v}" for v in vars_])
+
+
+def _construct(sol: DataFrame, template: list[tuple]) -> DataFrame:
+    """CONSTRUCT: one projection of the solutions per template triple
+    (constants as literals, ``?var`` from the bindings), instantiations
+    with an unbound term dropped, then ONE (s, p, o) distinct — the output
+    is a graph (§16.2)."""
+    outs = []
+    for triple in template:
+        cols = []
+        for name, term in zip(("s", "p", "o"), triple):
+            if _is_var(term):
+                if term[1:] not in sol.columns:
+                    raise ValueError(
+                        f"template variable {term} not bound by the pattern group"
+                    )
+                cols.append(F.col(term[1:]).alias(name))
+            else:
+                cols.append(F.lit(term).alias(name))
+        outs.append(sol.select(*cols).filter(
+            F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
+        ))
+    acc = outs[0]
+    for nxt in outs[1:]:
+        acc = acc.unionByName(nxt)
+    return acc.dropDuplicates(["s", "p", "o"])
+
+
+#: (function, DISTINCT) -> aggregate Column builder over (variable, separator).
+#: SUM/AVG read the lexical form with try_cast: a non-numeric lexical is
+#: NULL, skipped like an unbound value, never an ANSI cast error. SAMPLE
+#: picks MIN and GROUP_CONCAT sorts — the spec leaves both open; these
+#: choices make repeated runs and re-partitions agree.
+_AGGREGATES = {
+    ("count", False): lambda c, sep: F.count(F.lit(1)) if c == "*" else F.count(c),
+    ("count", True): lambda c, sep: F.count_distinct(F.col(c)),
+    ("sum", False): lambda c, sep: F.sum(F.col(c).try_cast("double")),
+    ("avg", False): lambda c, sep: F.avg(F.col(c).try_cast("double")),
+    ("min", False): lambda c, sep: F.min(c),
+    ("max", False): lambda c, sep: F.max(c),
+    ("sample", False): lambda c, sep: F.min(c),
+    ("group_concat", False): lambda c, sep: F.array_join(
+        F.array_sort(F.collect_list(c)), sep
+    ),
+    ("group_concat", True): lambda c, sep: F.array_join(
+        F.array_sort(F.collect_set(c)), sep
+    ),
+}
+
+
+def _aggregate(sol: DataFrame, group_by: list[str], aggs: dict) -> DataFrame:
+    """Group the solutions by ``group_by`` and compute each
+    ``alias -> (fn, var, distinct, separator)`` aggregate (``var`` ``"*"``
+    for COUNT(*)) in ONE hash aggregate."""
+    missing = [v for v in group_by if v not in sol.columns]
+    if missing:
+        raise ValueError(f"GROUP BY variables {missing} not bound by the patterns")
+    exprs = []
+    for alias, (fn, var, distinct, sep) in aggs.items():
+        if (fn, False) not in _AGGREGATES:
+            have = sorted({f for f, _ in _AGGREGATES})
+            raise ValueError(f"unsupported aggregate {fn!r} (have {have})")
+        if (fn, distinct) not in _AGGREGATES:
+            raise ValueError(
+                "DISTINCT inside aggregates supports COUNT and GROUP_CONCAT only"
+            )
+        if var == "*" and fn != "count":
+            raise ValueError(
+                f"aggregate {fn.upper()} cannot take '*' (not valid SPARQL; "
+                "only COUNT can)"
+            )
+        if var != "*" and var not in sol.columns:
+            raise ValueError(f"aggregate variable ?{var} not bound by the patterns")
+        exprs.append(_AGGREGATES[fn, distinct](var, sep).alias(alias))
+    if not exprs:
+        raise ValueError("GROUP BY requires at least one aggregate")
+    return sol.groupBy(*group_by).agg(*exprs)
+
+
 def bgp_optional(
     stmts: DataFrame,
     patterns: list[tuple[str, str, str]],
@@ -509,15 +562,10 @@ def bgp_optional(
     constant filters, most-selective-first join order); the final left join
     is an equi-join on the shared variables — AQE-sized like any other.
     """
-    req = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col)
-    opt = bgp_match(stmts, optional, s_col=s_col, p_col=p_col, o_col=o_col)
-    shared = sorted(set(req.columns) & set(opt.columns))
-    if not shared:
-        raise ValueError(
-            "optional group shares no variable with the required group "
-            "(not well-designed; the result would be a cartesian pad)"
-        )
-    return req.join(opt, shared, "left")
+    return _left_join(
+        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col),
+        bgp_match(stmts, optional, s_col=s_col, p_col=p_col, o_col=o_col),
+    )
 
 
 def bgp_union(
@@ -567,12 +615,10 @@ def bgp_minus(
     shuffle on the shared variables — the anti side is only as wide as the
     shared-variable key, and AQE broadcast-converts it when small.
     """
-    left = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col)
-    right = bgp_match(stmts, minus, s_col=s_col, p_col=p_col, o_col=o_col)
-    shared = sorted(set(left.columns) & set(right.columns))
-    if not shared:
-        return left  # disjoint domains: SPARQL MINUS removes nothing
-    return left.join(right.select(*shared).dropDuplicates(shared), shared, "left_anti")
+    return _minus(
+        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col),
+        bgp_match(stmts, minus, s_col=s_col, p_col=p_col, o_col=o_col),
+    )
 
 
 def bgp_values(
@@ -600,29 +646,9 @@ def bgp_values(
     """
     if not values:
         raise ValueError("bgp_values requires at least one VALUES row")
-    vars_ = sorted({k for row in values for k in row})
-    sol = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col)
-    missing = [v for v in vars_ if v not in sol.columns]
-    if missing:
-        raise ValueError(f"VALUES variables {missing} not bound by the pattern group")
-    spark = stmts.sparkSession
-    rows = [tuple(row.get(v) for v in vars_) for row in values]
-    inline = localdf.local_rows_df(
-        spark, rows, ", ".join(f"`__v_{v}` string" for v in vars_)
+    return _values_join(
+        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col), values
     )
-    has_undef = any(v is None for r in rows for v in r)
-    if not has_undef:
-        cond = [F.col(f"__v_{v}") == F.col(v) for v in vars_]
-    else:
-        cond = [
-            F.col(f"__v_{v}").isNull() | (F.col(f"__v_{v}") == F.col(v))
-            for v in vars_
-        ]
-    pred = cond[0]
-    for c in cond[1:]:
-        pred = pred & c
-    joined = sol.join(F.broadcast(inline), pred)
-    return joined.drop(*[f"__v_{v}" for v in vars_])
 
 
 def construct_triples(
@@ -648,26 +674,9 @@ def construct_triples(
     """
     if not template:
         raise ValueError("construct_triples requires a non-empty template")
-    sol = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col)
-    outs = []
-    for s, p, o in template:
-        cols = []
-        for name, term in zip(("s", "p", "o"), (s, p, o)):
-            if _is_var(term):
-                var = term[1:]
-                if var not in sol.columns:
-                    raise ValueError(f"template variable ?{var} not bound by patterns")
-                cols.append(F.col(var).alias(name))
-            else:
-                cols.append(F.lit(term).alias(name))
-        proj = sol.select(*cols)
-        outs.append(proj.filter(
-            F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
-        ))
-    acc = outs[0]
-    for nxt in outs[1:]:
-        acc = acc.unionByName(nxt)
-    return acc.dropDuplicates(["s", "p", "o"])
+    return _construct(
+        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col), template
+    )
 
 
 def describe_cbd(
@@ -767,21 +776,10 @@ def bgp_not_exists(
     1-row existence gate — ``limit(1)`` on the inner group, never a
     per-row correlated re-evaluation.
     """
-    left = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col,
-                     g_col=g_col)
-    right = bgp_match(stmts, negated, s_col=s_col, p_col=p_col, o_col=o_col,
-                      g_col=g_col)
-    shared = sorted(set(left.columns) & set(right.columns))
-    if shared:
-        return left.join(
-            right.select(*shared).dropDuplicates(shared), shared, "left_anti"
-        )
-    # uncorrelated NOT EXISTS: all-or-nothing on the inner group's existence
-    probe = right.limit(1).select(F.lit(1).alias("_ne"))
-    return (
-        left.join(F.broadcast(probe), how="left")
-        .filter(F.col("_ne").isNull())
-        .drop("_ne")
+    cols = dict(s_col=s_col, p_col=p_col, o_col=o_col, g_col=g_col)
+    return _exists(
+        bgp_match(stmts, patterns, **cols), bgp_match(stmts, negated, **cols),
+        negate=True,
     )
 
 
@@ -803,11 +801,13 @@ def group_solutions(
     variable ``"*"`` counts solutions; GROUP_CONCAT takes an optional
     third tuple element, the separator, default ``" "`` per §18.5.1.7),
     then apply the optional ``HAVING`` expression (a SQL boolean over
-    group keys and aliases). Numeric aggregates cast the lexical form to
-    double, SPARQL's simple-literal arithmetic. Two determinism choices
-    the spec leaves open: SAMPLE picks MIN (any value is conformant) and
-    GROUP_CONCAT concatenates in sorted order (the spec fixes no order) —
-    both so repeated runs and distributed re-partitions agree.
+    group keys and aliases). SUM and AVG read the lexical form as a
+    double; a non-numeric lexical counts as unbound (``try_cast``: NULL,
+    skipped by the aggregate), as in :func:`sparkrdf.sparql.sparql_query`.
+    Two determinism choices the spec leaves open: SAMPLE picks MIN (any
+    value is conformant) and GROUP_CONCAT concatenates in sorted order
+    (the spec fixes no order) — both so repeated runs and distributed
+    re-partitions agree.
 
     Scale shape: the BGP join tree feeds ONE hash aggregate keyed on the
     group variables — partial (map-side) aggregation applies to every
@@ -817,118 +817,16 @@ def group_solutions(
     """
     sol = bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col,
                     g_col=g_col)
-    missing = [v for v in group_by if v not in sol.columns]
-    if missing:
-        raise ValueError(f"GROUP BY variables {missing} not bound by the patterns")
-    fns = {
-        "count": lambda c, sep: F.count(F.lit(1)) if c == "*" else F.count(c),
-        "count_distinct": lambda c, sep: F.count_distinct(F.col(c)),
-        "sum": lambda c, sep: F.sum(F.col(c).cast("double")),
-        "avg": lambda c, sep: F.avg(F.col(c).cast("double")),
-        "min": lambda c, sep: F.min(c),
-        "max": lambda c, sep: F.max(c),
-        "sample": lambda c, sep: F.min(c),
-        "group_concat": lambda c, sep: F.array_join(
-            F.array_sort(F.collect_list(c)), sep
-        ),
-    }
-    aggs = []
+    specs = {}
     for alias, spec in aggregates.items():
-        fn, var = spec[0], spec[1]
-        sep = spec[2] if len(spec) > 2 else " "
-        key = fn.lower()
-        if key not in fns:
-            raise ValueError(f"unsupported aggregate {fn!r} (have {sorted(fns)})")
-        if var == "*" and key != "count":
-            raise ValueError(f"aggregate {fn!r} cannot take '*' (only count)")
-        if var != "*" and var not in sol.columns:
-            raise ValueError(f"aggregate variable ?{var} not bound by the patterns")
-        aggs.append(fns[key](var, sep).alias(alias))
-    if not aggs:
-        raise ValueError("group_solutions requires at least one aggregate")
-    out = sol.groupBy(*group_by).agg(*aggs)
+        fn = spec[0].lower()
+        fn, distinct = ("count", True) if fn == "count_distinct" else (fn, False)
+        specs[alias] = (fn, spec[1], distinct, spec[2] if len(spec) > 2 else " ")
+    out = _aggregate(sol, group_by, specs)
     return out.filter(having) if having else out
 
 
 # --- SPARQL FILTER expressions + solution modifiers (§17.2, §15) ---
-
-
-#: SPARQL 1.1 §19.7 ECHAR: the escapes a quoted literal may carry
-_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"', "'": "'", "\\": "\\"}
-
-
-def _scan_string(text: str, i: int) -> tuple[str, int]:
-    """Decode the quoted literal whose opening quote is ``text[i]``: returns
-    its value (ECHAR escapes decoded; any other escaped character stands
-    for itself) and the offset just past the closing quote."""
-    quote, j, n = text[i], i + 1, len(text)
-    out = []
-    while j < n and text[j] != quote:
-        if text[j] == "\\" and j + 1 < n:
-            out.append(_ECHAR.get(text[j + 1], text[j + 1]))
-            j += 2
-        else:
-            out.append(text[j])
-            j += 1
-    if j >= n:
-        raise ValueError(f"unterminated string at offset {i} in {text!r}")
-    return "".join(out), j + 1
-
-
-def _tokenize_expr(expr: str) -> list[tuple[str, object]]:
-    """Tokenize a SPARQL FILTER expression: variables, numeric and string
-    literals, booleans, function names, comparison/logical operators,
-    parens and commas."""
-    import re as _re
-
-    toks: list[tuple[str, object]] = []
-    i, n = 0, len(expr)
-    while i < n:
-        c = expr[i]
-        if c.isspace():
-            i += 1
-            continue
-        if c == "?":
-            m = _re.match(r"\?(\w+)", expr[i:])
-            if not m:
-                raise ValueError(f"bad variable at offset {i} in {expr!r}")
-            toks.append(("var", m.group(1)))
-            i += m.end()
-        elif c in "\"'":
-            val, i = _scan_string(expr, i)
-            toks.append(("str", val))
-        elif c.isdigit() or (
-            c in "+-"
-            and i + 1 < n
-            and (expr[i + 1].isdigit() or expr[i + 1] == ".")
-            # '+/-' is a SIGN only when it cannot continue a value: after a
-            # variable, literal or ')' it is the binary arithmetic operator
-            # (so '?n-1' parses as ?n minus 1, not ?n followed by -1)
-            and not (
-                toks and (toks[-1][0] in ("var", "num", "str", "bool")
-                          or toks[-1] == ("op", ")"))
-            )
-        ):
-            m = _re.match(r"[+-]?\d*\.?\d+(?:[eE][+-]?\d+)?", expr[i:])
-            toks.append(("num", float(m.group(0))))
-            i += m.end()
-        elif expr[i : i + 2] in ("&&", "||", "!=", "<=", ">="):
-            toks.append(("op", expr[i : i + 2]))
-            i += 2
-        elif c in "=<>!(),+-*/":
-            toks.append(("op", c))
-            i += 1
-        else:
-            m = _re.match(r"[A-Za-z_][A-Za-z0-9_]*", expr[i:])
-            if not m:
-                raise ValueError(f"bad token at offset {i} in {expr!r}")
-            word = m.group(0)
-            if word.lower() in ("true", "false"):
-                toks.append(("bool", word.lower() == "true"))
-            else:
-                toks.append(("fn", word.lower()))
-            i += m.end()
-    return toks
 
 
 def parse_filter(expr: str):
@@ -941,118 +839,27 @@ def parse_filter(expr: str):
     ``sameTerm`` (these need ``bgp_match(term_meta=True)``), the value
     functions ``str strlen ucase lcase concat substr replace strbefore
     strafter abs round ceil floor if coalesce lang datatype md5 sha1
-    sha256 encode_for_uri``, variables, numeric/string/boolean
-    literals, and grouping parens. Precedence: ``||`` < ``&&`` < ``!`` <
-    comparison/IN < ``+ -`` < ``* /``.
+    sha256 encode_for_uri``, ``?var``/``$var`` variables,
+    numeric/string/boolean literals, and grouping parens. Precedence:
+    ``||`` < ``&&`` < ``!`` < comparison/IN < ``+ -`` < ``* /``. A ``+``
+    or ``-`` after a variable, a literal or ``)`` is the binary operator
+    (``?n-1`` is ?n minus 1). The string is read by the SPARQL lexer and
+    the expression grammar :func:`sparkrdf.sparql.sparql_query` uses for
+    FILTER, BIND, HAVING and SELECT expressions.
     """
-    toks = _tokenize_expr(expr)
-    pos = 0
+    from sparkrdf.sparql import _Parser
 
-    def peek():
-        return toks[pos] if pos < len(toks) else (None, None)
-
-    def take(expect=None):
-        nonlocal pos
-        t = peek()
-        if expect is not None and t != expect:
-            raise ValueError(f"expected {expect} at token {pos} in {expr!r}, got {t}")
-        pos += 1
-        return t
-
-    def or_expr():
-        node = and_expr()
-        while peek() == ("op", "||"):
-            take()
-            node = ("or", node, and_expr())
-        return node
-
-    def and_expr():
-        node = unary()
-        while peek() == ("op", "&&"):
-            take()
-            node = ("and", node, unary())
-        return node
-
-    def unary():
-        if peek() == ("op", "!"):
-            take()
-            return ("not", unary())
-        return relational()
-
-    def relational():
-        left = additive()
-        kind, val = peek()
-        if kind == "op" and val in ("=", "!=", "<", "<=", ">", ">="):
-            take()
-            return ("cmp", val, left, additive())
-        if (kind, val) == ("fn", "in"):
-            take()
-            return ("in", left, in_list())
-        if (kind, val) == ("fn", "not"):
-            take()
-            if peek() != ("fn", "in"):
-                raise ValueError(f"expected IN after NOT in {expr!r}")
-            take()
-            return ("not", ("in", left, in_list()))
-        return left
-
-    def in_list():
-        take(("op", "("))
-        items = []
-        if peek() != ("op", ")"):
-            items.append(additive())
-            while peek() == ("op", ","):
-                take()
-                items.append(additive())
-        take(("op", ")"))
-        return items
-
-    def additive():
-        node = multiplicative()
-        while peek() in (("op", "+"), ("op", "-")):
-            _, op = take()
-            node = ("arith", op, node, multiplicative())
-        return node
-
-    def multiplicative():
-        node = primary()
-        while peek() in (("op", "*"), ("op", "/")):
-            _, op = take()
-            node = ("arith", op, node, primary())
-        return node
-
-    def primary():
-        kind, val = take()
-        if kind == "op" and val == "(":
-            node = or_expr()
-            take(("op", ")"))
-            return node
-        if kind == "var":
-            return ("var", val)
-        if kind in ("num", "str", "bool"):
-            return (kind, val)
-        if kind == "fn":
-            take(("op", "("))
-            args = []
-            if peek() != ("op", ")"):
-                args.append(or_expr())
-                while peek() == ("op", ","):
-                    take()
-                    args.append(or_expr())
-            take(("op", ")"))
-            return ("call", val, args)
-        raise ValueError(f"unexpected token {kind, val} in {expr!r}")
-
-    node = or_expr()
-    if pos != len(toks):
-        raise ValueError(f"trailing tokens at {pos} in {expr!r}")
-    return node
+    p = _Parser(expr, verbatim=True)
+    return p.whole(p.expr)
 
 
 _BOOL_NODE_KINDS = ("or", "and", "not", "cmp", "in")
 _BOOL_FNS = ("regex", "bound", "contains", "strstarts", "strends",
              "isiri", "isuri", "isblank", "isliteral", "isnumeric",
              "langmatches", "sameterm")
+#: functions that read the hidden per-variable term metadata
+_META_FNS = ("lang", "datatype", "isiri", "isuri", "isblank", "isliteral",
+             "isnumeric", "langmatches", "sameterm")
 _VALUE_FNS = ("str", "strlen", "ucase", "lcase", "concat", "substr",
               "replace", "strbefore", "strafter", "abs", "round", "ceil",
               "floor", "if", "coalesce", "lang", "datatype",
@@ -1081,7 +888,7 @@ _XSD_NUMERIC = (
 
 
 class _ExprCompiler:
-    """Compile parse_filter ASTs to Columns over a solution table whose
+    """Compile expression ASTs (:func:`parse_filter`) to Columns over a solution table whose
     variable columns hold LEXICAL FORMS (strings). SPARQL numeric
     coercion: an arithmetic operand or a comparison against a numeric
     value casts the variable side to double via try_cast — a non-numeric
@@ -1385,19 +1192,29 @@ class _ExprCompiler:
         raise ValueError(f"unknown boolean function {fn!r}")
 
 
-def _compile_filter(node, columns: list[str]):
-    """Compile a parse_filter AST to a boolean Column (see _ExprCompiler)."""
-    return _ExprCompiler(columns).boolean(node)
+def _ast(expr):
+    """An expression string parsed by :func:`parse_filter`; an AST (what
+    :mod:`sparkrdf.sparql` passes) as is."""
+    return parse_filter(expr) if isinstance(expr, str) else expr
+
+
+def _needs_term_meta(expr) -> bool:
+    """Whether evaluating this expression reads the hidden term-metadata
+    columns (``bgp_match(term_meta=True)``): a walk over its call nodes."""
+    node = _ast(expr)
+    if node[0] == "call" and node[1] in _META_FNS:
+        return True
+    kids = [k for c in node[1:] for k in (c if isinstance(c, list) else [c])]
+    return any(_needs_term_meta(k) for k in kids if isinstance(k, tuple))
 
 
 def compile_value_expr(expr: str, columns: list[str]):
     """Compile a SPARQL value expression (the §17.4 subset parse_filter
-    accepts) to a Column over a solution table — the engine behind BIND
-    and SELECT expressions. Arithmetic yields double, string functions
-    string, comparisons boolean; plain variables keep their lexical
-    form."""
-    node = parse_filter(expr)
-    col, _ = _ExprCompiler(columns).value(node)
+    accepts; a string or its parsed AST) to a Column over a solution
+    table — the engine behind BIND and SELECT expressions. Arithmetic
+    yields double, string functions string, comparisons boolean; plain
+    variables keep their lexical form."""
+    col, _ = _ExprCompiler(columns).value(_ast(expr))
     return col
 
 
@@ -1405,7 +1222,7 @@ def bgp_extend(solutions: DataFrame, assignments) -> DataFrame:
     """SPARQL ``BIND`` — the algebra's Extend(§18.4) — over a solution
     table: each ``(var, expression)`` adds a new column computed from the
     bindings in scope (arithmetic, string/numeric builtins, IF/COALESCE —
-    see :func:`parse_filter`). Re-binding an in-scope variable raises,
+    see :func:`parse_filter`; a string or its parsed AST). Re-binding an in-scope variable raises,
     per the grammar's BIND restriction (§10.1). ``assignments`` is a
     dict or a list of pairs; entries apply in order, so later BINDs can
     reference earlier ones.
@@ -1431,7 +1248,8 @@ def bgp_filter(solutions: DataFrame, expr: str) -> DataFrame:
     :func:`parse_filter`): comparisons with numeric coercion, ``&& || !``,
     ``IN / NOT IN``, arithmetic ``+ - * /``, ``regex()``, ``bound()``,
     ``contains/strstarts/strends`` and the value builtins (strlen, ucase,
-    substr, if, coalesce, ...). Error rows (e.g. a non-numeric lexical
+    substr, if, coalesce, ...); ``expr`` is a string or its parsed AST.
+    Error rows (e.g. a non-numeric lexical
     compared numerically) are dropped, per the spec's effective-boolean-
     value rule.
 
@@ -1440,7 +1258,7 @@ def bgp_filter(solutions: DataFrame, expr: str) -> DataFrame:
     single-pattern BGP, Catalyst pushes the predicate into the statements
     scan.
     """
-    return solutions.filter(_compile_filter(parse_filter(expr), solutions.columns))
+    return solutions.filter(_ExprCompiler(solutions.columns).boolean(_ast(expr)))
 
 
 def order_solutions(

@@ -65,6 +65,19 @@ anything else):
   qualifiers on patterns are rejected (the statements model keeps those in
   separate columns — filter on them directly when needed).
 
+One front end: :func:`_tokenize` is the only SPARQL lexer and
+:class:`_Parser` holds the only expression and property-path grammars.
+A query is lexed and parsed once; the parsed dict holds ASTs (FILTER,
+BIND, HAVING and SELECT expressions, paths, ``(var, "asc"|"desc")``
+ORDER BY keys), never source text. The string entry points of
+:mod:`sparkrdf.query` (``parse_filter``, ``parse_path`` and through them
+``bgp_filter``, ``bgp_extend``, ``compile_value_expr``, ``path_expr``)
+run the same lexer and grammar rules on a bare string. OPTIONAL, MINUS,
+FILTER [NOT] EXISTS, VALUES, CONSTRUCT and aggregation each have one
+body in :mod:`sparkrdf.query`, called from here and from the
+programmatic ``bgp_*`` / ``construct_triples`` / ``group_solutions``
+wrappers.
+
 Scale shape: this module only PARSES; every compiled plan is the same
 DataFrame program the underlying operator documents (pushed-down constant
 scans, selectivity-ordered equi-joins, codegen filters, hash aggregates,
@@ -82,24 +95,22 @@ from sparkrdf.localdf import local_rows_df
 from sparkrdf.query import (
     META_SUFFIXES,
     bgp_extend,
+    bgp_filter,
     bgp_match,
     compile_value_expr,
     describe_cbd,
     order_solutions,
-    parse_filter,
     path_expr,
-    _compile_filter,
-    _scan_string,
+    _aggregate,
+    _construct,
+    _exists,
+    _left_join,
+    _minus,
+    _needs_term_meta,
+    _values_join,
 )
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
-#: expressions whose evaluation needs the hidden per-variable term-metadata
-#: columns (bgp_match term_meta) — matched against a group's FILTER/BIND text
-_META_FN_RE = re.compile(
-    r"(?i)\b(lang|datatype|isiri|isuri|isblank|isliteral|isnumeric"
-    r"|langmatches|sameterm)\s*\("
-)
 
 _KEYWORDS = {
     "select", "distinct", "where", "filter", "optional", "minus", "union",
@@ -111,34 +122,79 @@ _KEYWORDS = {
 }
 
 _AGG_FNS = {"count", "sum", "avg", "min", "max", "sample", "group_concat"}
+_CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
 
 
 class _Tok:
-    __slots__ = ("kind", "val")
+    __slots__ = ("kind", "val", "raw")
 
-    def __init__(self, kind, val):
+    def __init__(self, kind, val, raw=None):
+        # raw: the source spelling of a keyword (val is lower-cased)
         self.kind, self.val = kind, val
+        self.raw = val if raw is None else raw
 
     def __repr__(self):  # pragma: no cover - debug aid
         return f"{self.kind}:{self.val!r}"
 
 
+#: SPARQL 1.1 §19.7 ECHAR: the escapes a quoted literal may carry
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"', "'": "'", "\\": "\\"}
+#: §19.8 IRIREF: no whitespace, no <>"{}|^`\ inside the brackets
+_IRIREF = re.compile(r'<([^<>"{}|^`\\\x00-\x20]*)>')
+_NUMBER = re.compile(r"[+-]?\d*\.?\d+(?:[eE][+-]?\d+)?")
+
+
+def _scan_string(text: str, i: int) -> tuple[str, int]:
+    """Decode the quoted literal whose opening quote is ``text[i]``: returns
+    its value (ECHAR escapes decoded; any other escaped character stands
+    for itself) and the offset just past the closing quote."""
+    quote, j, n = text[i], i + 1, len(text)
+    out = []
+    while j < n and text[j] != quote:
+        if text[j] == "\\" and j + 1 < n:
+            out.append(_ECHAR.get(text[j + 1], text[j + 1]))
+            j += 2
+        else:
+            out.append(text[j])
+            j += 1
+    if j >= n:
+        raise ValueError(f"unterminated string at offset {i} in {text!r}")
+    return "".join(out), j + 1
+
+
+def _ends_operand(t: _Tok) -> bool:
+    """Whether ``t`` can end an expression operand: a variable, a literal
+    or ``)``. After one, ``+``/``-`` is the binary operator (``?n-1`` is
+    ?n minus 1, not ?n followed by -1) and ``<`` opens an IRI only when a
+    whole §19.8 IRIREF follows (``?s <p> ?o``), else it compares
+    (``?n < 5``)."""
+    return (t.kind in ("var", "str", "num")
+            or (t.kind == "punct" and t.val == ")")
+            or (t.kind == "word" and t.val.lower() in ("true", "false")))
+
+
 def _tokenize(q: str) -> list[_Tok]:
+    """The one SPARQL lexer: query strings, and the FILTER / BIND / path
+    strings the :mod:`sparkrdf.query` entry points take."""
     toks: list[_Tok] = []
     i, n = 0, len(q)
     while i < n:
         c = q[i]
+        after_operand = bool(toks) and _ends_operand(toks[-1])
         if c.isspace():
             i += 1
         elif c == "#":  # comment to end of line
             j = q.find("\n", i)
             i = n if j < 0 else j + 1
-        elif c == "<":
+        elif c == "<" and not after_operand:
             j = q.find(">", i)
             if j < 0:
                 raise ValueError(f"unterminated <iri> at offset {i}")
             toks.append(_Tok("iri", q[i + 1 : j]))
             i = j + 1
+        elif c == "<" and (m := _IRIREF.match(q, i)):
+            toks.append(_Tok("iri", m.group(1)))
+            i = m.end()
         elif c == "?" or c == "$":
             m = re.match(r"[?$](\w+)", q[i:])
             if not m:
@@ -159,43 +215,45 @@ def _tokenize(q: str) -> list[_Tok]:
             if q[i : i + 2] == "^^":
                 raise ValueError("^^datatype literal patterns are not supported; "
                                  "filter on the o_datatype column instead")
-        elif c.isdigit() or (c in "+-" and i + 1 < n and q[i + 1].isdigit()):
-            m = re.match(r"[+-]?\d*\.?\d+(?:[eE][+-]?\d+)?", q[i:])
+        elif (m := _NUMBER.match(q, i)) and (
+            c.isdigit() or (c in "+-" and not after_operand)
+        ):
             toks.append(_Tok("num", m.group(0)))
-            i += m.end()
+            i = m.end()
         elif q[i : i + 2] in (">=", "<=", "!=", "&&", "||"):
-            # keep two-char FILTER operators whole so capture_parens can
-            # round-trip them into parse_filter's lexer verbatim
             toks.append(_Tok("punct", q[i : i + 2]))
             i += 2
         elif c in "{}().;,*=<>!&|/^+-":
-            # FILTER expressions are re-lexed by parse_filter; here we only
-            # need structural tokens plus balanced-paren capture ('-' only
-            # reaches here as a binary operator — the sign case folds into
-            # the numeric literal branch above)
             toks.append(_Tok("punct", c))
             i += 1
         else:
             m = re.match(r"[A-Za-z_][A-Za-z0-9_.\-]*(:[A-Za-z0-9_.\-]*)?", q[i:])
             if not m:
                 raise ValueError(f"bad token at offset {i}: {q[i:i+20]!r}")
-            word = m.group(0)
+            # §19.8: a name never ends in '.', so 'ex:o.' is ex:o then '.'
+            word = m.group(0).rstrip(".")
             if ":" in word:
                 toks.append(_Tok("pname", word))
             elif word.lower() in _KEYWORDS:
-                toks.append(_Tok("kw", word.lower()))
+                toks.append(_Tok("kw", word.lower(), word))
             else:
                 toks.append(_Tok("word", word))
-            i += m.end()
+            i += len(word)
     return toks
 
 
 class _Parser:
-    def __init__(self, q: str):
+    """Recursive descent over one token stream. ``verbatim`` parses a bare
+    FILTER / path string (:func:`sparkrdf.query.parse_filter`,
+    :func:`sparkrdf.query.parse_path`): there a path's bare words and
+    prefixed names are IRIs as written."""
+
+    def __init__(self, q: str, verbatim: bool = False):
         self.q = q
         self.toks = _tokenize(q)
         self.pos = 0
         self.prefixes: dict[str, str] = {}
+        self.verbatim = verbatim
 
     # -- token helpers ---------------------------------------------------
     def peek(self) -> _Tok | None:
@@ -212,7 +270,7 @@ class _Parser:
     def take(self):
         t = self.peek()
         if t is None:
-            raise ValueError("unexpected end of query")
+            raise ValueError(f"unexpected end of input in {self.q!r}")
         self.pos += 1
         return t
 
@@ -246,88 +304,207 @@ class _Parser:
             return RDF_TYPE
         if t.kind in ("str", "num") and position == "o":
             return t.val
+        if position == "o" and (signed := self.signed_number(t)):
+            return signed
         raise ValueError(f"unexpected term {t!r} in {position} position")
 
-    # -- property paths ----------------------------------------------------
+    def signed_number(self, t: _Tok) -> str | None:
+        """A sign the lexer read as the binary operator (it follows an
+        operand, as in ``?s ?p -5``) plus the number after it."""
+        nxt = self.peek()
+        if (t.kind == "punct" and t.val in "+-" and nxt is not None
+                and nxt.kind == "num" and nxt.val[0] not in "+-"):
+            self.take()
+            return t.val + nxt.val
+        return None
+
+    # -- property paths (§9.1) --------------------------------------------
     def path_term(self):
         """Predicate position: a variable, a plain IRI constant, or a
-        SPARQL 1.1 property-path expression. Paths are rendered into
-        :func:`sparkrdf.query.parse_path` syntax (``<iri>`` atoms, the
-        operators verbatim, explicit grouping parens so precedence is
-        carried structurally) and returned as a ``("path", src)`` marker
-        the compiler evaluates via :func:`sparkrdf.query.path_expr`."""
+        ``("path", ast)`` marker the compiler evaluates via
+        :func:`sparkrdf.query.path_expr`."""
         t = self.peek()
         if t is not None and t.kind == "var":
             self.take()
             return "?" + t.val
-        rendered, plain = self._path_alt()
-        return plain if plain is not None else ("path", rendered)
+        node = self.path()
+        return node[1] if node[0] == "pred" else ("path", node)
 
-    def _path_alt(self):
-        rendered, plain = self._path_seq()
-        parts = [rendered]
+    def path(self):
+        """A property-path expression → the tuple AST
+        :func:`sparkrdf.query.path_expr` evaluates. Precedence mirrors the
+        spec: ``|`` < ``/`` < ``^`` < postfix ``* + ?``."""
+        node = self._path_seq()
         while self.at_punct("|"):
             self.take()
-            nxt, _ = self._path_seq()
-            parts.append(nxt)
-        if len(parts) == 1:
-            return rendered, plain
-        return "(" + "|".join(parts) + ")", None
+            node = ("alt", node, self._path_seq())
+        return node
 
     def _path_seq(self):
-        rendered, plain = self._path_elt()
-        parts = [rendered]
+        node = self._path_elt_or_inverse()
         while self.at_punct("/"):
             self.take()
-            nxt, _ = self._path_elt()
-            parts.append(nxt)
-        if len(parts) == 1:
-            return rendered, plain
-        return "(" + "/".join(parts) + ")", None
+            node = ("seq", node, self._path_elt_or_inverse())
+        return node
 
-    def _path_elt(self):
-        inv = False
+    def _path_elt_or_inverse(self):
         if self.at_punct("^"):
             self.take()
-            inv = True
-        rendered, plain = self._path_primary()
-        if inv:
-            rendered, plain = "(^" + rendered + ")", None
-        if self.at_punct("*") or self.at_punct("+") or self.at_punct("?"):
-            mod = self.take().val
-            rendered, plain = "(" + rendered + mod + ")", None
-        return rendered, plain
+            return ("inv", self._path_elt())
+        return self._path_elt()
+
+    def _path_elt(self):
+        node = self._path_primary()
+        while self.at_punct("*") or self.at_punct("+") or self.at_punct("?"):
+            node = ({"*": "star", "+": "plus", "?": "opt"}[self.take().val], node)
+        return node
+
+    def _path_primary(self):
+        if self.at_punct("("):
+            self.take()
+            node = self.path()
+            self.expect_punct(")")
+            return node
+        if self.at_punct("!"):  # forward negated property set
+            self.take()
+            if not self.at_punct("("):
+                return ("neg", [self._path_iri()])
+            self.take()
+            iris = [self._path_iri()]
+            while self.at_punct("|"):
+                self.take()
+                iris.append(self._path_iri())
+            self.expect_punct(")")
+            return ("neg", iris)
+        return ("pred", self._path_iri())
 
     def _path_iri(self) -> str:
         t = self.take()
         if t.kind == "iri":
             return t.val
+        if self.verbatim and t.kind in ("pname", "word", "kw"):
+            return t.raw
         if t.kind == "pname":
             return self.expand(t.val)
         if t.kind == "kw" and t.val == "a":
             return RDF_TYPE
         raise ValueError(f"expected IRI in property path, got {t!r}")
 
-    def _path_primary(self):
+    # -- expressions (§17.2-§17.4 subset) ---------------------------------
+    def expr(self):
+        """A FILTER / BIND / SELECT / HAVING expression → the tuple AST
+        :class:`sparkrdf.query._ExprCompiler` compiles. Precedence: ``||``
+        < ``&&`` < ``!`` < comparison/IN < ``+ -`` < ``* /``."""
+        node = self._and()
+        while self.at_punct("||"):
+            self.take()
+            node = ("or", node, self._and())
+        return node
+
+    def _and(self):
+        node = self._unary()
+        while self.at_punct("&&"):
+            self.take()
+            node = ("and", node, self._unary())
+        return node
+
+    def _unary(self):
+        if self.at_punct("!"):
+            self.take()
+            return ("not", self._unary())
+        return self._relational()
+
+    def _relational(self):
+        left = self._additive()
         t = self.peek()
-        if t is not None and t.kind == "punct" and t.val == "!":
+        if t is not None and t.kind == "punct" and t.val in _CMP_OPS:
             self.take()
-            if self.at_punct("("):
+            return ("cmp", t.val, left, self._additive())
+        if self._at_word("in"):
+            self.take()
+            return ("in", left, self._args(self._additive))
+        if self.at_kw("not"):
+            self.take()
+            if not self._at_word("in"):
+                raise ValueError("expected IN after NOT")
+            self.take()
+            return ("not", ("in", left, self._args(self._additive)))
+        return left
+
+    def _at_word(self, w: str) -> bool:
+        t = self.peek()
+        return t is not None and t.kind == "word" and t.val.lower() == w
+
+    def _args(self, item) -> list:
+        """``( item, ... )`` — an IN list or a call's arguments."""
+        self.expect_punct("(")
+        items = []
+        if not self.at_punct(")"):
+            items.append(item())
+            while self.at_punct(","):
                 self.take()
-                alts = ["<" + self._path_iri() + ">"]
-                while self.at_punct("|"):
-                    self.take()
-                    alts.append("<" + self._path_iri() + ">")
-                self.expect_punct(")")
-                return "!(" + "|".join(alts) + ")", None
-            return "!<" + self._path_iri() + ">", None
-        if t is not None and t.kind == "punct" and t.val == "(":
-            self.take()
-            rendered, _ = self._path_alt()
+                items.append(item())
+        self.expect_punct(")")
+        return items
+
+    def _additive(self):
+        node = self._multiplicative()
+        while self.at_punct("+") or self.at_punct("-"):
+            node = ("arith", self.take().val, node, self._multiplicative())
+        return node
+
+    def _multiplicative(self):
+        node = self._primary()
+        while self.at_punct("*") or self.at_punct("/"):
+            node = ("arith", self.take().val, node, self._primary())
+        return node
+
+    def _primary(self):
+        t = self.take()
+        if t.kind == "punct" and t.val == "(":
+            node = self.expr()
             self.expect_punct(")")
-            return rendered, None
-        iri = self._path_iri()
-        return "<" + iri + ">", iri
+            return node
+        if t.kind == "var":
+            return ("var", t.val)
+        if t.kind == "num":
+            return ("num", float(t.val))
+        if t.kind == "str":
+            return ("str", t.val)
+        if t.kind == "iri":  # IRIs compare as plain strings in our model
+            return ("str", t.val)
+        if t.kind == "pname":
+            return ("str", self.expand(t.val))
+        if t.kind == "word" and t.val.lower() in ("true", "false"):
+            return ("bool", t.val.lower() == "true")
+        if t.kind in ("word", "kw") and self.at_punct("("):
+            return ("call", t.val.lower(), self._args(self.expr))
+        raise ValueError(f"unexpected token {t!r} in expression")
+
+    def bracketted(self):
+        """``( expr )`` — a FILTER constraint or a HAVING condition."""
+        self.expect_punct("(")
+        node = self.expr()
+        self.expect_punct(")")
+        return node
+
+    def as_expr(self) -> tuple:
+        """``expr AS ?alias )`` (the open paren is already consumed) →
+        (AST, alias)."""
+        node = self.expr()
+        self.expect_kw("as")
+        alias = self.take()
+        if alias.kind != "var":
+            raise ValueError("expected ?alias after AS")
+        self.expect_punct(")")
+        return node, alias.val
+
+    def whole(self, rule):
+        """Run one grammar rule over the entire token stream."""
+        node = rule()
+        if self.peek() is not None:
+            raise ValueError(f"trailing tokens from {self.peek()!r} in {self.q!r}")
+        return node
 
     # -- prologue + select -----------------------------------------------
     def prologue(self):
@@ -420,7 +597,7 @@ class _Parser:
         proj: list[str] | None = []
         # alias -> (fn, var, distinct, separator)
         aggs: dict[str, tuple[str, str, bool, str]] = {}
-        sel_exprs: dict[str, str] = {}  # alias -> value-expression source
+        sel_exprs: dict[str, tuple] = {}  # alias -> value-expression AST
         if self.at_punct("*"):
             self.take()
             proj = None
@@ -448,8 +625,8 @@ class _Parser:
                         proj.append(alias)
                     else:
                         # (expr AS ?alias) — a SELECT expression (§18.4.4)
-                        src, alias = self.capture_as_expr()
-                        sel_exprs[alias] = src
+                        node, alias = self.as_expr()
+                        sel_exprs[alias] = node
                         proj.append(alias)
                 else:
                     break
@@ -507,40 +684,6 @@ class _Parser:
             raise ValueError("expected ?alias after AS")
         self.expect_punct(")")
         return alias.val, (fn_tok.val, var, agg_distinct, sep)
-
-    def capture_as_expr(self) -> tuple[str, str]:
-        """Capture ``expr AS ?alias )`` (the open paren is already
-        consumed): the expression source up to the LAST depth-0 ``AS``,
-        rendered for parse_filter's lexer, plus the alias."""
-        depth = 1
-        toks: list[_Tok] = []
-        while depth:
-            t = self.take()
-            if t.kind == "punct" and t.val == "(":
-                depth += 1
-            elif t.kind == "punct" and t.val == ")":
-                depth -= 1
-                if not depth:
-                    break
-            toks.append(t)
-        depth = 0
-        as_at = None
-        for i, t in enumerate(toks):
-            if t.kind == "punct" and t.val == "(":
-                depth += 1
-            elif t.kind == "punct" and t.val == ")":
-                depth -= 1
-            elif depth == 0 and t.kind == "kw" and t.val == "as":
-                as_at = i
-        if as_at is None or as_at != len(toks) - 2:
-            raise ValueError("expected (expression AS ?alias)")
-        alias = toks[-1]
-        if alias.kind != "var":
-            raise ValueError("expected ?alias after AS")
-        src = " ".join(self.render_tok(t) for t in toks[:as_at])
-        if not src:
-            raise ValueError("empty expression before AS")
-        return src, alias.val
 
     # -- update operations (SPARQL 1.1 Update subset) ----------------------
     def parse_update(self) -> list[dict]:
@@ -675,40 +818,12 @@ class _Parser:
         self.expect_punct("}")
         return pats
 
-    def capture_parens(self) -> str:
-        """Capture the source text of a balanced (...) — handed to
-        parse_filter, which has its own lexer."""
-        self.expect_punct("(")
-        depth = 1
-        parts: list[str] = []
-        while depth:
-            t = self.take()
-            if t.kind == "punct" and t.val == "(":
-                depth += 1
-            elif t.kind == "punct" and t.val == ")":
-                depth -= 1
-                if not depth:
-                    break
-            parts.append(self.render_tok(t))
-        return " ".join(parts)
-
-    def render_tok(self, t: _Tok) -> str:
-        if t.kind == "var":
-            return "?" + t.val
-        if t.kind == "str":
-            escaped = t.val.replace("\\", "\\\\").replace('"', '\\"')
-            return f'"{escaped}"'
-        if t.kind == "iri":
-            return f'"{t.val}"'  # IRIs compare as plain strings in our model
-        if t.kind == "pname":
-            return f'"{self.expand(t.val)}"'
-        return str(t.val)
-
     def group(self) -> dict:
-        """One { ... } group → {'patterns': [...], 'filters': [...],
+        """One { ... } group → {'patterns': [...], 'filters': [expr AST],
         'optionals': [...], 'minuses': [...], 'not_exists': [...],
-        'values': (vars, rows) | None, 'unions': [[group, ...], ...],
-        'binds': [(var, expr_src)], 'subqueries': [parsed query dicts]}."""
+        'exists': [...], 'values': [row dicts] | None,
+        'unions': [[group, ...], ...], 'binds': [(var, expr AST)],
+        'subqueries': [parsed query dicts]}."""
         self.expect_punct("{")
         out = {
             "patterns": [],
@@ -752,7 +867,7 @@ class _Parser:
                     self.take()
                     out["exists"].append(self.group())
                 else:
-                    out["filters"].append(self.capture_parens())
+                    out["filters"].append(self.bracketted())
             elif self.at_kw("optional"):
                 self.take()
                 out["optionals"].append(self.group())
@@ -769,8 +884,8 @@ class _Parser:
             elif self.at_kw("bind"):
                 self.take()
                 self.expect_punct("(")
-                src, var = self.capture_as_expr()
-                out["binds"].append((var, src))
+                node, var = self.as_expr()
+                out["binds"].append((var, node))
             else:
                 out["patterns"].extend(self.triples_block_step())
         self.expect_punct("}")
@@ -834,19 +949,19 @@ class _Parser:
         t = self.take()
         if t.kind == "kw" and t.val == "undef":
             return None
-        if t.kind in ("str", "num"):
-            return t.val
-        if t.kind == "iri":
+        if t.kind in ("str", "num", "iri"):
             return t.val
         if t.kind == "pname":
             return self.expand(t.val)
+        if signed := self.signed_number(t):
+            return signed
         raise ValueError(f"bad VALUES datum {t!r}")
 
     # -- solution modifiers -----------------------------------------------
     def modifiers(self, sub: bool = False) -> dict:
         group_by: list[str] = []
-        having: str | None = None
-        order: list[str] = []
+        having = None  # expression AST
+        order: list[tuple[str, str]] = []  # (var, "asc" | "desc")
         limit = offset = None
         if self.at_kw("group"):
             self.take()
@@ -861,7 +976,7 @@ class _Parser:
                 raise ValueError("GROUP BY needs at least one variable")
         if self.at_kw("having"):
             self.take()
-            having = self.capture_parens()
+            having = self.bracketted()
         if self.at_kw("order"):
             self.take()
             self.expect_kw("by")
@@ -873,12 +988,12 @@ class _Parser:
                     if v.kind != "var":
                         raise ValueError(f"expected ?var in {d.upper()}()")
                     self.expect_punct(")")
-                    order.append(f"{d}(?{v.val})")
+                    order.append((v.val, d))
                     continue
                 t = self.peek()
                 if t is not None and t.kind == "var":
                     self.take()
-                    order.append(f"?{t.val}")
+                    order.append((t.val, "asc"))
                     continue
                 break
             if not order:
@@ -904,36 +1019,6 @@ class _Parser:
             "limit": limit,
             "offset": offset,
         }
-
-
-def _anti_compatible(left: DataFrame, right: DataFrame, spec: str) -> DataFrame:
-    shared = sorted(set(left.columns) & set(right.columns))
-    if not shared:
-        if spec == "minus":
-            return left  # disjoint domains: MINUS removes nothing
-        probe = right.limit(1).select(F.lit(1).alias("_ne"))
-        return (
-            left.join(F.broadcast(probe), how="left")
-            .filter(F.col("_ne").isNull())
-            .drop("_ne")
-        )
-    return left.join(right.select(*shared).dropDuplicates(shared), shared, "left_anti")
-
-
-def _semi_compatible(left: DataFrame, right: DataFrame) -> DataFrame:
-    """FILTER EXISTS: keep solutions with a compatible row in ``right`` —
-    a left-semi join on the shared variables (deduped right side, so
-    multiplicities never inflate); with no shared variable it degrades to
-    a broadcast 1-row non-emptiness probe, like its NOT EXISTS twin."""
-    shared = sorted(set(left.columns) & set(right.columns))
-    if not shared:
-        probe = right.limit(1).select(F.lit(1).alias("_pe"))
-        return (
-            left.join(F.broadcast(probe), how="left")
-            .filter(F.col("_pe").isNotNull())
-            .drop("_pe")
-        )
-    return left.join(right.select(*shared).dropDuplicates(shared), shared, "left_semi")
 
 
 def sparql_query(
@@ -1034,6 +1119,10 @@ def _compile_group(
     each a FULL group compiled RECURSIVELY (so FILTER/BIND/paths/nested
     OPTIONAL/UNION work inside them) — then VALUES, BIND, FILTER."""
     cols = dict(s_col=s_col, p_col=p_col, o_col=o_col)
+
+    def sub(group):
+        return _compile_group(stmts, group, numeric, s_col, p_col, o_col, g_col)
+
     path_pats = [p for p in body["patterns"] if isinstance(p[1], tuple)]
     plain_pats = [p for p in body["patterns"] if not isinstance(p[1], tuple)]
 
@@ -1050,8 +1139,7 @@ def _compile_group(
     # targeted "needs term metadata" ValueError — a clear error, never a
     # silently wrong result
     meta_needed = any(
-        _META_FN_RE.search(e)
-        for e in list(body["filters"]) + [src for _, src in body["binds"]]
+        _needs_term_meta(e) for e in body["filters"] + [e for _, e in body["binds"]]
     )
     sol = (bgp_match(stmts, plain_pats, g_col=g_col, term_meta=meta_needed,
                      **cols)
@@ -1066,7 +1154,7 @@ def _compile_group(
             # path's statement universe to that graph (a pushed-down
             # pre-filter on the scan); a variable graph term would need
             # one closure per graph binding and is rejected instead
-            s, (_, path_src), o, g = pat
+            s, (_, tree), o, g = pat
             if g.startswith("?"):
                 raise ValueError(
                     "property paths inside GRAPH with a variable graph "
@@ -1074,9 +1162,9 @@ def _compile_group(
                 )
             path_stmts = stmts.filter(F.col(g_col) == g)
         else:
-            s, (_, path_src), o = pat
+            s, (_, tree), o = pat
             path_stmts = stmts
-        rel = path_expr(path_stmts, path_src, **cols)
+        rel = path_expr(path_stmts, tree, **cols)
         if s.startswith("?"):
             rel = rel.withColumnRenamed("s", s[1:])
             if o == s:
@@ -1093,12 +1181,7 @@ def _compile_group(
                 rel = rel.filter(F.col("o") == o).drop("o")
         if not rel.columns:
             # both endpoints constant: a pure existence test (ASK-shaped)
-            probe = rel.limit(1).select(F.lit(1).alias("_pe"))
-            if sol is None:
-                sol = probe.drop("_pe")
-            else:
-                sol = (sol.join(F.broadcast(probe), how="left")
-                       .filter(F.col("_pe").isNotNull()).drop("_pe"))
+            sol = rel.limit(1) if sol is None else _exists(sol, rel)
             continue
         if sol is None:
             sol = rel
@@ -1133,10 +1216,7 @@ def _compile_group(
         # unbound semantics). The union itself is a zero-shuffle
         # unionByName; it then joins the enclosing group's solutions on
         # the shared variables like any other pattern relation.
-        rels = [
-            _compile_group(stmts, b, numeric, s_col, p_col, o_col, g_col)
-            for b in branches
-        ]
+        rels = [sub(b) for b in branches]
         urel = rels[0]
         for nxt in rels[1:]:
             urel = urel.unionByName(nxt, allowMissingColumns=True)
@@ -1164,53 +1244,21 @@ def _compile_group(
         sol = sol.join(urel, shared)
 
     for opt in body["optionals"]:
-        right = _compile_group(stmts, opt, numeric, s_col, p_col, o_col, g_col)
-        shared = sorted(set(sol.columns) & set(right.columns))
-        if not shared:
-            raise ValueError(
-                "OPTIONAL group shares no variable with the required group "
-                "(not well-designed)"
-            )
-        sol = sol.join(right, shared, "left")
+        sol = _left_join(sol, sub(opt))
     for mn in body["minuses"]:
-        sol = _anti_compatible(
-            sol, _compile_group(stmts, mn, numeric, s_col, p_col, o_col, g_col),
-            "minus",
-        )
+        sol = _minus(sol, sub(mn))
     for ne in body["not_exists"]:
-        sol = _anti_compatible(
-            sol, _compile_group(stmts, ne, numeric, s_col, p_col, o_col, g_col),
-            "not_exists",
-        )
+        sol = _exists(sol, sub(ne), negate=True)
     for ex in body["exists"]:
-        sol = _semi_compatible(
-            sol, _compile_group(stmts, ex, numeric, s_col, p_col, o_col, g_col)
-        )
+        sol = _exists(sol, sub(ex))
     if body["values"]:
-        rows = body["values"]
-        vars_ = sorted({k for row in rows for k in row})
-        missing = [v for v in vars_ if v not in sol.columns]
-        if missing:
-            raise ValueError(f"VALUES variables {missing} not bound by the group")
-        spark = stmts.sparkSession
-        inline = local_rows_df(
-            spark,
-            [tuple(row.get(v) for v in vars_) for row in rows],
-            ", ".join(f"`__v_{v}` string" for v in vars_),
-        )
-        pred = None
-        for v in vars_:
-            c = F.col(f"__v_{v}").isNull() | (F.col(f"__v_{v}") == F.col(v))
-            pred = c if pred is None else pred & c
-        sol = sol.join(F.broadcast(inline), pred).drop(
-            *[f"__v_{v}" for v in vars_]
-        )
+        sol = _values_join(sol, body["values"])
     if body["binds"]:
         # BIND extends the group's solutions in textual order; applied
         # before FILTER, whose scope is the whole group (§17.2)
         sol = bgp_extend(sol, body["binds"])
-    for fexpr in body["filters"]:
-        sol = sol.filter(_compile_filter(parse_filter(fexpr), sol.columns))
+    for node in body["filters"]:
+        sol = bgp_filter(sol, node)
     if meta_needed:
         sol = sol.drop(*[c for c in sol.columns if c.endswith(META_SUFFIXES)])
     return sol
@@ -1221,77 +1269,11 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
     """CONSTRUCT templating / aggregation / projection / solution
     modifiers over a compiled group solution."""
     if q["form"] == "construct":
-        if q["order"]:
-            sol = order_solutions(
-                sol, q["order"], limit=q["limit"], offset=q["offset"] or 0,
-                numeric=numeric,
-            )
-        else:
-            if q["offset"]:
-                sol = sol.offset(q["offset"])
-            if q["limit"] is not None:
-                sol = sol.limit(q["limit"])
-        outs = []
-        for s, p, o in q["template"]:
-            tcols = []
-            for name, term in zip(("s", "p", "o"), (s, p, o)):
-                if term.startswith("?"):
-                    var = term[1:]
-                    if var not in sol.columns:
-                        raise ValueError(
-                            f"template variable ?{var} not bound by the group"
-                        )
-                    tcols.append(F.col(var).alias(name))
-                else:
-                    tcols.append(F.lit(term).alias(name))
-            outs.append(sol.select(*tcols).filter(
-                F.col("s").isNotNull() & F.col("p").isNotNull()
-                & F.col("o").isNotNull()
-            ))
-        acc = outs[0]
-        for nxt in outs[1:]:
-            acc = acc.unionByName(nxt)
-        # CONSTRUCT output is a GRAPH: duplicates collapse (§16.2) — the
-        # same single dedup exchange every statement producer ends with
-        return acc.dropDuplicates(["s", "p", "o"])
+        return _construct(_modifiers(sol, q, numeric), q["template"])
 
     aggs, group_by = q["aggs"], q["group_by"]
     sel_exprs = q.get("sel_exprs") or {}
     if aggs or group_by:
-        fns = {
-            "count": lambda c, d, sep: (
-                F.count_distinct(F.col(c)) if d
-                else (F.count(F.lit(1)) if c == "*" else F.count(c))
-            ),
-            "sum": lambda c, d, sep: F.sum(F.col(c).try_cast("double")),
-            "avg": lambda c, d, sep: F.avg(F.col(c).try_cast("double")),
-            "min": lambda c, d, sep: F.min(c),
-            "max": lambda c, d, sep: F.max(c),
-            # the spec lets SAMPLE pick ANY group member — MIN so repeated
-            # runs and re-partitions agree (determinism over arbitrariness)
-            "sample": lambda c, d, sep: F.min(c),
-            # the spec fixes no GROUP_CONCAT order — sorted, same reason;
-            # still one partial-aggregatable exchange
-            "group_concat": lambda c, d, sep: F.array_join(
-                F.array_sort(F.collect_set(c) if d else F.collect_list(c)),
-                sep,
-            ),
-        }
-        exprs = []
-        for alias, (fn, var, dist, sep) in aggs.items():
-            if var == "*" and fn != "count":
-                raise ValueError(f"{fn.upper()}(*) is not valid SPARQL")
-            if var != "*" and var not in sol.columns:
-                raise ValueError(f"aggregate variable ?{var} not bound")
-            if dist and fn not in ("count", "group_concat"):
-                raise ValueError(
-                    "DISTINCT inside aggregates supports COUNT and "
-                    "GROUP_CONCAT only"
-                )
-            exprs.append(fns[fn](var, dist, sep).alias(alias))
-        bad = [g for g in group_by if g not in sol.columns]
-        if bad:
-            raise ValueError(f"GROUP BY variables {bad} not bound")
         non_agg = [v for v in (q["proj"] or []) if v not in aggs]
         stray = [v for v in non_agg if v not in group_by and v not in sel_exprs]
         if stray:
@@ -1299,22 +1281,18 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
                 f"projected variables {stray} are neither aggregated nor "
                 "grouped (SPARQL 1.1 §18.2.4 projection restriction)"
             )
-        if not exprs:
-            raise ValueError("GROUP BY requires at least one aggregate in SELECT")
-        sol = sol.groupBy(*group_by).agg(*exprs)
+        sol = _aggregate(sol, group_by, aggs)
         if q["having"]:
-            sol = sol.filter(
-                _compile_filter(parse_filter(q["having"]), sol.columns)
-            )
+            sol = bgp_filter(sol, q["having"])
     elif q["having"]:
         raise ValueError("HAVING requires GROUP BY / aggregates")
 
     # SELECT expressions extend AFTER grouping (§18.4.4) so they can
     # reference aggregate aliases; like BIND they are codegen projections
-    for alias, src in sel_exprs.items():
+    for alias, node in sel_exprs.items():
         if alias in sol.columns:
             raise ValueError(f"SELECT expression alias ?{alias} already bound")
-        sol = sol.withColumn(alias, compile_value_expr(src, sol.columns))
+        sol = sol.withColumn(alias, compile_value_expr(node, sol.columns))
 
     if q["proj"] is not None:
         missing = [v for v in q["proj"] if v not in sol.columns]
@@ -1323,17 +1301,19 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
         sol = sol.select(*q["proj"])
     if q["distinct"]:
         sol = sol.dropDuplicates()
+    return _modifiers(sol, q, numeric)
+
+
+def _modifiers(sol: DataFrame, q: dict, numeric: tuple) -> DataFrame:
+    """ORDER BY / OFFSET / LIMIT."""
     if q["order"]:
-        sol = order_solutions(
+        return order_solutions(
             sol, q["order"], limit=q["limit"], offset=q["offset"] or 0,
             numeric=numeric,
         )
-    else:
-        if q["offset"]:
-            sol = sol.offset(q["offset"])
-        if q["limit"] is not None:
-            sol = sol.limit(q["limit"])
-    return sol
+    if q["offset"]:
+        sol = sol.offset(q["offset"])
+    return sol.limit(q["limit"]) if q["limit"] is not None else sol
 
 
 # --- SPARQL 1.1 Update (a functional subset) ---------------------------

@@ -45,6 +45,17 @@ def test_bgp_prefix_a_and_predicate_object_list(stmts):
     assert rows(got) == [("d1", "55"), ("d2", "41")]
 
 
+def test_prefixed_name_before_triple_dot(stmts):
+    # §19.8: a prefixed name never ends in '.', so "ex:Doc." is ex:Doc
+    # followed by the triple terminator
+    got = sparql_query(stmts, """
+        PREFIX ex: <http://ex.org/>
+        SELECT ?d ?n WHERE { ?d a ex:Doc. ?d ex:tokenCount ?n. }
+        ORDER BY ?d
+    """)
+    assert rows(got) == [("d1", "55"), ("d2", "41")]
+
+
 def test_filter_numeric_comparison_and_order_desc_numeric(stmts):
     got = sparql_query(stmts, """
         PREFIX ex: <http://ex.org/>
@@ -882,14 +893,14 @@ def test_sparql_hash_and_encode_functions(spark):
 
 
 def test_string_escapes_decode_alike_in_both_lexers(spark):
-    """SPARQL ECHAR escapes (§19.7) decode the same way in the FILTER lexer
-    (bgp_filter / parse_filter) and in the query lexer (sparql_query)."""
-    from sparkrdf.query import _tokenize_expr, bgp_filter, bgp_match
+    """SPARQL ECHAR escapes (§19.7) decode the same way whether the literal
+    reaches the one lexer in a FILTER string (bgp_filter / parse_filter)
+    or inside a query (sparql_query)."""
+    from sparkrdf.query import bgp_filter, bgp_match
     from sparkrdf.sparql import _tokenize
 
     src = r'"\t\b\n\r\f\"\'\\\q"'
     want = "\t\b\n\r\f\"'\\q"
-    assert _tokenize_expr(src) == [("str", want)]
     assert [(t.kind, t.val) for t in _tokenize(src)] == [("str", want)]
 
     st = spark.createDataFrame(
@@ -901,3 +912,108 @@ def test_string_escapes_decode_alike_in_both_lexers(spark):
     by_pattern = sparql_query(st, r'SELECT ?d WHERE { ?d <note> "a\tb\nc" . }')
     assert [r.d for r in by_filter.collect()] == ["hit"]
     assert rows(by_query) == rows(by_pattern) == [("hit",)]
+
+
+
+# --- one front end: string entry points ≡ query strings ------------------
+
+RT = [
+    ("d1", "n", "0"), ("d2", "n", "2"), ("d3", "n", "-3"), ("d4", "n", "abc"),
+    ("d1", "l", "e"), ("d2", "l", "de"), ("d3", "l", 'x\t"y'), ("d4", "l", "fr"),
+    ("a", "p", "b"), ("b", "q", "c"), ("c", "q", "d"), ("a", "p1", "c"),
+    ("b", "p2", "d"), ("c", "r", "a"),
+]
+
+
+@pytest.fixture(scope="module")
+def rt(spark):
+    return spark.createDataFrame(RT, "s string, p string, o string").cache()
+
+
+@pytest.mark.parametrize("kind, expr, want", [
+    ("filter", "?n-1 > 0", {"d2"}),
+    ("filter", "?n > -1", {"d1", "d2"}),
+    ("filter", "STRLEN(?l)-1 >= 1", {"d2", "d3", "d4"}),
+    ("filter", '?l NOT IN ("e", "de")', {"d3", "d4"}),
+    ("filter", "$n >= 0 && ?n<2", {"d1"}),
+    ("filter", r'?l = "x\t\"y"', {"d3"}),
+    ("bind", "?n-1", None),
+    ("bind", 'concat(?l, "-", $n)', None),
+    ("path", "^<p>/<q>*", None),
+    ("path", "!(<p1>|<p2>)", None),
+])
+def test_string_entry_points_match_query_strings(rt, kind, expr, want):
+    """Each FILTER / BIND / path string returns the same rows through the
+    programmatic entry point as embedded in a query string: one lexer and
+    one grammar read both."""
+    from sparkrdf.query import bgp_extend, bgp_filter, bgp_match, path_expr
+
+    group = "?d <n> ?n . ?d <l> ?l ."
+    sol = bgp_match(rt, [("?d", "n", "?n"), ("?d", "l", "?l")])
+    if kind == "filter":
+        by_api = bgp_filter(sol, expr).select("d", "n", "l")
+        by_query = sparql_query(
+            rt, f"SELECT ?d ?n ?l WHERE {{ {group} FILTER({expr}) }}")
+        assert {r.d for r in by_api.collect()} == want
+    elif kind == "bind":
+        by_api = bgp_extend(sol, [("b", expr)]).select("d", "b")
+        by_query = sparql_query(
+            rt, f"SELECT ?d ?b WHERE {{ {group} BIND({expr} AS ?b) }}")
+    else:
+        by_api = path_expr(rt, expr)
+        by_query = sparql_query(rt, f"SELECT ?s ?o WHERE {{ ?s {expr} ?o }}")
+    assert sorted(rows(by_api), key=repr) == sorted(rows(by_query), key=repr)
+    assert by_api.count() > 0
+
+
+def test_term_metadata_is_bound_only_for_term_function_calls(spark):
+    """Only a CALL to a term function binds the hidden __kind/__lang/__dt
+    columns; the same name inside a string literal does not."""
+    from sparkrdf.ttl import parse_ttl, statements_df
+
+    st = statements_df(spark, parse_ttl(
+        '@prefix ex: <http://e.com/> .\n'
+        'ex:a ex:label "hello"@en .\n'
+        'ex:b ex:label "lang(x"@de .'))
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    lit = sparql_query(st, 'SELECT ?x WHERE { ?x <http://e.com/label> ?l . '
+                           'FILTER(contains(?l, "lang(")) }')
+    plan = analyzed(lit)
+    assert not any(m in plan for m in ("__kind", "__lang", "__dt"))
+    assert rows(lit) == [("http://e.com/b",)]
+    call = sparql_query(st, 'SELECT ?x WHERE { ?x <http://e.com/label> ?l . '
+                            'FILTER(lang(?l) = "en") }')
+    assert "l__lang" in analyzed(call)
+    assert rows(call) == [("http://e.com/a",)]
+
+
+def test_sum_of_non_numeric_lexical_agrees(spark):
+    """SUM/AVG skip a non-numeric lexical (try_cast) on both surfaces; the
+    programmatic group_solutions used to raise CAST_INVALID_INPUT under
+    ANSI."""
+    from sparkrdf.query import group_solutions
+
+    st = spark.createDataFrame(
+        [("d1", "score", "10"), ("d1", "score", "100"), ("d1", "score", "n/a")],
+        "s string, p string, o string",
+    )
+    by_api = group_solutions(st, [("?s", "score", "?v")], ["s"],
+                             {"total": ("sum", "v"), "mean": ("avg", "v")})
+    by_query = sparql_query(st, """
+        SELECT ?s (SUM(?v) AS ?total) (AVG(?v) AS ?mean)
+        WHERE { ?s <score> ?v } GROUP BY ?s""")
+    assert rows(by_api) == rows(by_query) == [("d1", 110.0, 55.0)]
+
+
+def test_values_without_undef_is_a_hash_join(rt):
+    got = sparql_query(rt, 'SELECT ?d WHERE { ?d <l> ?l . VALUES ?l { "de" } }')
+    assert rows(got) == [("d2",)]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "BroadcastNestedLoopJoin" not in plan
+    got = sparql_query(rt, """
+        SELECT ?d ?n WHERE { ?d <n> ?n ; <l> ?l .
+          VALUES (?l ?n) { ("de" UNDEF) (UNDEF "0") ("fr" "1") } }""")
+    assert sorted(rows(got)) == [("d1", "0"), ("d2", "2")]
