@@ -2151,14 +2151,19 @@ def q_graph_khop(spark, sf_dir):
 def q_kg_path_closure(spark, sf_dir):
     """Transitive closure (SPARQL p+ / unbounded AQL traversal) of the doc
     KG's IRI-object triples via iterative doubling (sparkrdf/query.py
-    path_closure) — path length squares per round, 6 rounds cover 64-edge
-    chains. Oracle: DuckDB recursive-CTE closure over the same edge set —
+    path_closure) — path length doubles per round, run until a round adds
+    nothing. Oracle: DuckDB recursive-CTE closure over the same edge set —
     an independent one-edge-at-a-time definition of reachability."""
     from sparkrdf.query import path_closure
 
     stmts = dockg.doc_triples(spark, _docs(spark, sf_dir))
+    # path_closure reads its input twice (gate count, then collect or the
+    # doubling loop): one barrier instead of two doc-KG derivations
     iri_edges = (
-        stmts.filter(F.col("o_kind") == "URIRef").select("s", "o").distinct()
+        stmts.filter(F.col("o_kind") == "URIRef")
+        .select("s", "o")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     return path_closure(iri_edges)
 
@@ -2313,7 +2318,7 @@ def q_graph_ktruss(spark, sf_dir):
     ktruss): iterative triangle-support peel to a fixpoint — every
     surviving edge sits in ≥1 triangle of the SURVIVING subgraph, the
     cohesive-core extractor stricter than k-core. Converges in 2 rounds on
-    this input; the operator raises (never truncates) past max_rounds.
+    this input; the operator peels until a round drops nothing.
     Oracle: the peel unrolled 4 rounds in DuckDB (rounds past the fixpoint
     are no-ops, so any unroll ≥ the convergence round is exact)."""
     from sparkrdf.graphops import ktruss
@@ -2328,7 +2333,7 @@ def q_graph_coreness(spark, sf_dir):
     (sparkrdf/graphops.py coreness): per-node core numbers via the
     distributed h-index iteration (Lü et al. 2016) — monotone local
     updates, no sequential peeling order, converges here in 5 rounds
-    (explicit changed-count; raises past max_rounds). Oracle: the same
+    (explicit changed-count). Oracle: the same
     h-index algebra (ROW_NUMBER window + max(least)) unrolled 6 rounds in
     DuckDB — rounds past the fixpoint are no-ops."""
     from sparkrdf.graphops import coreness
@@ -2706,7 +2711,7 @@ def q_kg_owl_entailed(spark, sf_dir):
     transitive (its entailment is the co-mention component relation,
     self-loops included) and kg:mentions gets its inverse
     kg:mentionedIn materialized. Axioms broadcast; the only closure runs
-    over the entity-graph edges, (p, node)-keyed iterative doubling.
+    over the entity-graph edges (sparkrdf/query.py path_closure per p).
     Oracle: recursive-CTE closure over the symmetrized relation + the
     inverse projection, unioned distinct."""
     from sparkrdf.reason import owl_materialize

@@ -311,7 +311,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 16,
 ) -> DataFrame:
     """Connected components over an undirected pair list →
     (id, component) where component = MIN node id reachable from ``id``.
@@ -320,10 +319,11 @@ def connected_components(
     ("hash-to-min"): each round every node adopts the smallest label among
     itself and its neighbors, then labels are propagated transitively via a
     label→label self-join — converging in O(log d) rounds for diameter d
-    (near-dup clusters are shallow: d rarely exceeds a handful, and
-    ``max_iter`` = 16 covers d up to 2^16). Each round is one shuffle keyed
-    by node id; lineage is truncated per round (``localCheckpoint``) so the
-    plan stays flat.
+    (near-dup clusters are shallow: d rarely exceeds a handful). The loop
+    stops when no label changes; labels only decrease, and each is a node
+    id, so it always gets there. Each round is one shuffle keyed by node
+    id; lineage is truncated per round (``localCheckpoint``) so the plan
+    stays flat.
 
     **Driver fast path** (the :mod:`sparkrdf.localdf` gate): the pair
     graph is already tiny relative to the corpus after LSH + exact
@@ -353,8 +353,7 @@ def connected_components(
         .withColumn("lbl", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    changed = -1
-    for _ in range(max_iter):
+    while True:
         # neighborhood minimum: min(own label, labels of all neighbors).
         # The self rows carry the PREVIOUS label in `old` (neighbors carry
         # null), so one aggregate yields both the new minimum and the value
@@ -394,15 +393,7 @@ def connected_components(
         changed = jumped.filter(F.col("lbl") != F.col("old")).count()
         labels = jumped.select("node", "lbl")
         if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — component labels would be "
-            "split; raise max_iter (doubling reach: max_iter=k covers "
-            "diameter 2^k)"
-        )
-    return labels.select("node", F.col("lbl").alias("component"))
+            return labels.select("node", F.col("lbl").alias("component"))
 
 
 def dedup_clusters(

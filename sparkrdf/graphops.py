@@ -1289,10 +1289,7 @@ def reciprocity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     )
 
 
-def ktruss(
-    edges: DataFrame, k: int, src: str = "u", dst: str = "v",
-    max_rounds: int = 30,
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int, src: str = "u", dst: str = "v") -> DataFrame:
     """k-truss decomposition (Cohen 2008): the maximal subgraph in which
     every edge participates in at least ``k - 2`` triangles — the standard
     "cohesive core" extractor, stricter than k-core because it demands
@@ -1305,11 +1302,10 @@ def ktruss(
     work bounded by oriented out-degree ≤ √m, Zipf-hub-proof), counts each
     edge's triangle support with one map-side-combinable aggregation, and
     drops edges below ``k - 2``. Dropping edges can break other edges'
-    triangles, so the peel repeats until a fixpoint; the peeled set shrinks
-    monotonically, so the loop terminates in ≤ |E| rounds (in practice a
-    handful). Lineage is truncated per round (eager localCheckpoint) and
-    convergence is an explicit count — if ``max_rounds`` is exhausted while
-    still shrinking it RAISES rather than returning a non-truss.
+    triangles, so the peel repeats until a round drops nothing; the edge
+    set only shrinks, so that takes ≤ |E| rounds (in practice a handful).
+    Lineage is truncated per round (eager localCheckpoint) and convergence
+    is an explicit count.
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
@@ -1328,7 +1324,7 @@ def ktruss(
     rows = collect_if_small(e)
     if rows is not None:
         pairs = [(r["u"], r["v"]) for r in rows]
-        for _ in range(max_rounds):
+        while True:
             nbr: dict = {}
             for u, v in pairs:
                 nbr.setdefault(u, set()).add(v)
@@ -1342,12 +1338,8 @@ def ktruss(
                     edges.sparkSession, sorted(kept), [("u", idt), ("v", idt)]
                 )
             pairs = kept
-        raise RuntimeError(
-            f"ktruss still peeling after {max_rounds} rounds (graph adversarially "
-            "deep); raise max_rounds"
-        )
     n = e.count()
-    for _ in range(max_rounds):
+    while True:
         tri = triangles(e)
         sup = (
             tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -1366,10 +1358,6 @@ def ktruss(
         if m == n:
             return kept
         e, n = kept, m
-    raise RuntimeError(
-        f"ktruss still peeling after {max_rounds} rounds (graph adversarially "
-        "deep); raise max_rounds"
-    )
 
 
 def assortativity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -1427,9 +1415,7 @@ def assortativity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame
     )
 
 
-def coreness(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_rounds: int = 50,
-) -> DataFrame:
+def coreness(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Full k-core decomposition: every node's core NUMBER (the largest k
     such that the node survives k-core peeling) — the standard cohesion
     ranking, one number per node where :func:`kcore` answers a fixed-k
@@ -1448,8 +1434,8 @@ def coreness(
     edge list against the |V|-row value table and one node-keyed window +
     aggregate — the shuffles carry node-sized tables except the edge join,
     whose partitioning on the neighbor key is reused every round.
-    Convergence is an explicit changed-count; exhausting ``max_rounds``
-    RAISES rather than returning non-converged numbers.
+    Both loops stop when no value changes: values are non-increasing
+    integers ≥ 0, so they always get there.
     """
     e = (
         edges.select(
@@ -1464,14 +1450,14 @@ def coreness(
     ).localCheckpoint(eager=True)
     # The h-index iteration is pure integer arithmetic (degrees, sorted
     # neighbor values, min/max) — the driver loop is bit-identical to the
-    # distributed rounds, same convergence raise.
+    # distributed rounds, same convergence test.
     rows = collect_if_small(both)
     if rows is not None:
         adj: dict = {}
         for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         cv = {n: len(nbrs) for n, nbrs in adj.items()}
-        for _ in range(max_rounds):
+        while True:
             new = {}
             for n, nbrs in adj.items():
                 h = 0
@@ -1490,15 +1476,12 @@ def coreness(
                     sorted(cv.items()),
                     [("n", both.schema["u"].dataType), ("coreness", IntegerType())],
                 )
-        raise RuntimeError(
-            f"coreness h-index iteration not converged after {max_rounds} rounds"
-        )
     c = (
         both.groupBy(F.col("u").alias("n"))
         .agg(F.count("*").cast("int").alias("c"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    while True:
         nb = both.join(c.select(F.col("n").alias("v"), F.col("c").alias("cv")), "v")
         w = Window.partitionBy("u").orderBy(F.col("cv").desc(), F.col("v"))
         h = (
@@ -1522,9 +1505,6 @@ def coreness(
         c = newc.select("n", "c")
         if changed == 0:
             return c.select("n", F.col("c").alias("coreness"))
-    raise RuntimeError(
-        f"coreness h-index iteration not converged after {max_rounds} rounds"
-    )
 
 
 def _scc_local(edge_list) -> dict:
@@ -1587,13 +1567,7 @@ def _scc_local(edge_list) -> dict:
     return comp
 
 
-def scc(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    max_rounds: int = 40,
-    max_prop_iter: int = 40,
-) -> DataFrame:
+def scc(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Strongly connected components of a directed graph → ``(n, scc)``
     with ``scc`` = MIN member id — the distributed Forward-Backward-Trim
     coloring algorithm (Slota-Rajamanickam-Madduri IPDPS 2014 family;
@@ -1614,13 +1588,13 @@ def scc(
        BACKWARD over same-color edges (forward reachability from r is
        implied by the color). Assign them, remove them, repeat.
 
-    Every class assigns at least its root per round, so the loop
-    terminates; ``max_rounds``/``max_prop_iter`` exhaustion raises —
-    never a silently wrong partial answer. Note ``max_rounds`` bounds the
-    number of COLOR-CLASS GENERATIONS (worst case one class of the minimal
-    live id collected per round — i.e. the SCC-DAG depth), not the graph
-    diameter; ``max_prop_iter`` bounds the per-phase frontier iterations,
-    which ARE O(diameter). Both raise loudly rather than truncate.
+    Every loop runs to its own fixpoint. The outer loop ends when no node
+    is live: every class assigns at least its root per round, so the live
+    set shrinks each round (the round count is the SCC-DAG depth, not the
+    graph diameter). COLOR stops when no label changes — labels are
+    non-increasing node ids; COLLECT stops when the backward reach adds no
+    node — it only grows, within the class. Both take O(diameter)
+    iterations.
 
     Scale shape: every phase is a frontier join against an edge table
     repartitioned once per round and reused; label tables are
@@ -1661,7 +1635,7 @@ def scc(
         return new if acc is None else acc.unionByName(new)
 
     empty = live_n.select("n", F.col("n").alias("scc")).limit(0)
-    for _ in range(max_rounds):
+    while True:
         if n_live == 0:
             return (done if done is not None else empty).localCheckpoint(
                 eager=True
@@ -1708,7 +1682,7 @@ def scc(
         # old-vs-new join (same idiom as dedupe.connected_components).
         lab = live_n.select("n", F.col("n").alias("c"))
         _c_type = lab.schema["c"].dataType
-        for i in range(max_prop_iter + 1):
+        while True:
             cand = live_e.join(lab, live_e["s"] == lab["n"]).select(
                 F.col("t").alias("n"), "c", F.lit(None).cast(_c_type).alias("_old")
             )
@@ -1723,10 +1697,6 @@ def scc(
             lab = new.select("n", "c")
             if changed == 0:
                 break
-            if i == max_prop_iter:
-                raise RuntimeError(
-                    f"scc color propagation not converged in {max_prop_iter} iterations"
-                )
 
         # 3. COLLECT: backward reachability from each class root over
         # same-color edges; the frontier union materializes ONCE per step
@@ -1743,7 +1713,7 @@ def scc(
         )
         reached = lab.filter(F.col("n") == F.col("c")).localCheckpoint(eager=True)
         n_reached = reached.count()
-        for i in range(max_prop_iter + 1):
+        while True:
             cand = (
                 ce.join(
                     reached,
@@ -1758,10 +1728,6 @@ def scc(
             if n_grown == n_reached:
                 break
             reached, n_reached = grown, n_grown
-            if i == max_prop_iter:
-                raise RuntimeError(
-                    f"scc backward reachability not converged in {max_prop_iter} iterations"
-                )
         done = _accum(done, reached.select("n", F.col("c").alias("scc")))
         live_n = live_n.join(reached.select("n"), "n", "left_anti").localCheckpoint(
             eager=True
@@ -1772,7 +1738,6 @@ def scc(
             .join(live_n.withColumnRenamed("n", "t"), "t", "left_semi")
             .localCheckpoint(eager=True)
         )
-    raise RuntimeError(f"scc not converged after {max_rounds} rounds")
 
 
 def _bfs_dists(adj: dict, source, max_t: int) -> dict:

@@ -19,7 +19,8 @@ Reference semantics (arango_rdf/main.py:3031-3250):
 Scale strategy: list statements are a tiny, structurally bounded fraction of
 a web-scale graph. Tree assembly is inherently recursive, so it runs in a
 grouped Arrow UDF (``applyInPandas``) keyed by list-root; root assignment
-uses pointer-jumping joins (log-depth iterations, capped).
+uses pointer-jumping joins (log-depth iterations, run until no pointer
+moves, so a list of any length assembles whole).
 """
 
 from __future__ import annotations
@@ -159,13 +160,16 @@ def split_list_statements(
     return normal, list_data, heads
 
 
-def _assign_roots(list_data: DataFrame, heads: DataFrame, jumps: int = 8) -> DataFrame:
+def _assign_roots(list_data: DataFrame, heads: DataFrame) -> DataFrame:
     """Map every list node to its root via pointer-jumping joins.
 
-    Each jump doubles the resolved ancestor distance, so ``jumps=8`` covers
-    nesting depth 2**8 — far beyond any real RDF list. Pointer-jumping keeps
-    the iteration count logarithmic in depth instead of linear (the naive
-    parent-walk), which matters when list data is large but shallow.
+    Each jump doubles the resolved ancestor distance, so the iteration
+    count is logarithmic in depth instead of linear (the naive
+    parent-walk), which matters when list data is large but shallow. The
+    jumps stop when no pointer moves (pointers only move toward the root),
+    or once the distance covered reaches the number of child nodes, which
+    bounds the longest chain: a list of any length resolves whole, and a
+    malformed cyclic rdf:rest chain cannot loop forever.
     """
     # parent links: child list-node <- parent list-node
     nodes = list_data.select(F.col("s").alias("node")).dropDuplicates()
@@ -184,19 +188,25 @@ def _assign_roots(list_data: DataFrame, heads: DataFrame, jumps: int = 8) -> Dat
     # count(), not isEmpty(): isEmpty is CollectLimit — on a no-match stream
     # it scans everything anyway but in 1→4→16-partition incremental jobs (a
     # serial phase at high core counts); the aggregate scans once in parallel
-    if child_parent.count() == 0:  # flat lists only — no jumping needed
-        return ptr.select("node", F.col("anc").alias("root"))
-    for _ in range(jumps):
-        ptr = (
+    n_children = child_parent.count()
+    reach = 1  # ancestor distance every pointer has covered
+    while reach < n_children:
+        # the checkpoint carries the old pointer too, so the convergence
+        # probe is a filter over already-materialized blocks
+        jumped = (
             ptr.alias("a")
             .join(
                 ptr.select(F.col("node").alias("anc"), F.col("anc").alias("anc2")).alias("b"),
                 "anc",
                 "left",
             )
-            .select("node", F.coalesce("anc2", F.col("anc")).alias("anc"))
+            .select("node", F.coalesce("anc2", F.col("anc")).alias("anc"), F.col("anc").alias("_old"))
             .localCheckpoint(eager=True)
         )
+        ptr = jumped.select("node", "anc")
+        reach *= 2
+        if jumped.filter(F.col("anc") != F.col("_old")).limit(1).count() == 0:
+            break
     return ptr.select("node", F.col("anc").alias("root"))
 
 

@@ -7,9 +7,9 @@ next to its distributed Spark loop chooses between them here, through
 - ``SMALL_MAX`` bounds the input rows a fast path may collect (2M rows,
   tens of MB). Larger inputs take the distributed loop, so driver memory
   stays bounded by construction.
-- The closures (``query.path_closure``, ``reason.owl_materialize``) also
-  cap the rows they build on the driver at ``SMALL_MAX``; a closure that
-  would outgrow it takes the distributed loop.
+- The closure (``query.path_closure``, which ``reason.owl_materialize``
+  calls) also caps the rows it builds on the driver at ``SMALL_MAX``; a
+  closure that would outgrow it takes the distributed loop.
 - ``SMALL_MAX = 0`` forces every operator onto its distributed loop. The
   driver loops return exactly the distributed loop's rows, NULL endpoints
   and empty inputs included; the parity test checks both ways.

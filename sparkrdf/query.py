@@ -233,53 +233,63 @@ def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
 
 
 def path_closure(
-    edges: DataFrame, src: str = "s", dst: str = "o", max_doubling: int = 6,
+    edges: DataFrame, src: str = "s", dst: str = "o", by: tuple = (),
 ) -> DataFrame:
     """Transitive closure of a binary relation — the SPARQL ``p+`` property
     path / AQL unbounded traversal, as a set: every ``(s, o)`` with a
-    directed path s→…→o. Returns distinct ``(s, o)`` pairs.
+    directed path s→…→o. Returns distinct ``(*by, s, o)`` rows. ``by``
+    names grouping columns closed separately (``owl_materialize`` closes
+    each transitive property with ``by=("p",)``); a path never crosses
+    groups.
 
     Iterative doubling: R ← R ∪ (R ∘ R) squares the reachable path length
-    each round, so ``max_doubling`` = 6 covers paths up to 2^6 = 64 edges in
-    six self-joins — the textbook trick that beats one-edge-at-a-time
-    frontier expansion by an exponential factor on deep chains (khop above
-    stays the tool when per-level DISTANCES matter). Converges early (and
-    stops) when a round adds nothing; raises if the bound is exhausted
-    while still growing, so a silently truncated closure can never leak
-    out. Each round is two shuffles (join + distinct) on uniformly-hashed
-    endpoint keys, lineage truncated per round.
+    each round — the textbook trick that beats one-edge-at-a-time frontier
+    expansion by an exponential factor on deep chains (khop above stays
+    the tool when per-level DISTANCES matter). It stops when a round adds
+    nothing; R only grows, within the finite pairs of each group's nodes,
+    so it gets there after about log2(longest path) rounds. Each round is
+    two shuffles (join + distinct) on uniformly-hashed endpoint keys,
+    lineage truncated per round.
+
+    The driver route (the :mod:`sparkrdf.localdf` gate) closes
+    ontology/taxonomy-sized relations in one pass. It needs no entry dedup,
+    since the closure is built from sets, so an already-distinct input is
+    read as is; it reads ``edges`` twice (count, collect), so a caller
+    with an expensive upstream materializes it first. Only the
+    distributed route dedups and checkpoints its input.
     """
-    r = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("o"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    # Ontology/taxonomy-sized relations — the dominant caller profile, e.g.
-    # rdfs_materialize's subclass/subproperty hierarchies — close in one
-    # driver pass instead of O(log depth) join+dedup+count Spark jobs; a
-    # closure past the driver output cap takes the doubling loop.
+    keys = list(by)
+    r = edges.select(*keys, F.col(src).alias("s"), F.col(dst).alias("o"))
+    # A closure past the driver output cap takes the doubling loop.
     rows = localdf.collect_if_small(r)
     if rows is not None:
-        closed = _closure_local(
-            [(row["s"], row["o"]) for row in rows], cap=localdf.SMALL_MAX
-        )
-        if closed is not None:
-            return localdf.local_rows_df(edges.sparkSession, closed, r.schema)
+        groups: dict = {}
+        for row in rows:
+            groups.setdefault(tuple(row[:-2]), []).append((row["s"], row["o"]))
+        out: list | None = []
+        for g, pairs in groups.items():
+            closed = _closure_local(pairs, cap=localdf.SMALL_MAX - len(out))
+            if closed is None:
+                out = None
+                break
+            out.extend((*g, s, o) for s, o in closed)
+        if out is not None:
+            return localdf.local_rows_df(edges.sparkSession, out, r.schema)
+    r = r.dropDuplicates().localCheckpoint(eager=True)
     n = r.count()
-    for _ in range(max_doubling):
-        a, b = r.alias("a"), r.alias("b")
-        stepped = a.join(b, F.col("a.o") == F.col("b.s")).select(
-            F.col("a.s").alias("s"), F.col("b.o").alias("o")
+    step = F.col("a.o") == F.col("b.s")
+    for k in keys:  # NULL-safe, as the driver route groups a NULL key
+        step = step & F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}"))
+    while True:
+        stepped = r.alias("a").join(r.alias("b"), step).select(
+            *(F.col(f"a.{k}").alias(k) for k in keys),
+            F.col("a.s").alias("s"), F.col("b.o").alias("o"),
         )
         merged = r.unionByName(stepped).dropDuplicates().localCheckpoint(eager=True)
         m = merged.count()
         if m == n:
             return merged
         r, n = merged, m
-    raise RuntimeError(
-        f"path_closure still growing after {max_doubling} doubling rounds "
-        f"(paths beyond 2^{max_doubling} edges); raise max_doubling"
-    )
 
 
 def parse_path(expr: str):
@@ -304,7 +314,6 @@ def path_expr(
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
-    max_doubling: int = 6,
 ) -> DataFrame:
     """Evaluate a SPARQL 1.1 property-path expression against a statements
     table, returning the ``(s, o)`` endpoint relation. Complements
@@ -323,13 +332,14 @@ def path_expr(
     statements scan (predicate constants reach parquet); sequence is an
     equi-join on the shared endpoint (AQE-sized); alternative is a
     zero-shuffle UNION ALL; ``+``/``*`` delegate to iterative-doubling
-    :func:`path_closure` (O(log path-length) self-joins, early-converging,
-    raises rather than silently truncating). The node table for
+    :func:`path_closure` (O(log path-length) self-joins, run to the
+    fixpoint whatever the depth). The node table for
     zero-length paths is one distinct over endpoint columns — reused via
     closure, never recomputed per operator node. When the parsed tree
     references the statements table more than once (any non-trivial path:
     a sequence, an alternative, or a zero-length operator's node table),
     the projected table is materialized ONCE (eager localCheckpoint) —
+    a closure counts twice, as :func:`path_closure` reads its input twice —
     statements tables are usually the tail of an extraction pipeline, not
     a base table, and an unmaterialized plan re-runs that pipeline per
     leaf (measured: a 3-leaf path over the doc-KG compiled to 62
@@ -341,8 +351,10 @@ def path_expr(
         kind = node[0]
         if kind in ("pred", "neg"):
             return 1
-        if kind in ("inv", "plus"):
+        if kind == "inv":
             return _n_refs(node[1])
+        if kind == "plus":  # path_closure reads its input twice
+            return 2 * _n_refs(node[1])
         if kind in ("seq", "alt"):
             return _n_refs(node[1]) + _n_refs(node[2])
         if kind in ("star", "opt"):  # zero-length arm scans base twice more
@@ -384,9 +396,9 @@ def path_expr(
         if kind == "alt":
             return ev(node[1]).unionAll(ev(node[2]))
         if kind == "plus":
-            return path_closure(ev(node[1]).dropDuplicates(), max_doubling=max_doubling)
+            return path_closure(ev(node[1]))
         if kind == "star":
-            plus = path_closure(ev(node[1]).dropDuplicates(), max_doubling=max_doubling)
+            plus = path_closure(ev(node[1]))
             return plus.unionAll(identity()).dropDuplicates()
         if kind == "opt":
             return ev(node[1]).unionAll(identity()).dropDuplicates()
@@ -440,13 +452,14 @@ def _minus(left: DataFrame, right: DataFrame) -> DataFrame:
     return _exists(left, right, negate=True) if _shared(left, right) else left
 
 
-def _values_join(sol: DataFrame, values: list[dict]) -> DataFrame:
-    """VALUES: join the solutions with an inline table of ``var -> constant``
-    rows (``None`` is UNDEF, compatible with any binding). Without UNDEF
-    the condition is a plain equality per variable (a broadcast hash
-    join); only an UNDEF turns it into ``value IS NULL OR value = var`` (a
+def _values_join(sol: DataFrame, vars_, values: list[dict]) -> DataFrame:
+    """VALUES: join the solutions with an inline table over ``vars_`` of
+    ``var -> constant`` rows (``None`` is UNDEF, compatible with any
+    binding); an empty table joins to no rows (§10.2). Without UNDEF the
+    condition is a plain equality per variable (a broadcast hash join);
+    only an UNDEF turns it into ``value IS NULL OR value = var`` (a
     broadcast nested loop over the query's own rows)."""
-    vars_ = sorted({k for row in values for k in row})
+    vars_ = sorted(vars_)
     missing = [v for v in vars_ if v not in sol.columns]
     if missing:
         raise ValueError(f"VALUES variables {missing} not bound by the pattern group")
@@ -647,7 +660,9 @@ def bgp_values(
     if not values:
         raise ValueError("bgp_values requires at least one VALUES row")
     return _values_join(
-        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col), values
+        bgp_match(stmts, patterns, s_col=s_col, p_col=p_col, o_col=o_col),
+        {k for row in values for k in row},
+        values,
     )
 
 
@@ -686,7 +701,6 @@ def describe_cbd(
     o_col: str = "o",
     o_kind_col: str = "o_kind",
     bnode_kind: str = "BNode",
-    max_rounds: int = 10,
 ) -> DataFrame:
     """SPARQL ``DESCRIBE`` as a Concise Bounded Description (CBD): for every
     seed resource, its outgoing statements plus — recursively — the
@@ -703,9 +717,10 @@ def describe_cbd(
     against the visited set, frontier checkpointed per round so lineage
     stays O(1). The final output is ONE left-semi join of the statements
     table against the accumulated subject set — statements rows are never
-    duplicated or widened mid-loop. Depth is bounded by the deepest bnode
-    chain (data, not corpus, sized); exhausting ``max_rounds`` RAISES
-    rather than returning a silently truncated description.
+    duplicated or widened mid-loop. The loop runs until a round reaches no
+    new blank node: the visited set only grows, within the finite node
+    set, so the round count is the deepest bnode chain (data, not corpus,
+    sized) — an RDF list of any length is described whole.
 
     There is no driver fast path: a driver BFS (collect the bnode edges,
     loop, upload the visited set) measured slower than this loop on 1000
@@ -728,7 +743,7 @@ def describe_cbd(
     )
     try:
         frontier = visited
-        for _ in range(max_rounds):
+        while True:
             reached = (
                 bn_edges.join(frontier, bn_edges["_s"] == frontier["n"], "left_semi")
                 .select(F.col("_o").alias("n"))
@@ -743,10 +758,6 @@ def describe_cbd(
             # union of checkpointed frontiers — no checkpoint of the set needed
             visited = visited.unionAll(reached)
             frontier = reached
-        raise RuntimeError(
-            f"describe_cbd blank-node closure deeper than {max_rounds} rounds; "
-            "raise max_rounds"
-        )
     finally:
         bn_edges.unpersist()
 

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from sparkrdf import localdf
 from sparkrdf import terms as T
-from sparkrdf.query import _closure_local
+from sparkrdf.query import _closure_local, path_closure
 
 RDFS_SUBCLASS = T.RDFS_NS + "subClassOf"
 RDFS_SUBPROP = T.RDFS_NS + "subPropertyOf"
@@ -347,7 +347,6 @@ def shape_violations(
 def owl_materialize(
     triples: DataFrame,
     ontology: DataFrame,
-    max_doubling: int = 6,
     s_col: str = "s",
     p_col: str = "p",
     o_col: str = "o",
@@ -373,9 +372,10 @@ def owl_materialize(
     Scale shape: axiom tables are human-authored (broadcast); symmetric and
     inverse rules are map-only projections gated by a broadcast semi/equi
     join. The transitive rule closes ONLY edges of declared-transitive
-    properties (a broadcast semi-join prunes the stream first) with
-    (p, node)-keyed iterative doubling — O(log path-length) self-joins,
-    early-converging, raising rather than truncating. The input stream is
+    properties (an isin filter prunes the stream first) with
+    :func:`sparkrdf.query.path_closure` grouped by ``p`` — a driver pass
+    for small edge sets, else O(log path-length) doubling self-joins run
+    to the fixpoint whatever the depth. The input stream is
     materialized ONCE (eager localCheckpoint, WITHOUT its own dedup —
     sym_inv's dropDuplicates subsumes it: dedup(x ∪ flip(x) ∪ inv(x)) is
     the same set whether or not x was deduped first, flip/inv being
@@ -422,59 +422,11 @@ def owl_materialize(
 
     t1 = sym_inv(t).localCheckpoint(eager=True)
 
-    # per-property transitive closure, (p, endpoint)-keyed doubling. t1 is
-    # already distinct (sym_inv ends in dropDuplicates) and checkpointed, so
-    # the filter needs neither its own dedup nor a checkpoint: count and
-    # (on the fast path) collect read the cached t1 blocks directly.
-    r = t1.filter(_is_in(F.col("p"), trans_props))
-    # Declared-transitive edge sets are usually dimension-sized next to the
-    # triple stream: close them per property in one driver pass instead of
-    # O(log depth) join+dedup+count jobs. A closure past the driver output
-    # cap takes the distributed doubling loop. Routing this through
-    # query.path_closure keyed per p measured slower (kg_query owl step
-    # 1.74 -> 2.01 s, median of 12): its entry dedup and checkpoint redo
-    # what the distinct, checkpointed t1 already did.
-    closed = None
-    rows = localdf.collect_if_small(r)
-    if rows is not None:
-        by_p: dict = {}
-        for row in rows:
-            by_p.setdefault(row["p"], []).append((row["s"], row["o"]))
-        out: list | None = []
-        # build each tuple in r's column ORDER, not an assumed (s,p,o)
-        order = r.columns
-        for p, pairs in by_p.items():
-            loc = _closure_local(pairs, cap=localdf.SMALL_MAX - len(out))
-            if loc is None:
-                out = None
-                break
-            out.extend(
-                tuple({"s": s, "p": p, "o": o}[c] for c in order)
-                for s, o in loc
-            )
-        if out is not None:
-            closed = localdf.local_rows_df(spark, out, r.schema)
-    n = 0
-    if closed is None:
-        closed, n = r, r.count()
-    if n:
-        for _ in range(max_doubling):
-            a, b = closed.alias("a"), closed.alias("b")
-            stepped = a.join(
-                b, (F.col("a.p") == F.col("b.p")) & (F.col("a.o") == F.col("b.s"))
-            ).select(F.col("a.s").alias("s"), F.col("a.p").alias("p"), F.col("b.o").alias("o"))
-            merged = (
-                closed.unionByName(stepped).dropDuplicates().localCheckpoint(eager=True)
-            )
-            m = merged.count()
-            if m == n:
-                break
-            closed, n = merged, m
-        else:
-            raise RuntimeError(
-                f"owl_materialize transitive closure still growing after "
-                f"{max_doubling} doubling rounds; raise max_doubling"
-            )
+    # per-property transitive closure. t1 is already distinct (sym_inv ends
+    # in dropDuplicates) and checkpointed, so path_closure's driver route
+    # reads the filter as is: its gate count and collect scan the cached
+    # t1 blocks.
+    closed = path_closure(t1.filter(_is_in(F.col("p"), trans_props)), by=("p",))
     t2 = t1.unionByName(closed)
     return sym_inv(t2)
 

@@ -821,7 +821,7 @@ class _Parser:
     def group(self) -> dict:
         """One { ... } group → {'patterns': [...], 'filters': [expr AST],
         'optionals': [...], 'minuses': [...], 'not_exists': [...],
-        'exists': [...], 'values': [row dicts] | None,
+        'exists': [...], 'values': (vars, [row dicts]) | None,
         'unions': [[group, ...], ...], 'binds': [(var, expr AST)],
         'subqueries': [parsed query dicts]}."""
         self.expect_punct("{")
@@ -924,7 +924,7 @@ class _Parser:
             while not self.at_punct("}"):
                 rows.append({vars_[0]: self.values_datum()})
             self.take()
-            return rows
+            return vars_, rows
         self.expect_punct("(")
         vars_ = []
         while not self.at_punct(")"):
@@ -943,7 +943,7 @@ class _Parser:
             self.expect_punct(")")
             rows.append(row)
         self.take()
-        return rows
+        return vars_, rows
 
     def values_datum(self):
         t = self.take()
@@ -1251,8 +1251,8 @@ def _compile_group(
         sol = _exists(sol, sub(ne), negate=True)
     for ex in body["exists"]:
         sol = _exists(sol, sub(ex))
-    if body["values"]:
-        sol = _values_join(sol, body["values"])
+    if body["values"] is not None:
+        sol = _values_join(sol, *body["values"])
     if body["binds"]:
         # BIND extends the group's solutions in textual order; applied
         # before FILTER, whose scope is the whole group (§17.2)

@@ -444,10 +444,7 @@ def test_cluster_split_keeps_near_dup_families_together(spark):
     assert out[77] == (77, exp)
 
 
-def test_path_closure_chain_and_convergence(spark, monkeypatch):
-    import pytest as _pytest
-
-    from sparkrdf import localdf
+def test_path_closure_chain_and_convergence(spark):
     from sparkrdf.query import path_closure
 
     # 5-node chain: closure = all ordered pairs (i < j), needs 3 doublings
@@ -459,14 +456,6 @@ def test_path_closure_chain_and_convergence(spark, monkeypatch):
     cyc = spark.createDataFrame([("a", "b"), ("b", "a")], "s string, o string")
     got = {(r.s, r.o) for r in path_closure(cyc).collect()}
     assert got == {("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")}
-    # exhausted doubling bound raises instead of silently truncating
-    # (SMALL_MAX = 0 forces the distributed loop the bound guards)
-    deep = spark.createDataFrame(
-        [(f"m{i}", f"m{i+1}") for i in range(5)], "s string, o string"
-    )
-    monkeypatch.setattr(localdf, "SMALL_MAX", 0)
-    with _pytest.raises(RuntimeError):
-        path_closure(deep, max_doubling=1)
 
 
 def test_walk_skipgrams_and_negatives(spark):
@@ -1023,16 +1012,6 @@ def test_ktruss_k_below_3_raises(spark):
         ktruss(e, 2)
 
 
-def test_ktruss_max_rounds_raises_not_truncates(spark):
-    import pytest
-    from sparkrdf.graphops import ktruss
-
-    strip = [("d", "e"), ("d", "f"), ("e", "f"), ("e", "g"), ("f", "g")]
-    e = spark.createDataFrame(strip, "u string, v string")
-    with pytest.raises(RuntimeError, match="still peeling"):
-        ktruss(e, 4, max_rounds=1)
-
-
 def test_assortativity_star_is_minus_one(spark):
     from sparkrdf.graphops import assortativity
 
@@ -1073,17 +1052,6 @@ def test_coreness_triangle_with_pendant(spark):
     )
     got = {r.n: r.coreness for r in coreness(e).collect()}
     assert got == {"x": 2, "y": 2, "z": 2, "p": 1}
-
-
-def test_coreness_max_rounds_raises(spark):
-    import pytest
-    from sparkrdf.graphops import coreness
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "u string, v string"
-    )
-    with pytest.raises(RuntimeError, match="not converged"):
-        coreness(e, max_rounds=1)
 
 
 def test_coreness_vs_peeling_reference_fuzz(spark):
@@ -1413,6 +1381,11 @@ _GATE_SHAPES = [
 # NULL endpoints: on a cycle, and as the only neighbour of z
 _GATE_NULLS = [("a", "b"), ("b", "c"), ("c", "a"), (None, "a"), ("b", None),
                ("z", None), (None, None)]
+# a 42-node directed cycle: deeper than 2^5 doubling rounds and than 40
+# label-propagation steps, so it runs the iterative loops past any small
+# fixed round count
+_DEEP_CYCLE = [(f"c{i:02d}", f"c{(i + 1) % 42:02d}") for i in range(42)]
+_DEEP_OPS = ("path_closure", "owl_materialize", "scc")
 
 
 def _gate_edges():
@@ -1496,13 +1469,15 @@ def test_driver_gate_parity(spark, monkeypatch, name):
     """Every operator behind ``localdf.collect_if_small`` returns the same
     row values from its driver loop and from its distributed loop
     (``SMALL_MAX = 0``): on one graph holding the hand shapes and NULL
-    endpoints, and on an empty edge list. Every operator returns rows on
-    both; only personalized_pagerank raises on the empty list, its
-    documented "no seed in the graph" ValueError."""
+    endpoints, and on an empty edge list; the closures and scc also on a
+    deep cycle. Every operator returns rows on all of them; only
+    personalized_pagerank raises on the empty list, its documented "no
+    seed in the graph" ValueError."""
     from sparkrdf import localdf
 
     run = _gate_op(spark, name)
-    for rows in (_gate_edges(), []):
+    inputs = [_gate_edges(), []] + ([_DEEP_CYCLE] if name in _DEEP_OPS else [])
+    for rows in inputs:
         driver = _outcome(run, rows)
         with monkeypatch.context() as m:
             m.setattr(localdf, "SMALL_MAX", 0)
@@ -1512,7 +1487,10 @@ def test_driver_gate_parity(spark, monkeypatch, name):
             assert driver == "ValueError", driver
         else:
             assert isinstance(driver, list), driver
-        if name == "owl_materialize" and rows:
+        if rows is _DEEP_CYCLE:
+            assert len(driver) == {"path_closure": 42 * 42, "scc": 42,
+                                   "owl_materialize": 42 * 42 + 4}[name]
+        elif name == "owl_materialize" and rows:
             assert ("0a", "p", "0a") in driver  # a cycle closes reflexively
             assert ("a", "q", "c") in driver
             assert ("x", "r", "y") in driver and ("x", "r", "x") not in driver

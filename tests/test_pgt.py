@@ -171,6 +171,42 @@ def test_pgt_collection_nested_lists(spark, pgt_case):
     assert randoms[0]["_key"] == farmhash_key(f"{_doc}-{_random}-{_mars}")
 
 
+def test_pgt_long_collection_is_one_fragment(spark):
+    """A 300-member rdf:first/rdf:rest chain, deeper than any fixed number
+    of pointer jumps covers, assembles into one fragment of 300 values."""
+    from sparkrdf.lists import assemble_lists, split_list_statements
+
+    members = " ".join(str(i) for i in range(300))
+    stmts = statements_df(spark, parse_ttl(
+        f"@prefix ex: <{EX}> .\nex:Doc ex:numbers ( {members} ) .\n"))
+    _, list_data, heads = split_list_statements(stmts)
+    fragments, _ = assemble_lists(list_data, heads)
+    frags = fragments.collect()
+    assert len(frags) == 1
+    assert json.loads(frags[0]["fragment"]) == list(range(300))
+    out = pgt_transform(stmts, "GLongList")
+    doc = _vmap(out)[farmhash_key(EX + "Doc")]
+    assert json.loads(doc["properties"])["numbers"] == list(range(300))
+
+
+def test_pgt_cyclic_collection_terminates(spark):
+    """A malformed rdf:rest chain that loops back (a 3-cycle, which pointer
+    jumping alone never settles) still assembles: root assignment stops
+    once the jumps cover every child node."""
+    from sparkrdf.lists import assemble_lists, split_list_statements
+
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    cells = "\n".join(
+        f"_:{a} <{rdf}first> {i} ; <{rdf}rest> _:{b} ."
+        for i, (a, b) in enumerate([("a", "b"), ("b", "c"), ("c", "a")])
+    )
+    stmts = statements_df(spark, parse_ttl(
+        f"@prefix ex: <{EX}> .\nex:Doc ex:numbers _:a .\n{cells}\n"))
+    _, list_data, heads = split_list_statements(stmts)
+    fragments, _ = assemble_lists(list_data, heads)
+    assert fragments.count() == 3
+
+
 def test_pgt_container_goldens(spark, pgt_case):
     """Container membership assembly (test_main.py:4510-4563)."""
     _, _, out = pgt_case("container.ttl")

@@ -502,15 +502,23 @@ def test_describe_cbd_follows_bnode_chain(spark):
 
 
 def test_describe_cbd_depth_raise(spark):
+    """A blank-node chain deeper than any fixed round count — a 12-member
+    RDF list — is described whole, on the one distributed loop."""
+    from sparkrdf import terms as T
     from sparkrdf.query import describe_cbd
 
-    rows = [("a", "p", "_:b0", "BNode")] + [
-        (f"_:b{i}", "p", f"_:b{i+1}", "BNode") for i in range(5)
-    ]
+    cells = [f"_:l{i}" for i in range(12)]
+    rows = [("a", "items", cells[0], "BNode"), ("b", "items", "_:other", "BNode"),
+            ("_:other", T.RDF_FIRST, "x", "Literal")]
+    for i, cell in enumerate(cells):
+        rest = cells[i + 1] if i + 1 < len(cells) else T.RDF_NIL
+        rows += [(cell, T.RDF_FIRST, f"v{i}", "Literal"),
+                 (cell, T.RDF_REST, rest, "BNode" if i + 1 < len(cells) else "URIRef")]
     stmts = spark.createDataFrame(rows, "s string, p string, o string, o_kind string")
     seeds = spark.createDataFrame([("a",)], "n string")
-    with pytest.raises(RuntimeError, match="deeper than"):
-        describe_cbd(stmts, seeds, max_rounds=2)
+    got = {(r.s, r.p, r.o) for r in describe_cbd(stmts, seeds).collect()}
+    assert got == {(s, p, o) for s, p, o, _ in rows if s not in ("b", "_:other")}
+    assert {o for s, p, o in got if p == T.RDF_FIRST} == {f"v{i}" for i in range(12)}
 
 
 def test_describe_cbd_on_parsed_turtle(spark):

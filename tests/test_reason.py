@@ -326,24 +326,6 @@ def test_owl_no_axioms_is_identity(spark):
     assert got == set(triples)
 
 
-def test_owl_unconverged_closure_raises(spark, monkeypatch):
-    import pytest
-    from sparkrdf import localdf
-    from sparkrdf import terms as T
-    from sparkrdf.reason import owl_materialize
-
-    # force the distributed doubling loop (the bound under test guards it;
-    # the driver fast path computes the exact closure without the bound)
-    monkeypatch.setattr(localdf, "SMALL_MAX", 0)
-    chain = [(f"n{i}", "p", f"n{i+1}") for i in range(9)]
-    t = spark.createDataFrame(chain, "s string, p string, o string")
-    o = spark.createDataFrame(
-        [("p", T.RDF_TYPE, T.OWL_TRANSITIVE)], "s string, p string, o string"
-    )
-    with pytest.raises(RuntimeError, match="still growing"):
-        owl_materialize(t, o, max_doubling=2)
-
-
 def test_rdfs_delta_is_exactly_the_new_entailments(spark):
     from sparkrdf.reason import rdfs_materialize, rdfs_materialize_delta
 

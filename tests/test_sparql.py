@@ -1017,3 +1017,16 @@ def test_values_without_undef_is_a_hash_join(rt):
         SELECT ?d ?n WHERE { ?d <n> ?n ; <l> ?l .
           VALUES (?l ?n) { ("de" UNDEF) (UNDEF "0") ("fr" "1") } }""")
     assert sorted(rows(got)) == [("d1", "0"), ("d2", "2")]
+
+
+def test_values_empty_block_joins_no_rows(spark):
+    """An empty data block is an empty solution sequence: joining it
+    leaves no rows (§10.2), in the single- and the multi-variable form."""
+    st = spark.createDataFrame(
+        [("a", "p", "1"), ("b", "p", "2"), ("c", "p", "3")],
+        "s string, p string, o string",
+    )
+    got = sparql_query(st, "SELECT ?s ?o WHERE { ?s <p> ?o . VALUES ?o { } }")
+    assert got.columns == ["s", "o"] and rows(got) == []
+    got = sparql_query(st, "SELECT ?s WHERE { ?s <p> ?o . VALUES (?s ?o) { } }")
+    assert rows(got) == []

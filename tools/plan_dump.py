@@ -10,6 +10,7 @@ two checkouts' dumps compare with ``diff -r``. Default query set: every
 ``perfbench_aggregate``: the two ``sparql_query`` calls of perfbench's
 kg_query workload (``KgQuery.q_select`` / ``q_aggregate``) over a 100-page
 statements table it extracts into ``OUT_DIR/_work`` (removed afterwards).
+Named queries may be any ``queries()`` entry, inside the default set or not.
 ``perfbench/`` is imported, never modified.
 """
 
@@ -79,7 +80,7 @@ def main(argv=None) -> int:
     os.makedirs(out, exist_ok=True)
     names = [
         n for n in entrymod.queries()
-        if (n.startswith(PREFIXES) or n in EXTRA) and (not only or n in only)
+        if n in only or not only and (n.startswith(PREFIXES) or n in EXTRA)
     ]
     for name in names:
         df = entrymod.queries()[name](spark, sf_dir)
