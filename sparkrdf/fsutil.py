@@ -52,13 +52,25 @@ def fs_read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Atomically-enough write of a small text file: create-overwrite via
-    the FS contract (HDFS rename-on-close; object stores PUT on close).
-    Callers that need a commit marker write it LAST (see resume.py)."""
+def fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Atomically-enough write of a small file: create-overwrite via the FS
+    contract (HDFS rename-on-close; object stores PUT on close). Callers
+    that need a commit marker write it LAST (see resume.py)."""
     fs, hpath, _ = hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs_write_bytes(spark, path, text.encode("utf-8"))
+
+
+def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` on ``src``'s FileSystem; raise if the FS
+    refuses (Hadoop reports a failed rename as ``false``, not an error)."""
+    fs, hsrc, jvm = hadoop_fs(spark, src)
+    if not fs.rename(hsrc, jvm.org.apache.hadoop.fs.Path(dst)):
+        raise OSError(f"rename {src} -> {dst} failed")

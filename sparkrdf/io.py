@@ -17,6 +17,14 @@ unioning from/to collection sets (main.py:3278-3364). Here:
 - lineage: per-run (run_id, stage, partition_id, input_rows, output_rows,
   status) appended to ``{base}/lineage`` — the north rule's per-partition
   lineage + metrics.
+
+Bookkeeping starts no Spark job. Row counts come from what was written:
+:func:`written_counts` reads the Parquet footers of the committed files on
+the driver (O(files) metadata reads, like the commit's own renames), so
+``partition_id`` names the partition of the task that wrote the rows (the
+``part-NNNNN`` of its file name), not a split of a later read. A lineage
+append is one Parquet file the driver builds with pyarrow and writes
+through the Hadoop FS (:func:`write_lineage`).
 """
 
 from __future__ import annotations
@@ -24,13 +32,26 @@ from __future__ import annotations
 import json
 import posixpath
 import time
+import uuid
+from functools import partial
+from urllib.parse import unquote
 
 import pandas as pd  # module-level so pandas_udf type hints resolve
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkrdf.localdf import local_rows_df
+from sparkrdf.fsutil import (
+    fs_exists,
+    fs_mkdirs,
+    fs_read_text,
+    fs_rename,
+    fs_write_bytes,
+    fs_write_text,
+    hadoop_fs,
+)
 from sparkrdf.session import run_concurrently
 
 
@@ -41,9 +62,20 @@ def write_table(df: DataFrame, path: str, partition_by: str | None = "collection
     w.parquet(path)
 
 
-LINEAGE_SCHEMA = (
-    "run_id string, stage string, partition_id int, input_rows long, "
-    "output_rows long, status string"
+#: Lineage columns; in Spark terms ``run_id string, stage string,
+#: partition_id int, input_rows long, output_rows long, status string,
+#: written_at string``, the types of Spark-written appends, so a directory
+#: holding both reads as one table.
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("input_rows", pa.int64()),
+        ("output_rows", pa.int64()),
+        ("status", pa.string()),
+        ("written_at", pa.string()),
+    ]
 )
 
 
@@ -52,26 +84,73 @@ def write_lineage(spark, base: str, run_id: str, stage: str | None, rows: list[t
     shares one ``written_at``. ``rows`` are ``(partition_id, input_rows,
     output_rows, status)`` of ``stage``, or, with ``stage=None``, ``(stage,
     partition_id, input_rows, output_rows, status)`` — several stages in
-    one append."""
+    one append.
+
+    The append is one Parquet file built in driver memory, written under a
+    hidden name (which readers skip) and renamed into place, so a reader
+    sees the whole file or none of it. No Spark job runs."""
     if stage is not None:
         rows = [(stage, *r) for r in rows]
-    df = local_rows_df(
-        spark,
-        [(run_id, st, int(p), int(i), int(o), s) for st, p, i, o, s in rows],
-        LINEAGE_SCHEMA,
-    ).withColumn("written_at", F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())))
-    df.coalesce(1).write.mode("append").parquet(posixpath.join(base, "lineage"))
-
-
-def partition_counts(df: DataFrame) -> list[tuple]:
-    """(partition_id, rows) per partition — one narrow pass."""
-    rows = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .count()
-        .collect()
+    written_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+    values = [(run_id, st, int(p), int(i), int(o), s, written_at) for st, p, i, o, s in rows]
+    table = pa.Table.from_pylist(
+        [dict(zip(LINEAGE_SCHEMA.names, v)) for v in values], schema=LINEAGE_SCHEMA
     )
-    return [(r["__pid"], r["count"]) for r in rows]
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="snappy")
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    lineage = posixpath.join(base, "lineage")
+    hidden = posixpath.join(lineage, f".{name}.inprogress")
+    fs_write_bytes(spark, hidden, buf.getvalue().to_pybytes())
+    fs_rename(spark, hidden, posixpath.join(lineage, name))
+
+
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def written_counts(spark, path: str) -> dict[tuple[int, tuple], int]:
+    """Rows of the Parquet data files under ``path``, read from their
+    footers on the driver: ``{(part, partition_values): rows}``.
+
+    ``part`` is the writing task's partition (the ``part-NNNNN`` of the file
+    name); ``partition_values`` holds the values of the ``k=v`` directories
+    between ``path`` and the file (``()`` without ``partitionBy``, None for
+    a null value). Files of one key are summed; zero-row files (an empty
+    table's schema file) are skipped, so an empty table gives ``{}``.
+
+    parquet-hadoop lists the files (skipping ``_``/``.`` names: markers,
+    checksums, sidecars) and reads their footers in parallel; every file is
+    read directly, never through a ``_metadata`` summary. A handful of py4j
+    calls per file; no Spark job."""
+    fs, hpath, jvm = hadoop_fs(spark, path)
+    root = fs.makeQualified(hpath).toUri().getPath().rstrip("/") + "/"
+    footers = jvm.org.apache.parquet.hadoop.ParquetFileReader.readAllFootersInParallel(
+        spark._jsc.hadoopConfiguration(), fs.getFileStatus(hpath), False
+    )
+    counts: dict[tuple[int, tuple], int] = {}
+    for i in range(footers.size()):
+        footer = footers.get(i)
+        blocks = footer.getParquetMetadata().getBlocks()
+        rows = sum(blocks.get(j).getRowCount() for j in range(blocks.size()))
+        if not rows:
+            continue
+        *dirs, name = footer.getFile().toUri().getPath()[len(root):].split("/")
+        values = tuple(
+            None if v == _NULL_PARTITION else unquote(v)
+            for v in (d.split("=", 1)[1] for d in dirs)
+        )
+        key = (int(name.split("-")[1]), values)
+        counts[key] = counts.get(key, 0) + rows
+    return counts
+
+
+def rows_by_part(counts: dict[tuple[int, tuple], int]) -> list[tuple[int, int]]:
+    """:func:`written_counts` summed per writing partition: sorted
+    ``[(part, rows)]``."""
+    out: dict[int, int] = {}
+    for (part, _), n in counts.items():
+        out[part] = out.get(part, 0) + n
+    return sorted(out.items())
 
 
 def merge_edge_definitions(existing: dict, new_rows: list) -> dict:
@@ -94,33 +173,27 @@ def write_graph(
 
     Returns the written manifest. Idempotent per run_id: writes are
     overwrite-mode per table, the manifest unions with prior imports. The
-    five Spark actions run concurrently, under the contract in
-    :mod:`sparkrdf.resume`'s docstring; the manifest and lineage follow.
+    two table writes and the ``edge_definitions`` collect are the only
+    Spark jobs; they run concurrently, under the contract in
+    :mod:`sparkrdf.resume`'s docstring. Row counts and the vertex
+    collections come from the written files' footers
+    (:func:`written_counts`); the manifest and lineage follow.
     """
-    from sparkrdf.fsutil import fs_exists, fs_mkdirs, fs_read_text, fs_write_text
-
     spark = graph["vertices"].sparkSession
     # Hadoop FS, not os.makedirs: ``base`` may be HDFS/S3A on a cluster
     fs_mkdirs(spark, base)
 
-    # per-partition vertex counts and the vertex collection set from one
-    # aggregation: vertex-ONLY collections (Property, Class, orphan
-    # resources) never appear as edge endpoints, and the manifest must
-    # record them or a manifest-driven export loses their documents
-    by_pid_col, _, e_counts, _, edef_rows = run_concurrently(
-        lambda: graph["vertices"]
-        .groupBy(F.spark_partition_id().alias("pid"), "collection")
-        .count()
-        .collect(),
-        lambda: write_table(graph["vertices"], posixpath.join(base, "vertices")),
-        lambda: partition_counts(graph["edges"]),
-        lambda: write_table(graph["edges"], posixpath.join(base, "edges")),
+    def write(key: str) -> dict:
+        path = posixpath.join(base, key)
+        write_table(graph[key], path)
+        return written_counts(spark, path)
+
+    v_files, e_files, edef_rows = run_concurrently(
+        partial(write, "vertices"),
+        partial(write, "edges"),
         lambda: graph["edge_definitions"].collect(),
     )
-    v_rows: dict[int, int] = {}
-    for r in by_pid_col:
-        v_rows[r["pid"]] = v_rows.get(r["pid"], 0) + r["count"]
-    v_counts = sorted(v_rows.items())
+    v_counts, e_counts = rows_by_part(v_files), rows_by_part(e_files)
 
     manifest_path = posixpath.join(base, f"{name}.manifest.json")
     prior = {}
@@ -128,8 +201,12 @@ def write_graph(
         prior = json.loads(fs_read_text(spark, manifest_path))
     existing = prior.get("edge_definitions", {})
     edefs = merge_edge_definitions(existing, [r.asDict() for r in edef_rows])
+    # vertex-ONLY collections (Property, Class, orphan resources) never
+    # appear as edge endpoints, and the manifest must record them or a
+    # manifest-driven export loses their documents: each non-empty
+    # ``collection=`` directory of the vertex table is one
     v_cols = sorted(
-        set(prior.get("vertex_collections", [])) | {r["collection"] for r in by_pid_col}
+        set(prior.get("vertex_collections", [])) | {values[0] for _, values in v_files}
     )
     manifest = {
         "graph": name,
@@ -160,8 +237,6 @@ def read_graph(spark, base: str, name: str = "graph") -> dict:
     collections named by the edge definitions, so sibling graphs sharing the
     same base directory don't leak in.
     """
-    from sparkrdf.fsutil import fs_read_text
-
     manifest_path = posixpath.join(base, f"{name}.manifest.json")
     manifest = json.loads(fs_read_text(spark, manifest_path))
     edefs = manifest.get("edge_definitions", {})

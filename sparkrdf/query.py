@@ -941,6 +941,11 @@ class _ExprCompiler:
         if kind in _BOOL_NODE_KINDS:
             # boolean expression used as a value (BIND(?x > 3 AS ?b))
             return self.boolean(n), "bool"
+        if kind == "agg":
+            raise ValueError(
+                f"aggregate {n[1].upper()}() is supported only as a whole "
+                "SELECT expression or inside HAVING"
+            )
         raise ValueError(f"expected a value operand, got {n!r}")
 
     def _numeric(self, n):

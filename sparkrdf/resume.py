@@ -19,21 +19,26 @@ everywhere); this module is the explicit orchestrator on top of them:
   stage records row counts at compute time so resumed runs report metrics
   without rescanning data.
 
-The bookkeeping runs once per unit of work. A freshly written checkpoint is
-read back ONCE, with the schema of the frame just written (no footer
-inference job); that one DataFrame is counted per partition and returned.
-Each committed stage makes ONE lineage append: a multi-table stage writes
-its tables' rows together, so they share a ``written_at``. Lineage rows
-are uploaded with :func:`sparkrdf.localdf.local_rows_df`, a JVM local
-relation, so the append starts no Python worker. A resumed stage reads its
-checkpoint with the schema inferred from the files.
+The bookkeeping runs once per unit of work and starts no Spark job. A
+freshly written checkpoint is read back ONCE, with the schema of the frame
+just written (no footer inference job), and that DataFrame is returned. Its
+per-partition counts come from what was written: the Parquet footers of its
+files, read on the driver (:func:`sparkrdf.io.written_counts`), so a
+lineage row's ``partition_id`` is the partition of the task that wrote the
+rows (the ``part-NNNNN`` of the file name), not a split of a later read. A
+zero-row table has no partitions and gets no lineage row. Each committed
+stage makes ONE lineage append: a multi-table stage writes its tables' rows
+together, so they share a ``written_at``. The append is one Parquet file
+the driver builds and writes through the Hadoop FS
+(:func:`sparkrdf.io.write_lineage`). A resumed stage reads its checkpoint
+with the schema inferred from the files, and its counts from the sidecar.
 
 Concurrency contract (shared by :func:`sparkrdf.io.write_graph`):
 
 - the tables of one stage share no data dependency, so they are written
   concurrently, one driver thread per table
   (:func:`sparkrdf.session.run_concurrently`); each thread runs its table's
-  whole chain: write, read-back, per-partition count, ``.metrics.json``;
+  whole chain: write, read-back, footer counts, ``.metrics.json``;
 - the commit marker comes last: ``.outputs.json`` is written only after
   every table committed, and if any table fails the error is raised after
   the sibling threads finish, with no marker, so the stage reruns whole;
@@ -63,7 +68,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from sparkrdf.fsutil import fs_delete, fs_exists, fs_mkdirs, fs_read_text, fs_write_text
-from sparkrdf.io import partition_counts, write_lineage
+from sparkrdf.io import rows_by_part, write_lineage, written_counts
 from sparkrdf.session import run_concurrently
 
 
@@ -100,12 +105,12 @@ class ResumableJob:
         out = posixpath.join(self.ckpt_dir, "stages", name)
         if self._success(out):
             df = self.spark.read.parquet(out)
-            self._commit([self._counts(name, out, df, "resumed")])
+            self._commit([self._counts(name, out, "resumed")])
             return df
         # crash artifact: directory exists but the write never committed
         fs_delete(self.spark, out)
         df = self._checkpoint(fn(), out)
-        self._commit([self._counts(name, out, df, "computed")])
+        self._commit([self._counts(name, out, "computed")])
         return df
 
     def multi_stage(
@@ -124,7 +129,7 @@ class ResumableJob:
                 for k in keys:
                     p = posixpath.join(base, k)
                     out[k] = self.spark.read.parquet(p)
-                    done.append(self._counts(f"{name}/{k}", p, out[k], "resumed"))
+                    done.append(self._counts(f"{name}/{k}", p, "resumed"))
                 self._commit(done)
                 return out
         fs_delete(self.spark, base)
@@ -134,7 +139,7 @@ class ResumableJob:
         def write(k: str, df: DataFrame):
             p = posixpath.join(base, k)
             back = self._checkpoint(df, p)
-            return back, self._counts(f"{name}/{k}", p, back, "computed")
+            return back, self._counts(f"{name}/{k}", p, "computed")
 
         release = getattr(tables, "release", None)
         try:
@@ -155,13 +160,14 @@ class ResumableJob:
         return self.spark.read.schema(df.schema).parquet(path)
 
     # -- metrics ----------------------------------------------------------
-    def _counts(self, stage: str, path: str, df: DataFrame, status: str) -> tuple:
+    def _counts(self, stage: str, path: str, status: str) -> tuple:
         """(stage, status, [(partition_id, rows)]) of a checkpoint. A
-        computed checkpoint is counted from ``df`` (its one read-back) and
-        gets a ``.metrics.json`` sidecar; a resumed one reads the sidecar."""
+        computed checkpoint is counted from its files' footers and gets a
+        ``.metrics.json`` sidecar; a resumed one reads the sidecar, or
+        counts its footers if it has none."""
         sidecar = posixpath.join(path, ".metrics.json")
         if status == "computed" or not fs_exists(self.spark, sidecar):
-            counts = partition_counts(df)
+            counts = rows_by_part(written_counts(self.spark, path))
             fs_write_text(self.spark, sidecar, json.dumps({"partition_rows": counts}))
         else:
             counts = [

@@ -374,7 +374,8 @@ def _shm_has_headroom(min_free_bytes: int = 8 << 30) -> bool:
 
 def get_spark(app_name: str = "sparkrdf", master: str | None = None, **extra_conf):
     """Opinionated local/session builder with the scale-oriented defaults:
-    AQE (incl. skew-join splitting), sane shuffle partitioning, Arrow enabled.
+    AQE (incl. skew-join splitting), sane shuffle partitioning, Arrow enabled,
+    no per-call Python call-site capture.
     """
     from pyspark.sql import SparkSession
 
@@ -394,6 +395,14 @@ def get_spark(app_name: str = "sparkrdf", master: str | None = None, **extra_con
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per DataFrame/Column call: PySpark
+        # otherwise pays ~6 py4j round trips (active-session lookups, a
+        # conf read, an origin set and clear) on every F.* call, which is
+        # most of the driver time spent building the pipeline's plans. Pass
+        # it back as "true" through ``extra_conf`` to get Python call sites
+        # in query-context error messages (PySpark reads it once per
+        # process, at the first call made while a session is active).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Local mode only: shuffle/spill to tmpfs when available. A single
     # shared disk is an Amdahl term that caps multi-core scaling; RAM-backed

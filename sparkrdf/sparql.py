@@ -477,6 +477,9 @@ class _Parser:
             return ("str", self.expand(t.val))
         if t.kind == "word" and t.val.lower() in ("true", "false"):
             return ("bool", t.val.lower() == "true")
+        if t.kind == "kw" and t.val in _AGG_FNS and self.at_punct("("):
+            # an aggregate in a HAVING condition (§18.2.4.2)
+            return ("agg", t.val, *self._agg_args(t.val))
         if t.kind in ("word", "kw") and self.at_punct("("):
             return ("call", t.val.lower(), self._args(self.expr))
         raise ValueError(f"unexpected token {t!r} in expression")
@@ -653,6 +656,17 @@ class _Parser:
         fn_tok = self.take()
         if fn_tok.kind != "kw" or fn_tok.val not in _AGG_FNS:
             raise ValueError(f"expected aggregate, got {fn_tok!r}")
+        spec = (fn_tok.val, *self._agg_args(fn_tok.val))
+        self.expect_kw("as")
+        alias = self.take()
+        if alias.kind != "var":
+            raise ValueError("expected ?alias after AS")
+        self.expect_punct(")")
+        return alias.val, spec
+
+    def _agg_args(self, fn: str) -> tuple:
+        """``([DISTINCT] ?v|* [; SEPARATOR "s"])`` of aggregate ``fn`` →
+        (var, distinct, separator), ``var`` ``"*"`` for ``*``."""
         self.expect_punct("(")
         agg_distinct = False
         if self.at_kw("distinct"):
@@ -664,7 +678,7 @@ class _Parser:
         else:
             v = self.take()
             if v.kind != "var":
-                raise ValueError(f"expected ?var in {fn_tok.val}()")
+                raise ValueError(f"expected ?var in {fn}()")
             var = v.val
         sep = " "  # §18.5.1.7: the default GROUP_CONCAT separator
         if self.at_punct(";"):
@@ -674,16 +688,11 @@ class _Parser:
             s = self.take()
             if s.kind != "str":
                 raise ValueError("SEPARATOR needs a string literal")
-            if fn_tok.val != "group_concat":
+            if fn != "group_concat":
                 raise ValueError("SEPARATOR applies to GROUP_CONCAT only")
             sep = s.val
         self.expect_punct(")")
-        self.expect_kw("as")
-        alias = self.take()
-        if alias.kind != "var":
-            raise ValueError("expected ?alias after AS")
-        self.expect_punct(")")
-        return alias.val, (fn_tok.val, var, agg_distinct, sep)
+        return var, agg_distinct, sep
 
     # -- update operations (SPARQL 1.1 Update subset) ----------------------
     def parse_update(self) -> list[dict]:
@@ -1271,8 +1280,14 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
     if q["form"] == "construct":
         return _construct(_modifiers(sol, q, numeric), q["template"])
 
-    aggs, group_by = q["aggs"], q["group_by"]
+    group_by, having = q["group_by"], q["having"]
     sel_exprs = q.get("sel_exprs") or {}
+    # HAVING's aggregates become hidden aliases of the same aggregate,
+    # filtered on and dropped
+    lifted: dict[str, tuple] = {}
+    if having:
+        having = _lift_aggregates(having, lifted)
+    aggs = {**q["aggs"], **lifted}
     if aggs or group_by:
         non_agg = [v for v in (q["proj"] or []) if v not in aggs]
         stray = [v for v in non_agg if v not in group_by and v not in sel_exprs]
@@ -1282,9 +1297,11 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
                 "grouped (SPARQL 1.1 §18.2.4 projection restriction)"
             )
         sol = _aggregate(sol, group_by, aggs)
-        if q["having"]:
-            sol = bgp_filter(sol, q["having"])
-    elif q["having"]:
+        if having:
+            sol = bgp_filter(sol, having)
+        if lifted:
+            sol = sol.drop(*lifted)
+    elif having:
         raise ValueError("HAVING requires GROUP BY / aggregates")
 
     # SELECT expressions extend AFTER grouping (§18.4.4) so they can
@@ -1302,6 +1319,23 @@ def _apply_forms(stmts: DataFrame, q: dict, sol: DataFrame,
     if q["distinct"]:
         sol = sol.dropDuplicates()
     return _modifiers(sol, q, numeric)
+
+
+def _lift_aggregates(node, lifted: dict):
+    """``node`` with each ``("agg", fn, var, distinct, sep)`` replaced by a
+    variable named ``__having<n>``; ``lifted`` maps the names to their
+    aggregate specs."""
+    if not isinstance(node, tuple):
+        return node
+    if node[0] == "agg":
+        alias = f"__having{len(lifted)}"
+        lifted[alias] = node[1:]
+        return ("var", alias)
+    return tuple(
+        [_lift_aggregates(n, lifted) for n in c] if isinstance(c, list)
+        else _lift_aggregates(c, lifted)
+        for c in node
+    )
 
 
 def _modifiers(sol: DataFrame, q: dict, numeric: tuple) -> DataFrame:

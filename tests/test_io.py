@@ -200,6 +200,66 @@ def test_build_jobs_stay_in_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     drain(60_000)
-    # statements + 3 rpt tables (write + counts each) + 5 write_graph actions
+    # statements + 3 rpt table writes (several jobs each under AQE) +
+    # write_graph's 2 table writes and edge_definitions collect
     assert len(tracker.getJobIdsForGroup("build-in-threads")) >= 13
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_lineage_dir_reads_spark_and_driver_written_files(spark, tmp_path):
+    """A lineage directory holding an append Spark wrote and one the driver
+    wrote reads back as one table with the lineage schema."""
+    from pyspark.sql import functions as F
+
+    from sparkrdf.io import write_lineage
+    from sparkrdf.localdf import local_rows_df
+
+    base = str(tmp_path)
+    schema = (
+        "run_id string, stage string, partition_id int, input_rows long, "
+        "output_rows long, status string"
+    )
+    local_rows_df(spark, [("r1", "s", 0, 4, 4, "computed")], schema).withColumn(
+        "written_at", F.lit("2026-01-01T00:00:00Z")
+    ).coalesce(1).write.mode("append").parquet(os.path.join(base, "lineage"))
+    write_lineage(spark, base, "r2", "s", [(1, 5, 5, "resumed")])
+    want = (
+        "struct<run_id:string,stage:string,partition_id:int,input_rows:bigint,"
+        "output_rows:bigint,status:string,written_at:string>"
+    )
+    for merge in ("false", "true"):
+        lineage = spark.read.option("mergeSchema", merge).parquet(os.path.join(base, "lineage"))
+        assert lineage.schema.simpleString() == want
+        got = sorted(tuple(r)[:6] for r in lineage.collect())
+        assert got == [("r1", "s", 0, 4, 4, "computed"), ("r2", "s", 1, 5, 5, "resumed")]
+
+
+def test_write_graph_manifest_equals_written_tables(spark, tmp_path):
+    """Counts and vertex collections come from the written files; they equal
+    direct counts of the tables, a vertex-only collection included (its
+    name needs escaping in a partition directory)."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "g")
+    v = spark.createDataFrame(
+        [("Person", str(i), None) for i in range(7)] + [("Odd class: 50%/x", "c", None)],
+        "collection string, _key string, properties string",
+    ).repartition(3)
+    e = spark.createDataFrame(
+        [("knows", str(i), f"Person/{i}", f"Person/{i + 1}") for i in range(6)],
+        "collection string, _key string, _from string, _to string",
+    ).repartition(2)
+    d = spark.createDataFrame(
+        [("knows", ["Person"], ["Person"])],
+        "edge_collection string, from_cols array<string>, to_cols array<string>",
+    )
+    m = write_graph({"vertices": v, "edges": e, "edge_definitions": d}, base, "r1")
+    vv = spark.read.parquet(os.path.join(base, "vertices"))
+    ee = spark.read.parquet(os.path.join(base, "edges"))
+    assert m["vertices_rows"] == vv.count() == 8
+    assert m["edges_rows"] == ee.count() == 6
+    assert m["vertex_collections"] == sorted(
+        r[0] for r in vv.select("collection").distinct().collect()
+    ) == ["Odd class: 50%/x", "Person"]
+    lineage = spark.read.parquet(os.path.join(base, "lineage"))
+    assert lineage.agg(F.sum("output_rows")).first()[0] == 14

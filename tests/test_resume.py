@@ -250,3 +250,48 @@ def test_failed_table_leaves_stage_uncommitted(spark, tmp_path):
     assert out["b"].count() == 10
     assert _lineage_rows(spark, ckpt, "r2", "computed") == {"multi/a": 2000, "multi/b": 10, "multi/c": 300}
     assert json.loads(open(os.path.join(base, ".outputs.json")).read()) == ["a", "b", "c"]
+
+
+def _job_ids(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` starts, under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
+    """Counting a written checkpoint reads its footers and a lineage append
+    writes one file from the driver: neither starts a Spark job. The
+    counts are per writing task: 10 rows written by 3 tasks are (3, 3, 4)."""
+    from sparkrdf.io import write_lineage
+
+    ckpt = str(tmp_path / "ckpt")
+    path = os.path.join(ckpt, "stages", "ten")
+    spark.range(0, 10, numPartitions=3).write.parquet(path)
+    job = ResumableJob(spark, ckpt, run_id="r1")
+    done = []
+    assert _job_ids(spark, "counts", lambda: done.append(job._counts("ten", path, "computed"))) == []
+    assert done == [("ten", "computed", [(0, 3), (1, 3), (2, 4)])]
+    rows = [("ten", p, c, c, "computed") for p, c in done[0][2]]
+    assert _job_ids(spark, "lineage", lambda: write_lineage(spark, ckpt, "r1", None, rows)) == []
+    lineage = spark.read.parquet(os.path.join(ckpt, "lineage"))
+    assert sorted((r["partition_id"], r["output_rows"]) for r in lineage.collect()) == [
+        (0, 3), (1, 3), (2, 4),
+    ]
+
+
+def test_empty_stage_has_no_partitions_and_no_lineage_row(spark, tmp_path):
+    ckpt = str(tmp_path / "ckpt")
+    for run_id, status in (("r1", "computed"), ("r2", "resumed")):
+        job = ResumableJob(spark, ckpt, run_id=run_id)
+        assert job.stage("empty", lambda: spark.range(0)).count() == 0
+        assert job.metrics() == [
+            {"stage": "empty", "status": status, "rows": 0, "partitions": 0}
+        ]
+    assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == 0

@@ -89,3 +89,33 @@ def test_run_concurrently_orders_results_and_joins_before_raising(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert groups == ["run-concurrently"] * 3
+
+
+def test_get_spark_turns_off_call_site_capture(tmp_path):
+    """A get_spark session has PySpark's per-call call-site capture off, and
+    ``extra_conf`` can turn it back on. In this process ``get_spark`` would
+    return the suite's session and set its confs, so the check builds its
+    own small sessions in a child process."""
+    import json
+    import subprocess
+    import sys
+
+    script = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from sparkrdf.session import get_spark
+key = "spark.python.sql.dataFrameDebugging.enabled"
+got = []
+for extra in ({}, {key: "true"}):
+    spark = get_spark("conf-check", master="local[1]", **extra)
+    got.append(spark.conf.get(key))
+    spark.stop()
+print(json.dumps(got))
+"""
+    env = dict(os.environ, SPARKRDF_DRIVER_MEM="512m", SPARKRDF_NO_SHM="1")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script, root], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    assert json.loads(out.strip().splitlines()[-1]) == ["false", "true"]

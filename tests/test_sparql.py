@@ -600,6 +600,33 @@ def test_select_expression_over_aggregate_alias(stmts):
     assert rows(got) == [("alice", 2, 20.0)]
 
 
+@pytest.mark.parametrize("having, alias_form", [
+    (
+        "SELECT ?s WHERE { ?s <p> ?o } GROUP BY ?s HAVING (COUNT(?o) > 1)",
+        "SELECT ?s (COUNT(?o) AS ?c) WHERE { ?s <p> ?o } GROUP BY ?s "
+        "HAVING (?c > 1)",
+    ),
+    (
+        "SELECT ?s (COUNT(?o) AS ?c) WHERE { ?s <p> ?n . ?s <p> ?o } "
+        "GROUP BY ?s HAVING (SUM(?n) >= 2)",
+        "SELECT ?s (COUNT(?o) AS ?c) (SUM(?n) AS ?t) WHERE { ?s <p> ?n . "
+        "?s <p> ?o } GROUP BY ?s HAVING (?t >= 2)",
+    ),
+], ids=["count", "sum-next-to-select-aggregate"])
+def test_having_aggregate_equals_alias_form(spark, having, alias_form):
+    """An aggregate inside HAVING is computed by the query's one hash
+    aggregate under a hidden alias, filtered on and dropped: the rows equal
+    those of the same condition over a SELECT alias."""
+    three = spark.createDataFrame(
+        [("a", "p", "1"), ("a", "p", "2"), ("b", "p", "1")], "s string, p string, o string"
+    )
+    got = sparql_query(three, having)
+    want = sparql_query(three, alias_form).select(*got.columns)
+    assert sorted(rows(got)) == sorted(rows(want)) and rows(got)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate [s") == 1
+
+
 def test_separator_on_non_group_concat_raises(stmts):
     with pytest.raises(ValueError, match="GROUP_CONCAT only"):
         sparql_query(stmts, """
